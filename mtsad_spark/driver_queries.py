@@ -53,26 +53,29 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _respread(df: DataFrame) -> DataFrame:
+    """Repartition to the session's parallelism when the scan yields fewer
+    splits than cores. A single sub-16m parquet file → a 1-task scan, which
+    serializes every per-row kernel above it through one core; a real 100 TB
+    input has thousands of splits and never pays the shuffle."""
+    want = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < want:
+        df = df.repartition(want)
+    return df
+
+
 def _docs(spark: SparkSession, sf_dir: str, respread: bool = True) -> DataFrame:
-    """documents scan, re-spread when the file layout yields fewer splits
-    than the session's parallelism. The sandbox corpus is ONE sub-16m parquet
-    file → a 1-task scan, which serializes every per-doc string kernel
-    (lowercase, regex split, shingling, hashing) through one core — measured
-    3.2× on the minhash pipeline at sf0.1. The repartition only fires when
-    splits < cores; a real 100 TB corpus has thousands of splits and never
-    pays the shuffle.
+    """documents scan, :func:`_respread`: the sandbox corpus is ONE file, and
+    its 1-task scan serializes every per-doc string kernel (lowercase, regex
+    split, shingling, hashing) — measured 3.2× on the minhash pipeline at
+    sf0.1.
 
     ``respread=False`` for single-pass consumers (exact dedup: one md5 per
     doc then a hash-groupBy that shuffles anyway) — the repartition tripled
     dedup_exact_docs in the r4 driver bench (VERDICT r04 "wrong" #2) while
     buying nothing: the groupBy's own exchange already spreads the hashes."""
     df = _t(spark, sf_dir, "documents")
-    if not respread:
-        return df
-    want = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < want:
-        df = df.repartition(want)
-    return df
+    return _respread(df) if respread else df
 
 
 def _ensure_fixtures() -> None:
@@ -154,17 +157,10 @@ def _hourly_cte() -> str:
 
 
 def _seqfix_df(spark: SparkSession) -> DataFrame:
-    """seqfix scan, re-spread when the single-file fixture yields fewer
-    splits than the session's parallelism (the _docs rule, r7): the fixture
-    is ONE sub-16m parquet file → a 1-task scan, which serializes every
-    token kernel (gram transforms, explodes, hashing over ~6M tokens)
-    through one core. The repartition shuffles ~15 MB once; a real corpus
-    has thousands of splits and never pays it."""
-    df = spark.read.parquet(_ensure_seqfix_path())
-    want = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < want:
-        df = df.repartition(want)
-    return df
+    """seqfix scan, :func:`_respread` (r7): the fixture is ONE file, and its
+    1-task scan serializes every token kernel (gram transforms, explodes,
+    hashing over ~6M tokens); the repartition shuffles ~15 MB once."""
+    return _respread(spark.read.parquet(_ensure_seqfix_path()))
 
 
 def _ensure_seqfix_path() -> str:
@@ -1067,10 +1063,7 @@ def knn_cosine_top3(spark, sf_dir):
         .withColumn("_qn", _norm(F.col("_qv")))
     )
     c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv"))
-    want = spark.sparkContext.defaultParallelism
-    if c.rdd.getNumPartitions() < want:
-        c = c.repartition(want)
-    c = c.withColumn("_cn", _norm(F.col("_cv")))
+    c = _respread(c).withColumn("_cn", _norm(F.col("_cv")))
     s = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -1662,10 +1655,10 @@ def ewma_scores_1h(spark, sf_dir):
     rollup-sized self-join sum DuckDB can evaluate. The recursion and the
     closed-form sum agree to ~1e-11 relative (n·eps accumulation), four
     orders below the 1e-6 rounding grid, so round(6) matches."""
-    from mtsad_spark.operators.scoring import ewma_residual
+    from mtsad_spark.operators.scoring import ewma_residual_chunked
 
     hourly = _hourly_df(spark, sf_dir)
-    out = ewma_residual(hourly, ["event_type"], "bucket_ts", "avg_v", alpha=0.2)
+    out = ewma_residual_chunked(hourly, ["event_type"], "bucket_ts", "avg_v", alpha=0.2)
     return out.select(
         "event_type", "bucket_ts", F.round("ewma_level", 6).alias("ewma_level"),
         F.round("score", 6).alias("score"),
@@ -1971,10 +1964,7 @@ def epsilon_f1_events(spark, sf_dir):
     from mtsad_spark.functions.signal import epsilon_by_f1
     from mtsad_spark.operators.stats import gaussian_density, gaussian_params
 
-    ev = _t(spark, sf_dir, "events").select("event_type", "value")
-    want = spark.sparkContext.defaultParallelism
-    if ev.rdd.getNumPartitions() < want:
-        ev = ev.repartition(want)
+    ev = _respread(_t(spark, sf_dir, "events").select("event_type", "value"))
     params = gaussian_params(ev, ["value"], keys=["event_type"])
     dens = gaussian_density(ev, params, ["value"], keys=["event_type"]).withColumn(
         "density", F.round("density", 6)
@@ -2758,7 +2748,7 @@ def ensemble_stacking_1h(spark, sf_dir):
     Floats rounded to 6 on both sides; the zscore/EWMA formulas are the same
     oracled forms as zscore_roll24_1h / ewma_scores_1h."""
     from mtsad_spark.operators.ensemble import stack_meta_features
-    from mtsad_spark.operators.scoring import ewma_residual, sliding_zscore
+    from mtsad_spark.operators.scoring import ewma_residual_chunked, sliding_zscore
     from mtsad_spark.operators.splits import fraction_split
 
     hourly = _hourly_df(spark, sf_dir)
@@ -2766,7 +2756,7 @@ def ensemble_stacking_1h(spark, sf_dir):
         "event_type", "bucket_ts", "avg_v",
         F.round(F.coalesce("score", F.lit(0.0)), 6).alias("z_score"),
     )
-    e = ewma_residual(hourly, ["event_type"], "bucket_ts", "avg_v", alpha=0.2).select(
+    e = ewma_residual_chunked(hourly, ["event_type"], "bucket_ts", "avg_v", alpha=0.2).select(
         "event_type", "bucket_ts", F.round("score", 6).alias("ewma_score")
     )
     p90 = hourly.groupBy("event_type").agg(F.percentile("avg_v", F.lit(0.9)).alias("p90"))
@@ -3394,10 +3384,8 @@ def seeded_shuffle_events(spark, sf_dir):
 )
 def rolling_minmax_channel_1h(spark, sf_dir):
     """Trailing 24h rolling min/max envelope + channel position (stats.
-    sliding_extrema; the O(n) van Herk chunked form is golden-tested equal —
-    min/max are non-invertible, so the JVM frame pays O(w)/row and the
-    chunked kernel is the large-w scale path, PAPERS.md ICDE'25 line).
-    channel_pos is the only float-derived column → rounded both sides."""
+    sliding_extrema, the JVM window frame). channel_pos is the only
+    float-derived column → rounded both sides."""
     from mtsad_spark.operators.stats import sliding_extrema
 
     hourly = _hourly_df(spark, sf_dir)

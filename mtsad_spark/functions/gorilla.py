@@ -21,10 +21,11 @@ The codec is pure Python-int bit packing inside Arrow-batched pandas UDFs —
 it runs on executors per (source, tier, chunk) group, never on the driver.
 NaNs round-trip bit-exactly (we operate on raw float64 bit patterns).
 
-Engine integration: :func:`pack_rollup` turns a finalized rollup tier into
-one packed binary block per (keys..., chunk); :func:`unpack_expr` restores
-(ts, value) arrays for querying — used by the exactness tests to prove
-compress∘decompress = identity on every tier.
+Engine integration: :func:`pack_partials` packs a tier into one row per
+(keys..., chunk) with one block per column and :func:`unpack_partials`
+explodes the blocks back to points; :func:`pack_rollup` /
+:func:`unpack_rollup` are their one-column case — used by the exactness tests
+to prove compress∘decompress = identity on every tier.
 """
 
 from __future__ import annotations
@@ -254,19 +255,16 @@ def gorilla_unpack_i64(blob: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"ts": ts_out, "vals": val_out})
 
 
-def pack_rollup(
-    tier_df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    chunk: str = "day",
-) -> DataFrame:
-    """One packed binary block per (keys..., chunk_start).
+def _pack(tier_df: DataFrame, keys: list[str], blocks: dict, chunk: str) -> DataFrame:
+    """One row per (keys..., chunk_start) with one Gorilla block per entry of
+    ``blocks`` = {output column: (struct field, value column, packer)}.
 
     Points are gathered time-ordered via ``sort_array(collect_list(struct))``
     — order comes from the struct's leading ts field, so the pack is
-    deterministic regardless of shuffle arrival order. Block size stays
-    bounded by the chunk width (an executor never materializes a whole key).
-    """
+    deterministic regardless of shuffle arrival order, and every block is
+    packed from the SAME sorted list, so all blocks of a row share one ts
+    sequence. Block size stays bounded by the chunk width (an executor never
+    materializes a whole key)."""
     g = tier_df.groupBy(
         *keys, F.date_trunc(chunk, F.col("bucket_ts")).alias("chunk_start")
     ).agg(
@@ -274,7 +272,7 @@ def pack_rollup(
             F.collect_list(
                 F.struct(
                     F.col("bucket_ts").cast("long").alias("ts"),
-                    F.col(value_col).cast("double").alias("v"),
+                    *[v.alias(f) for f, v, _ in blocks.values()],
                 )
             )
         ).alias("_pts")
@@ -283,8 +281,23 @@ def pack_rollup(
         *keys,
         "chunk_start",
         F.size("_pts").alias("n_points"),
-        gorilla_pack(F.col("_pts.ts"), F.col("_pts.v")).alias("block"),
+        *[
+            packer(F.col("_pts.ts"), F.col(f"_pts.{f}")).alias(out)
+            for out, (f, _, packer) in blocks.items()
+        ],
     )
+
+
+def pack_rollup(
+    tier_df: DataFrame,
+    keys: list[str],
+    value_col: str,
+    chunk: str = "day",
+) -> DataFrame:
+    """One packed float64 ``block`` per (keys..., chunk_start): the
+    one-column case of :func:`pack_partials`."""
+    blocks = {"block": ("v", F.col(value_col).cast("double"), gorilla_pack)}
+    return _pack(tier_df, keys, blocks, chunk)
 
 
 def pack_partials(
@@ -295,36 +308,17 @@ def pack_partials(
     chunk: str = "day",
 ) -> DataFrame:
     """Pack a MULTI-column partial-state tier into one row per
-    (keys..., chunk_start) with one Gorilla block PER COLUMN — the
-    north_star's "rollup points stored as packed binary columns" as a
-    columnar layout: a reader that needs only cnt/s1 decodes only those
-    blocks. One shuffle (the groupBy); every column's stream is packed from
-    the SAME time-sorted struct list, so all blocks share an identical ts
-    sequence. Columns in ``long_cols`` are packed bit-reinterpreted
-    (lossless for any int64); the rest as float64."""
-    g = tier_df.groupBy(
-        *keys, F.date_trunc(chunk, F.col("bucket_ts")).alias("chunk_start")
-    ).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("bucket_ts").cast("long").alias("ts"),
-                    *[F.col(c).alias(c) for c in cols],
-                )
-            )
-        ).alias("_pts")
-    )
-    return g.select(
-        *keys,
-        "chunk_start",
-        F.size("_pts").alias("n_points"),
-        *[
-            (gorilla_pack_i64 if c in long_cols else gorilla_pack)(
-                F.col("_pts.ts"), F.col(f"_pts.{c}")
-            ).alias(f"block_{c}")
-            for c in cols
-        ],
-    )
+    (keys..., chunk_start) with one Gorilla block ``block_<col>`` PER
+    COLUMN — the north_star's "rollup points stored as packed binary
+    columns" as a columnar layout: a reader that needs only cnt/s1 decodes
+    only those blocks. One shuffle (the groupBy). Columns in ``long_cols``
+    are packed bit-reinterpreted (lossless for any int64); the rest as
+    float64."""
+    blocks = {
+        f"block_{c}": (c, F.col(c), gorilla_pack_i64 if c in long_cols else gorilla_pack)
+        for c in cols
+    }
+    return _pack(tier_df, keys, blocks, chunk)
 
 
 def unpack_partials(
@@ -360,11 +354,5 @@ def unpack_partials(
 
 
 def unpack_rollup(packed: DataFrame, keys: list[str]) -> DataFrame:
-    """Explode packed blocks back to (keys..., bucket_ts, value) points."""
-    u = packed.select(*keys, gorilla_unpack(F.col("block")).alias("_u"))
-    z = u.select(*keys, F.explode(F.arrays_zip(F.col("_u.ts").alias("ts"), F.col("_u.vals").alias("v"))).alias("_p"))
-    return z.select(
-        *keys,
-        F.timestamp_seconds(F.col("_p.ts")).alias("bucket_ts"),
-        F.col("_p.v").alias("value"),
-    )
+    """Inverse of :func:`pack_rollup` → (keys..., bucket_ts, value) points."""
+    return unpack_partials(packed.withColumnRenamed("block", "block_value"), keys, ["value"], set())

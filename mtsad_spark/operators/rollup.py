@@ -11,6 +11,10 @@ Design for exactness AND scale:
 * Higher tiers (1h, 1d) are re-aggregations of the 1m partials
   (:func:`reaggregate`) — the classic partial/final split, so a 100 TB scan
   happens once and each coarser tier touches only rollup-sized data.
+* The state algebra is written once: :func:`partial_aggs` (raw rows →
+  state), :func:`merge_aggs` (states → state) and :func:`mean_std` (state →
+  mean/std). Every tier, the streaming 1m tier, the continuous-aggregate
+  refresh and the stitched range query are built from these three.
 * Skew: Spark's HashAggregate already does map-side partial aggregation for
   these algebraic functions, which defuses hot-key skew for ``groupBy`` — a
   hot ``source`` is pre-combined per task before the shuffle, so the shuffle
@@ -44,6 +48,37 @@ def bucket_expr(ts_col: str, tier: str) -> F.Column:
     return F.date_trunc(unit, F.col(ts_col))
 
 
+def partial_aggs(val_col: str, exact_int: bool = True) -> list[F.Column]:
+    """Raw rows → the partial state ``(cnt, s1, s2, vmin, vmax)``."""
+    v = F.col(val_col).cast("long") if exact_int else F.col(val_col).cast("double")
+    return [
+        F.count(val_col).alias("cnt"),
+        F.sum(v).alias("s1"),
+        F.sum(v * v).alias("s2"),
+        F.min(v).alias("vmin"),
+        F.max(v).alias("vmax"),
+    ]
+
+
+def merge_aggs() -> list[F.Column]:
+    """Partial states → one merged partial state (sums add, extrema combine)."""
+    return [
+        F.sum("cnt").alias("cnt"),
+        F.sum("s1").alias("s1"),
+        F.sum("s2").alias("s2"),
+        F.min("vmin").alias("vmin"),
+        F.max("vmax").alias("vmax"),
+    ]
+
+
+def mean_std() -> tuple[F.Column, F.Column]:
+    """Population mean and std (ddof=0) of a partial state, as
+    sqrt(E[x²] − E[x]²) on the exact sums, clamped at 0."""
+    mean = F.col("s1").cast("double") / F.col("cnt")
+    var = F.col("s2").cast("double") / F.col("cnt") - mean * mean
+    return mean, F.sqrt(F.greatest(var, F.lit(0.0)))
+
+
 def rollup_partials(
     df: DataFrame,
     ts_col: str,
@@ -59,16 +94,9 @@ def rollup_partials(
     measures (float sums are then order-dependent in the last ulp; callers
     that need cross-run stability should round at the edge).
     """
-    v = F.col(val_col).cast("long") if exact_int else F.col(val_col).cast("double")
     return df.groupBy(
         *keys, bucket_expr(ts_col, tier).alias("bucket_ts")
-    ).agg(
-        F.count(val_col).alias("cnt"),
-        F.sum(v).alias("s1"),
-        F.sum(v * v).alias("s2"),
-        F.min(v).alias("vmin"),
-        F.max(v).alias("vmax"),
-    )
+    ).agg(*partial_aggs(val_col, exact_int))
 
 
 def reaggregate(partials: DataFrame, keys: list[str], tier: str) -> DataFrame:
@@ -79,26 +107,19 @@ def reaggregate(partials: DataFrame, keys: list[str], tier: str) -> DataFrame:
     """
     return partials.groupBy(
         *keys, bucket_expr("bucket_ts", tier).alias("bucket_ts")
-    ).agg(
-        F.sum("cnt").alias("cnt"),
-        F.sum("s1").alias("s1"),
-        F.sum("s2").alias("s2"),
-        F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"),
-    )
+    ).agg(*merge_aggs())
 
 
 def finalize(partials: DataFrame, keys: list[str], tier: str) -> DataFrame:
     """Derive the user-facing rollup point from exact partials.
 
-    std is POPULATION std (ddof=0) via sqrt(E[x²] − E[x]²) on exact integer
+    std is POPULATION std (ddof=0) via :func:`mean_std` on exact integer
     sums — deterministic because every operand is exact and the expression is
     evaluated once per output row. Matches numpy ``ndarray.std()`` semantics
     (reference prediction/lstm_model.py:129-140) up to the formula's own
     float evaluation, which the pandas oracle replicates identically.
     """
-    mean = F.col("s1").cast("double") / F.col("cnt")
-    var = F.col("s2").cast("double") / F.col("cnt") - mean * mean
+    mean, std = mean_std()
     return partials.select(
         *keys,
         F.lit(tier).alias("tier"),
@@ -106,53 +127,9 @@ def finalize(partials: DataFrame, keys: list[str], tier: str) -> DataFrame:
         F.col("cnt"),
         F.col("s1").alias("sum_v"),
         mean.alias("mean"),
-        F.sqrt(F.greatest(var, F.lit(0.0))).alias("std"),
+        std.alias("std"),
         F.col("vmin"),
         F.col("vmax"),
-    )
-
-
-def salted_rollup_partials(
-    df: DataFrame,
-    ts_col: str,
-    val_col: str,
-    keys: list[str],
-    salt_col: str,
-    tier: str = "1m",
-    n_salt: int = 16,
-    exact_int: bool = True,
-) -> DataFrame:
-    """Explicit two-stage salted aggregation (north rule skew clause).
-
-    Stage 1 groups by (keys, bucket, salt = hash(salt_col) % n_salt) — a hot
-    (key, bucket) cell is split across n_salt reducers; stage 2 merges the
-    salt partials. For Spark's OWN algebraic aggregates this is usually
-    redundant (HashAggregate partial-combines map-side), so the plain
-    :func:`rollup_partials` is the default; this form exists for extreme
-    per-cell skew where a single final-agg reducer would still see one
-    monster cell's partials from thousands of map tasks, and as the pattern
-    the applyInPandas kernels use (scoring._slice_with_halo). Exactness is
-    preserved: LONG sums are associative, so salting cannot change results
-    (asserted in tests).
-    """
-    v = F.col(val_col).cast("long" if exact_int else "double")
-    stage1 = df.groupBy(
-        *keys,
-        bucket_expr(ts_col, tier).alias("bucket_ts"),
-        F.pmod(F.xxhash64(F.col(salt_col)), F.lit(n_salt)).alias("_salt"),
-    ).agg(
-        F.count(val_col).alias("cnt"),
-        F.sum(v).alias("s1"),
-        F.sum(v * v).alias("s2"),
-        F.min(v).alias("vmin"),
-        F.max(v).alias("vmax"),
-    )
-    return stage1.groupBy(*keys, "bucket_ts").agg(
-        F.sum("cnt").alias("cnt"),
-        F.sum("s1").alias("s1"),
-        F.sum("s2").alias("s2"),
-        F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"),
     )
 
 
@@ -436,21 +413,14 @@ def stitched_range_aggregate(
     u = pieces[0]
     for p in pieces[1:]:
         u = u.unionByName(p)
-    merged = u.groupBy(*keys).agg(
-        F.sum("cnt").alias("cnt"),
-        F.sum("s1").alias("s1"),
-        F.sum("s2").alias("s2"),
-        F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"),
-    )
-    mean = F.col("s1").cast("double") / F.col("cnt")
-    var = F.col("s2").cast("double") / F.col("cnt") - mean * mean
+    merged = u.groupBy(*keys).agg(*merge_aggs())
+    mean, std = mean_std()
     return merged.select(
         *keys,
         "cnt",
         F.col("s1").alias("sum_v"),
         mean.alias("mean"),
-        F.sqrt(F.greatest(var, F.lit(0.0))).alias("std"),
+        std.alias("std"),
         "vmin",
         "vmax",
     )

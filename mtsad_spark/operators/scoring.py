@@ -1,7 +1,7 @@
 """Anomaly scoring path (SURVEY.md W9/W10, A6, A8; north_star scoring).
 
 Replaces the reference's per-row Keras loop with two closed-form residual
-scorers, each in two physical forms:
+scorers, one physical form each:
 
 1. ``sliding_zscore`` — JVM window-frame form (rolling mean/std over
    ``rowsBetween(-(w-1), 0)``); whole-stage-codegen'd, no Python. Semantics of
@@ -9,23 +9,13 @@ scorers, each in two physical forms:
    mean, sigma-rule threshold); rolling std is SAMPLE std (ddof=1) to match
    pandas ``rolling(w).std()`` (moving_average.py:83-86), while the stationary
    variant uses POPULATION std (numpy ``std()``, moving_average.py:58).
-2. ``sliding_zscore_pandas`` — the scale form: ``applyInPandas`` over
-   (key, salt-slice) groups with an exact ``w-1``-row halo, so no single
-   Python worker ever holds a whole hot key. The halo makes the window
-   CONTENTS identical to form 1 across slice boundaries; the float score may
-   differ from form 1 in the last ulps (Spark's frame aggregation and pandas'
-   rolling kernel order float additions differently — observed max relative
-   difference ~2e-12). Each form is individually deterministic across
-   parallelism levels. Tests assert rtol=1e-9 score agreement + identical
-   window contents.
-
-3. ``ewma_residual`` — one-step-ahead EWMA forecast residual
+2. ``ewma_residual_chunked`` — one-step-ahead EWMA forecast residual
    (``adjust=False`` recursion, the classic s_t = α·x_t + (1-α)·s_{t-1}).
-   Recursive ⇒ inherently ordered; computed per key in one vectorized pandas
-   group. For keys too hot for one worker, ``ewma_residual_chunked`` slices
-   time with a warm-up halo sized so the truncated tail of the recursion is
-   below double precision ((1-α)^H < 2^-60) — documented as
-   exact-to-the-last-ulp rather than algebraically exact.
+   Recursive ⇒ inherently ordered; computed by a vectorized pandas kernel
+   over (key, time-slice) groups, each warmed up by a halo sized so the
+   truncated tail of the recursion is below double precision
+   ((1-α)^H < 2^-64) — exact-to-the-last-ulp rather than algebraically
+   exact, and no single Python worker ever holds a whole hot key.
 
 Thresholding: EXACT ``percentile`` (linear interpolation — same rule as
 ``np.percentile``, reference prediction/lstm_mts.py:344-355); never
@@ -41,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mtsad_spark.operators.stats import fit_join
-from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..functions.metrics import prf  # noqa: F401  (re-exported convenience)
 
@@ -157,85 +147,6 @@ def _slice_with_halo(
     )
 
 
-def sliding_zscore_pandas(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str,
-    val_col: str,
-    w: int,
-    k: float = 3.0,
-    rows_per_slice: int = 100_000,
-    min_periods: int | None = None,
-) -> DataFrame:
-    """Scale form of :func:`sliding_zscore`: applyInPandas over
-    (key, time-slice) with an exact (w-1)-row halo. Identical output.
-    """
-    mp = w if min_periods is None else min_periods
-    halo = w - 1
-    sliced = _slice_with_halo(df, keys, order_col, rows_per_slice, halo)
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("roll_mean", DoubleType()),
-            StructField("roll_std", DoubleType()),
-            StructField("score", DoubleType()),
-            StructField("label", IntegerType()),
-        ]
-    )
-    data_cols = [f.name for f in df.schema.fields]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_rn", kind="mergesort")
-        r = pdf[val_col].rolling(w, min_periods=mp)
-        mu, sd = r.mean(), r.std(ddof=1)
-        score = (pdf[val_col] - mu).abs() / sd
-        score = score.where(sd > 0)
-        out = pdf.assign(
-            roll_mean=mu,
-            roll_std=sd,
-            score=score,
-            label=(score > k).map({True: 1, False: -1}).fillna(-1).astype("int32"),
-        )
-        out = out[~out["_halo"]]
-        return out[data_cols + ["roll_mean", "roll_std", "score", "label"]]
-
-    return (
-        sliced.groupBy(*keys, "_slice")
-        .applyInPandas(kernel, schema=out_schema)
-    )
-
-
-def ewma_residual(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str,
-    val_col: str,
-    alpha: float = 0.1,
-) -> DataFrame:
-    """One-step-ahead EWMA forecast residual per key (W10).
-
-    level_t = α·x_t + (1-α)·level_{t-1}; resid_t = x_t − level_{t-1}
-    (level_{-1} := x_0 ⇒ resid_0 = 0). score = |resid|. One vectorized pandas
-    group per key — exact; use :func:`ewma_residual_chunked` for hot keys.
-    """
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField("ewma_level", DoubleType()), StructField("resid", DoubleType()), StructField("score", DoubleType())]
-    )
-    cols = [f.name for f in df.schema.fields]
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
-        level = pdf[val_col].ewm(alpha=alpha, adjust=False).mean()
-        prior = level.shift(1)
-        resid = (pdf[val_col] - prior).fillna(0.0)
-        return pdf.assign(ewma_level=level, resid=resid, score=resid.abs())[
-            cols + ["ewma_level", "resid", "score"]
-        ]
-
-    return df.groupBy(*keys).applyInPandas(kernel, schema=out_schema)
-
-
 def ewma_halo_rows(alpha: float, ulp_pow: int = 64) -> int:
     """Warm-up halo length H with (1-alpha)^H < 2^-ulp_pow."""
     return max(1, math.ceil(-ulp_pow * math.log(2) / math.log1p(-alpha)))
@@ -249,10 +160,14 @@ def ewma_residual_chunked(
     alpha: float = 0.1,
     rows_per_slice: int = 200_000,
 ) -> DataFrame:
-    """Chunked EWMA for hot keys: slices with a decay-sized warm-up halo.
+    """One-step-ahead EWMA forecast residual per key (W10), in time slices
+    of ``rows_per_slice`` rows with a decay-sized warm-up halo.
 
-    Exact to double precision (truncated recursion tail < 2^-64 of the
-    level's magnitude); head rows of each slice are recomputed from the halo.
+    level_t = α·x_t + (1-α)·level_{t-1}; resid_t = x_t − level_{t-1}
+    (level_{-1} := x_0 ⇒ resid_0 = 0); score = |resid|. A NaN residual — the
+    series' first row, or a NaN input — is 0. Exact to double precision
+    (truncated recursion tail < 2^-64 of the level's magnitude); head rows of
+    each slice are recomputed from the halo.
     """
     halo = ewma_halo_rows(alpha)
     sliced = _slice_with_halo(df, keys, order_col, rows_per_slice, halo)
@@ -266,10 +181,9 @@ def ewma_residual_chunked(
         pdf = pdf.sort_values("_rn", kind="mergesort")
         level = pdf[val_col].ewm(alpha=alpha, adjust=False).mean()
         prior = level.shift(1)
-        resid = pdf[val_col] - prior
-        # resid_0 of the WHOLE series is 0; slice 0's first row is genuine.
-        first_global = pdf["_rn"].iloc[0] == 0 if len(pdf) else False
-        resid = resid.fillna(0.0) if first_global else resid
+        # no prior (the series' first row, a later slice's first row — a
+        # halo row, dropped below) or a NaN input: residual 0
+        resid = (pdf[val_col] - prior).fillna(0.0)
         out = pdf.assign(ewma_level=level, resid=resid, score=resid.abs())
         out = out[~out["_halo"]]
         return out[cols + ["ewma_level", "resid", "score"]]

@@ -227,68 +227,11 @@ def sliding_extrema(
 
     JVM window-frame form: correct at any w, but min/max are NON-invertible
     aggregates, so the frame recomputes O(w) work per row — fine for
-    rollup-sized frames and small w; use :func:`sliding_extrema_chunked`
-    when w·rows gets large."""
+    rollup-sized frames and small w."""
     win = Window.partitionBy(*keys).orderBy(order_col).rowsBetween(-(w - 1), 0)
     return df.withColumn(min_col, F.min(val_col).over(win)).withColumn(
         max_col, F.max(val_col).over(win)
     )
-
-
-def sliding_extrema_chunked(
-    df: DataFrame, keys: list[str], order_col: str, val_col: str, w: int,
-    rows_per_slice: int = 100_000,
-    min_col: str = "roll_min", max_col: str = "roll_max",
-) -> DataFrame:
-    """Scale form of :func:`sliding_extrema`: O(n) total work independent of
-    w, via the van Herk/Gil-Werman block decomposition inside an
-    applyInPandas kernel over (key, time-slice) groups with an exact
-    (w-1)-row halo (the sliding_zscore_pandas slicing machinery).
-
-    Per block of w rows, a forward running extreme and a backward running
-    extreme are each one numpy accumulate pass; window [i-w+1, i] always
-    splits across one block boundary, so its extreme is
-    combine(suffix[i-w+1], prefix[i]) — three vectorized passes total,
-    amortized O(1) per row where the window frame pays O(w)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from .scoring import _slice_with_halo
-
-    sliced = _slice_with_halo(df, keys, order_col, rows_per_slice, halo=w - 1)
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [StructField(min_col, DoubleType()), StructField(max_col, DoubleType())]
-    )
-    data_cols = [f.name for f in df.schema.fields]
-
-    def _roll(v: np.ndarray, ufunc) -> np.ndarray:
-        n = len(v)
-        if n == 0 or w <= 1:
-            return v.copy()
-        pad = (-n) % w
-        x = np.concatenate([v, np.full(pad, np.nan)]) if pad else v
-        blocks = x.reshape(-1, w)
-        pre = ufunc.accumulate(blocks, axis=1).ravel()[:n]
-        suf = ufunc.accumulate(blocks[:, ::-1], axis=1)[:, ::-1].ravel()
-        out = pre.copy()
-        idx = np.arange(n)
-        start = idx - w + 1
-        m = start > 0  # windows that straddle a block boundary
-        out[m] = ufunc(suf[start[m]], pre[idx[m]])
-        # head windows (start <= 0) are fully covered by pre of block 0
-        return out
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
-        v = pdf[val_col].to_numpy(dtype=np.float64)
-        lo = _roll(v, np.fmin)
-        hi = _roll(v, np.fmax)
-        out = pdf.assign(**{min_col: lo, max_col: hi})
-        return out[~out["_halo"]][data_cols + [min_col, max_col]]
-
-    return sliced.groupBy(*keys, "_slice").applyInPandas(kernel, schema=out_schema)
 
 
 def seasonal_profile_residual(

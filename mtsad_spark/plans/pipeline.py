@@ -9,8 +9,12 @@ SKIPPED on re-run — resumability per the north rule):
          ├─ partials_1h  (re-aggregate 1m partials)   ─ rollup_1h
          │    └─ partials_1d (re-aggregate 1h)        ─ rollup_1d
          ├─ gapfill_1m   (LOCF on mean)
-         ├─ packed_1m    (Gorilla blocks per source/day)
-         └─ scores_1m    (sliding z-score + EWMA residual on bucket means)
+         │    └─ scores_1m (sliding z-score of the filled means, inner-joined
+         │                  with the EWMA residual of the unfilled means)
+         └─ packed_1m    (Gorilla blocks per source/day)
+
+The downstream of the tiers is :func:`flagship_outputs`, the one definition
+of the flagship dataflow that the pipeline and ``bench_job`` share.
 
 Checkpoint marker = parquet ``_SUCCESS`` (Iceberg snapshot when a catalog is
 configured — sources/tables.py seam). Lineage: every stage appends
@@ -34,6 +38,30 @@ from ..operators.gapfill import gap_fill
 from ..operators.rollup import TIER_ORDER, finalize, reaggregate, rollup_partials
 from ..operators.scoring import ewma_residual_chunked, sliding_zscore
 from ..sources.tables import TableProvider
+
+
+def flagship_outputs(
+    finalized: dict[str, DataFrame],
+    filled: DataFrame,
+    keys: list[str],
+    w: int = 30,
+    k: float = 3.0,
+    alpha: float = 0.2,
+) -> dict[str, DataFrame]:
+    """The flagship dataflow downstream of the rollup tiers: sliding z-score
+    (w, k) of the LOCF-filled 1m means ``filled``, EWMA residual (α) and
+    Gorilla day blocks of the unfilled 1m means, and the 1h and 1d tiers.
+    ``finalized`` is :func:`rollup_tiers`' first result."""
+    m1 = finalized["1m"]
+    return {
+        "zscore": sliding_zscore(filled, keys, "bucket_ts", "mean", w=w, k=k),
+        "ewma": ewma_residual_chunked(
+            m1.select(*keys, "bucket_ts", "mean"), keys, "bucket_ts", "mean", alpha=alpha
+        ),
+        "gorilla": pack_rollup(m1, keys, "mean", chunk="day"),
+        "rollup_1h": finalized["1h"],
+        "rollup_1d": finalized["1d"],
+    }
 
 
 class RollupPipeline:
@@ -162,14 +190,20 @@ class RollupPipeline:
             partition_by=keys,
             resume=resume,
         )
+        flagship = flagship_outputs(
+            {t: out[f"rollup_{t}"] for t in TIER_ORDER},
+            out["gapfill_1m"],
+            keys,
+            self.zscore_w,
+            self.zscore_k,
+            self.ewma_alpha,
+        )
         out["packed_1m"] = self._stage(
-            "packed_1m",
-            lambda: pack_rollup(out["rollup_1m"], keys, "mean", chunk="day"),
-            resume=resume,
+            "packed_1m", lambda: flagship["gorilla"], resume=resume
         )
         out["scores_1m"] = self._stage(
             "scores_1m",
-            lambda: self._score(out["rollup_1m"]),
+            lambda: self._score(flagship),
             partition_by=keys,
             resume=resume,
         )
@@ -185,16 +219,12 @@ class RollupPipeline:
         out["lineage"] = self.tables.read(f"lineage/{self.run_id}")
         return out
 
-    def _score(self, rollup_1m: DataFrame) -> DataFrame:
-        z = sliding_zscore(
-            rollup_1m, self.keys, "bucket_ts", "mean", w=self.zscore_w, k=self.zscore_k
-        ).select(*self.keys, "bucket_ts", "mean", F.col("score").alias("z_score"), F.col("label").alias("z_label"))
-        e = ewma_residual_chunked(
-            rollup_1m.select(*self.keys, "bucket_ts", "mean"),
-            self.keys,
-            "bucket_ts",
-            "mean",
-            alpha=self.ewma_alpha,
-        ).select(*self.keys, "bucket_ts", F.col("score").alias("ewma_score"))
-        # same-key equi-join of two rollup-sized frames (J1 attach semantics)
+    def _score(self, flagship: dict[str, DataFrame]) -> DataFrame:
+        z = flagship["zscore"].select(
+            *self.keys, "bucket_ts", "mean",
+            F.col("score").alias("z_score"), F.col("label").alias("z_label"),
+        )
+        e = flagship["ewma"].select(*self.keys, "bucket_ts", F.col("score").alias("ewma_score"))
+        # same-key equi-join of two rollup-sized frames (J1 attach semantics);
+        # inner, so the filled minutes, which have no EWMA score, drop out
         return z.join(e, [*self.keys, "bucket_ts"], "inner")

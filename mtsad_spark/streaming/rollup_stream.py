@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from mtsad_spark.operators.rollup import PARTIAL_COLS, partial_aggs
+
 
 def streaming_rollup_1m(
     stream: DataFrame,
@@ -28,18 +30,11 @@ def streaming_rollup_1m(
     watermark: str = "2 minutes",
 ) -> DataFrame:
     """readStream frame → watermarked 1m windowed partial states."""
-    v = F.col(val_col).cast("long")
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(*keys, F.window(ts_col, "1 minute").alias("win"))
-        .agg(
-            F.count(val_col).alias("cnt"),
-            F.sum(v).alias("s1"),
-            F.sum(v * v).alias("s2"),
-            F.min(v).alias("vmin"),
-            F.max(v).alias("vmax"),
-        )
-        .select(*keys, F.col("win.start").alias("bucket_ts"), "cnt", "s1", "s2", "vmin", "vmax")
+        .agg(*partial_aggs(val_col))
+        .select(*keys, F.col("win.start").alias("bucket_ts"), *PARTIAL_COLS)
     )
 
 

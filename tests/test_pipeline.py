@@ -243,3 +243,47 @@ def test_retention_decodes_escaped_hour_partitions(spark, tmp_path):
     assert all(":" in v and "%3A" not in v for v in res["dropped"] + res["kept"])
     after = tp.read("rollup_1h")
     assert after.count() == 48
+
+
+def test_flagship_outputs_match_reference(spark, tmp_path):
+    """The flagship builder's outputs against the benchmark's pandas/NumPy
+    references, with the benchmark's tolerances: exact tiers, z-score of the
+    LOCF-filled series and EWMA of the unfilled one within the score rtol,
+    and Gorilla day blocks decoded by the independent decoder."""
+    from perfbench import reference as ref
+    from perfbench.workloads import SeqPipeline, _epoch_cols, compare
+
+    from mtsad_spark.fixtures import sequences
+    from mtsad_spark.operators.gapfill import gap_fill
+    from mtsad_spark.operators.rollup import rollup_tiers
+    from mtsad_spark.plans.pipeline import flagship_outputs
+
+    path = str(tmp_path / "seq")
+    sequences(spark, 4_000, 3_000, with_tokens=False).write.parquet(path)
+    finalized, _ = rollup_tiers(spark.read.parquet(path), "ingest_ts", "n_tok", ["source"])
+    filled = gap_fill(finalized["1m"], ["source"], "1m", ["mean"], method="locf")
+    outs = flagship_outputs(finalized, filled, ["source"], w=30, k=3.0, alpha=0.2)
+
+    def got(name, *cols):
+        return _epoch_cols(outs[name], "bucket_ts").select("source", "bucket_ts", *cols).toPandas()
+
+    keys = ["source", "bucket_ts"]
+    m1 = ref.tier_partials(ref.read_raw(path), "1m")
+    tier_cols = ("cnt", "sum_v", "vmin", "vmax", "mean", "std")
+    errs = []
+    for t in ("1h", "1d"):
+        exp = ref.coarsen(m1, t).rename(columns={"s1": "sum_v"})
+        errs += compare(f"rollup_{t}", got(f"rollup_{t}", *tier_cols), exp, keys, exact=tier_cols)
+    z = got("zscore", "cnt", "gap_filled", "mean", "roll_mean", "roll_std", "score", "label")
+    zr = ref.rolling_zscore(ref.locf_fill(m1), 30, 3.0)
+    assert z["gap_filled"].any()  # the fixture has gaps, so the fill is exercised
+    errs += compare(
+        "zscore", z, zr, keys, exact=("cnt", "gap_filled", "mean", "label"),
+        close=("roll_mean", "roll_std", "score"),
+    )
+    e = got("ewma", "mean", "ewma_level", "resid")
+    errs += compare(
+        "ewma", e, ref.ewma_residual(m1, 0.2), keys, exact=("mean",), close=("ewma_level", "resid")
+    )
+    errs += SeqPipeline._check_gorilla(outs["gorilla"], m1)
+    assert not errs, errs

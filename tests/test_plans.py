@@ -81,12 +81,12 @@ def test_jvm_path_operators_have_no_python_nodes(spark, events):
 
 
 def test_pandas_kernels_are_arrow_grouped_map(spark, events):
-    from mtsad_spark.operators.scoring import ewma_residual
+    from mtsad_spark.operators.scoring import ewma_residual_chunked
 
     hourly = events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("bucket_ts")
     ).agg(F.avg("value").alias("v"))
-    p = plan_of(ewma_residual(hourly, ["event_type"], "bucket_ts", "v"))
+    p = plan_of(ewma_residual_chunked(hourly, ["event_type"], "bucket_ts", "v"))
     # grouped-map Arrow transport — NOT row-at-a-time BatchEvalPython
     assert "FlatMapGroupsInPandas" in p
     assert "BatchEvalPython" not in p
@@ -114,14 +114,14 @@ def test_halo_slicer_has_no_per_key_window_over_raw_rows(spark, events):
     task. Every raw-row window must be partitioned by (key, coarse bucket);
     a keys-only window is allowed ONLY directly above an Aggregate (the
     per-bucket count frame)."""
-    from mtsad_spark.operators.scoring import ewma_residual_chunked, sliding_zscore_pandas
+    from mtsad_spark.operators.scoring import ewma_residual_chunked
 
     hourly = events.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("bucket_ts")
     ).agg(F.avg("value").alias("v"))
     for q in (
-        sliding_zscore_pandas(hourly, ["event_type"], "bucket_ts", "v", w=24, rows_per_slice=100),
         ewma_residual_chunked(hourly, ["event_type"], "bucket_ts", "v", alpha=0.2, rows_per_slice=100),
+        ewma_residual_chunked(hourly, ["event_type"], "bucket_ts", "v", alpha=0.9, rows_per_slice=1),
     ):
         tree = q._jdf.queryExecution().optimizedPlan().toString()
         lines = tree.splitlines()

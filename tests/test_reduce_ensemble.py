@@ -126,26 +126,6 @@ def test_majority_vote_and_stack(spark):
     assert list(meta.columns) == ["id", "mf_s1"]
 
 
-def test_salted_rollup_equals_plain(spark, seq_df):
-    from mtsad_spark.operators.rollup import rollup_partials, salted_rollup_partials
-
-    plain = (
-        rollup_partials(seq_df, "ingest_ts", "n_tok", ["source"], "1m")
-        .toPandas()
-        .sort_values(["source", "bucket_ts"])
-        .reset_index(drop=True)
-    )
-    salted = (
-        salted_rollup_partials(seq_df, "ingest_ts", "n_tok", ["source"], "doc_id", "1m", n_salt=7)
-        .toPandas()
-        .sort_values(["source", "bucket_ts"])
-        .reset_index(drop=True)
-    )
-    assert len(plain) == len(salted)
-    for c in plain.columns:
-        assert (plain[c].values == salted[c].values).all(), c
-
-
 def test_stacking_ensemble_learns_meta_rule(spark):
     """VERDICT r01 #6: second-stage LR on stacked base-scorer outputs
     (ensemble_stacking.py:81-129 semantics) — bounded-outcome on the MTS²
@@ -153,13 +133,13 @@ def test_stacking_ensemble_learns_meta_rule(spark):
     anomalies in the test split."""
     from mtsad_spark.fixtures import mts2_wave_df
     from mtsad_spark.operators.ensemble import stacking_ensemble
-    from mtsad_spark.operators.scoring import ewma_residual, sliding_zscore
+    from mtsad_spark.operators.scoring import ewma_residual_chunked, sliding_zscore
 
     df = mts2_wave_df(spark, size=3000).withColumn("series", F.lit("s"))
     z = sliding_zscore(df, ["series"], "t", "v0", w=15, k=2.0).select(
         "series", "t", "tag", F.coalesce("score", F.lit(0.0)).alias("z_score")
     )
-    e = ewma_residual(df, ["series"], "t", "v0", alpha=0.3).select(
+    e = ewma_residual_chunked(df, ["series"], "t", "v0", alpha=0.3).select(
         "series", "t", F.col("score").alias("ewma_score")
     )
     meta = z.join(e, ["series", "t"]).cache()

@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from mtsad_spark.operators.scoring import ewma_residual, percentile_threshold
+from mtsad_spark.operators.scoring import ewma_residual_chunked, percentile_threshold
 from mtsad_spark.operators.splits import label_encode
 from mtsad_spark.operators.stats import sigma_rule_stationary
 from mtsad_spark.sources.readers import read_mts_table
@@ -52,7 +52,7 @@ def test_sigma_rule_recovers_reference_anomalies(ref_uts):
 
 
 def test_ewma_scores_concentrate_in_anomaly_windows(ref_uts):
-    e = ewma_residual(ref_uts, ["series"], "timestamp", "v0", alpha=0.3)
+    e = ewma_residual_chunked(ref_uts, ["series"], "timestamp", "v0", alpha=0.3)
     th = percentile_threshold(e, "score", 95).collect()[0]["threshold"]
     pdf = e.select("truth", "score").toPandas()
     pred = np.where(pdf["score"].values > th, 1, -1)

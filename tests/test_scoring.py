@@ -1,5 +1,5 @@
-"""Scoring path: rolling z-score vs pandas oracle, pandas/halo form agreement,
-EWMA recursion vs pandas ewm, exact percentile vs numpy, sweep + P/R/F1, and
+"""Scoring path: rolling z-score vs pandas oracle, halo-slicer exactness,
+sliced EWMA recursion vs pandas ewm, exact percentile vs numpy, sweep + P/R/F1, and
 the dataset-level anomaly fixture (north rule): the scorers must recover the
 injected anomaly windows of the MTS² wave (bounded-outcome assertions in the
 style of /root/reference/tsbitmaps/test/test_tsbitmaps.py:38-54).
@@ -16,11 +16,10 @@ from mtsad_spark.fixtures import mts2_wave, mts2_wave_df
 from mtsad_spark.functions.metrics import prf
 from mtsad_spark.operators.rollup import rollup_tiers
 from mtsad_spark.operators.scoring import (
-    ewma_residual,
+    _slice_with_halo,
     ewma_residual_chunked,
     percentile_threshold,
     sliding_zscore,
-    sliding_zscore_pandas,
     threshold_sweep,
 )
 
@@ -29,6 +28,26 @@ from mtsad_spark.operators.scoring import (
 def rollup_1m(seq_df):
     finalized, _ = rollup_tiers(seq_df, "ingest_ts", "n_tok", ["source"])
     return finalized["1m"].cache()
+
+
+def _pandas_ewma(pdf, key, order, val, alpha):
+    """(level, resid) of the adjust=False recursion per key, rows sorted by
+    (key, order); a NaN residual is 0."""
+    pdf = pdf.sort_values([key, order]).reset_index(drop=True)
+    g = pdf.groupby(key, sort=False)[val]
+    level = g.transform(lambda x: x.ewm(alpha=alpha, adjust=False).mean())
+    prior = level.groupby(pdf[key]).shift(1)
+    return level.to_numpy(), (pdf[val] - prior).fillna(0.0).to_numpy()
+
+
+def _chunked_ewma(df, key, order, val, alpha, **kw):
+    return (
+        ewma_residual_chunked(df, [key], order, val, alpha=alpha, **kw)
+        .select(key, order, "ewma_level", "resid")
+        .toPandas()
+        .sort_values([key, order])
+        .reset_index(drop=True)
+    )
 
 
 def test_sliding_zscore_vs_pandas_oracle(spark, rollup_1m):
@@ -64,63 +83,40 @@ def test_sliding_zscore_vs_pandas_oracle(spark, rollup_1m):
     assert (got["label"].values == exp_label).all()
 
 
-def test_zscore_halo_form_matches_sql_form(spark, rollup_1m):
-    w = 10
-    a = (
-        sliding_zscore(rollup_1m, ["source"], "bucket_ts", "mean", w=w)
-        .select("source", "bucket_ts", "score", "label")
-        .toPandas()
-        .sort_values(["source", "bucket_ts"])
-        .reset_index(drop=True)
-    )
-    b = (
-        sliding_zscore_pandas(
-            rollup_1m, ["source"], "bucket_ts", "mean", w=w, rows_per_slice=23
-        )
-        .select("source", "bucket_ts", "score", "label")
-        .toPandas()
-        .sort_values(["source", "bucket_ts"])
-        .reset_index(drop=True)
-    )
-    assert len(a) == len(b)
-    na, nb = a["score"].isna().values, b["score"].isna().values
-    assert (na == nb).all()
-    assert np.allclose(a["score"].values[~na], b["score"].values[~nb], rtol=1e-9)
-    assert (a["label"].values == b["label"].values).all()
-
-
 def test_ewma_vs_pandas_and_chunked(spark, rollup_1m):
+    """One slice per key (the default slice size) and many 40-row slices
+    both reproduce the pandas recursion."""
     alpha = 0.15
-    got = (
-        ewma_residual(rollup_1m, ["source"], "bucket_ts", "mean", alpha=alpha)
-        .select("source", "bucket_ts", "ewma_level", "resid")
-        .toPandas()
-        .sort_values(["source", "bucket_ts"])
-        .reset_index(drop=True)
-    )
     pdf = rollup_1m.select("source", "bucket_ts", "mean").toPandas()
-    outs = []
-    for src, g in pdf.groupby("source"):
-        g = g.sort_values("bucket_ts")
-        level = g["mean"].ewm(alpha=alpha, adjust=False).mean()
-        resid = (g["mean"] - level.shift(1)).fillna(0.0)
-        outs.append(pd.DataFrame({"source": src, "bucket_ts": g["bucket_ts"], "lv": level, "rs": resid}))
-    want = pd.concat(outs).sort_values(["source", "bucket_ts"]).reset_index(drop=True)
-    assert np.allclose(got["ewma_level"].values, want["lv"].values, rtol=1e-12)
-    assert np.allclose(got["resid"].values, want["rs"].values, rtol=1e-12, atol=1e-12)
+    lv, rs = _pandas_ewma(pdf, "source", "bucket_ts", "mean", alpha)
+    for kw in ({}, {"rows_per_slice": 40}):
+        got = _chunked_ewma(rollup_1m, "source", "bucket_ts", "mean", alpha, **kw)
+        assert len(got) == len(lv), kw
+        assert np.allclose(got["ewma_level"].values, lv, rtol=1e-12), kw
+        assert np.allclose(got["resid"].values, rs, rtol=1e-12, atol=1e-12), kw
 
-    chunked = (
-        ewma_residual_chunked(
-            rollup_1m, ["source"], "bucket_ts", "mean", alpha=alpha, rows_per_slice=40
-        )
-        .select("source", "bucket_ts", "ewma_level", "resid")
-        .toPandas()
-        .sort_values(["source", "bucket_ts"])
-        .reset_index(drop=True)
+
+@pytest.mark.parametrize("rps", [1000, 300])
+def test_ewma_nan_residual_independent_of_slicing(spark, rps):
+    """A NaN input's residual is 0.0 in every slice, as in the unsliced
+    reference — not only in a key's first slice. NaNs sit in slices 0 and 2
+    at rows_per_slice=300."""
+    import datetime as dt
+
+    from perfbench.reference import ewma_residual as ref_ewma
+
+    rng = np.random.RandomState(5)
+    v = rng.randn(1000).cumsum()
+    v[[50, 650]] = np.nan
+    ts = [dt.datetime(2024, 1, 1) + dt.timedelta(minutes=i) for i in range(1000)]
+    pdf = pd.DataFrame({"source": "s", "bucket_ts": ts, "mean": v})
+    want = ref_ewma(pdf, 0.2)
+    got = _chunked_ewma(
+        spark.createDataFrame(pdf), "source", "bucket_ts", "mean", 0.2, rows_per_slice=rps
     )
-    assert len(chunked) == len(got)
-    assert np.allclose(chunked["ewma_level"].values, got["ewma_level"].values, rtol=1e-12)
-    assert np.allclose(chunked["resid"].values, got["resid"].values, rtol=1e-12, atol=1e-12)
+    assert got["resid"].iloc[[50, 650]].tolist() == [0.0, 0.0]
+    for c in ("ewma_level", "resid"):
+        assert np.allclose(got[c], want[c], rtol=1e-9, atol=1e-12, equal_nan=True), c
 
 
 def test_exact_percentile_vs_numpy(spark):
@@ -186,7 +182,7 @@ def test_anomaly_fixture_recovery(spark):
     for s in starts:
         assert (pred[s : s + win] == 1).any(), f"window at {s} not detected"
     # EWMA scorer also fires inside the windows
-    e = ewma_residual(df, ["series"], "t", "v0", alpha=0.3)
+    e = ewma_residual_chunked(df, ["series"], "t", "v0", alpha=0.3)
     th = percentile_threshold(e, "score", 95).collect()[0]["threshold"]
     epdf = e.select("t", "score").toPandas().sort_values("t").reset_index(drop=True)
     epred = np.where(epdf["score"].values > th, 1, -1)
@@ -197,7 +193,9 @@ def test_anomaly_fixture_recovery(spark):
 @pytest.mark.parametrize("w,rps", [(3, 5), (7, 7), (12, 4), (20, 100), (5, 1)])
 def test_zscore_halo_agreement_config_sweep(spark, rollup_1m, w, rps):
     """Halo slicing must be exact for ANY (window, slice) combination,
-    including slices smaller than the halo and slice length 1."""
+    including slices smaller than the halo and slice length 1: a rolling
+    z-score computed per slice over a (w-1)-row halo equals the JVM
+    window-frame z-score."""
     a = (
         sliding_zscore(rollup_1m, ["source"], "bucket_ts", "mean", w=w)
         .select("source", "bucket_ts", "score")
@@ -205,13 +203,16 @@ def test_zscore_halo_agreement_config_sweep(spark, rollup_1m, w, rps):
         .sort_values(["source", "bucket_ts"])
         .reset_index(drop=True)
     )
-    b = (
-        sliding_zscore_pandas(rollup_1m, ["source"], "bucket_ts", "mean", w=w, rows_per_slice=rps)
-        .select("source", "bucket_ts", "score")
-        .toPandas()
-        .sort_values(["source", "bucket_ts"])
-        .reset_index(drop=True)
-    )
+    sliced = _slice_with_halo(rollup_1m, ["source"], "bucket_ts", rps, w - 1).select(
+        "source", "bucket_ts", "mean", "_rn", "_slice", "_halo"
+    ).toPandas()
+    parts = []
+    for _, g in sliced.groupby(["source", "_slice"]):
+        g = g.sort_values("_rn")
+        r = g["mean"].rolling(w, min_periods=w)
+        mu, sd = r.mean(), r.std(ddof=1)
+        parts.append(g.assign(score=((g["mean"] - mu).abs() / sd).where(sd > 0))[~g["_halo"]])
+    b = pd.concat(parts).sort_values(["source", "bucket_ts"]).reset_index(drop=True)
     assert len(a) == len(b)
     na, nb = a["score"].isna().values, b["score"].isna().values
     assert (na == nb).all()
@@ -220,24 +221,12 @@ def test_zscore_halo_agreement_config_sweep(spark, rollup_1m, w, rps):
 
 @pytest.mark.parametrize("alpha,rps", [(0.5, 3), (0.05, 17), (0.9, 1)])
 def test_ewma_chunk_agreement_config_sweep(spark, rollup_1m, alpha, rps):
-    exact = (
-        ewma_residual(rollup_1m, ["source"], "bucket_ts", "mean", alpha=alpha)
-        .select("source", "bucket_ts", "ewma_level")
-        .toPandas()
-        .sort_values(["source", "bucket_ts"])
-        .reset_index(drop=True)
-    )
-    chunked = (
-        ewma_residual_chunked(
-            rollup_1m, ["source"], "bucket_ts", "mean", alpha=alpha, rows_per_slice=rps
-        )
-        .select("source", "bucket_ts", "ewma_level")
-        .toPandas()
-        .sort_values(["source", "bucket_ts"])
-        .reset_index(drop=True)
-    )
-    assert len(exact) == len(chunked)
-    assert np.allclose(exact["ewma_level"].values, chunked["ewma_level"].values, rtol=1e-10)
+    """Slices shorter than the decay halo, and slices of one row."""
+    pdf = rollup_1m.select("source", "bucket_ts", "mean").toPandas()
+    lv, _ = _pandas_ewma(pdf, "source", "bucket_ts", "mean", alpha)
+    got = _chunked_ewma(rollup_1m, "source", "bucket_ts", "mean", alpha, rows_per_slice=rps)
+    assert len(got) == len(lv)
+    assert np.allclose(got["ewma_level"].values, lv, rtol=1e-10)
 
 
 def test_chunked_scorers_deterministic_across_parallelism(tmp_path):
@@ -253,7 +242,7 @@ sys.path.insert(0, "/root/repo")
 from mtsad_spark.session import get_spark
 from mtsad_spark.fixtures import sequences
 from mtsad_spark.operators.rollup import rollup_tiers
-from mtsad_spark.operators.scoring import ewma_residual_chunked, sliding_zscore_pandas
+from mtsad_spark.operators.scoring import ewma_residual_chunked
 
 master, shuffle = sys.argv[1], int(sys.argv[2])
 spark = get_spark("det-probe", master=master, shuffle_partitions=shuffle,
@@ -262,10 +251,10 @@ spark.sparkContext.setLogLevel("ERROR")
 seq = sequences(spark, n_rows=8000, n_minutes=240, with_tokens=False)
 r1m, _ = rollup_tiers(seq, "ingest_ts", "n_tok", ["source"])
 base = r1m["1m"].select("source", "bucket_ts", "mean").cache()
-z = sliding_zscore_pandas(base, ["source"], "bucket_ts", "mean", w=10, rows_per_slice=23)
-e = ewma_residual_chunked(base, ["source"], "bucket_ts", "mean", alpha=0.2, rows_per_slice=40)
+e1 = ewma_residual_chunked(base, ["source"], "bucket_ts", "mean", alpha=0.2, rows_per_slice=40)
+e2 = ewma_residual_chunked(base, ["source"], "bucket_ts", "mean", alpha=0.6, rows_per_slice=23)
 h = hashlib.sha256()
-for df, cols in ((z, ["score"]), (e, ["ewma_level", "resid"])):
+for df, cols in ((e1, ["ewma_level", "resid"]), (e2, ["ewma_level", "resid"])):
     pdf = df.select("source", "bucket_ts", *cols).toPandas().sort_values(
         ["source", "bucket_ts"]).reset_index(drop=True)
     for c in cols:
@@ -304,7 +293,7 @@ def test_percentile_threshold_approx_scale_path(spark):
 def test_halo_slicer_hot_key_many_coarse_buckets(spark):
     """One monster key spanning 90 hours (≈90 coarse count-buckets) with
     irregular gaps: the composed row numbering + halo slicing must still
-    match the JVM window form exactly — this is the shape where the round-1
+    match the unsliced recursion — this is the shape where the round-1
     per-key row_number would have serialized."""
     rng = np.random.RandomState(31)
     n = 6000
@@ -320,34 +309,12 @@ def test_halo_slicer_hot_key_many_coarse_buckets(spark):
         }
     )
     df = spark.createDataFrame(pdf).repartition(7)
-    w = 24
-    a = (
-        sliding_zscore(df, ["k"], "ts", "v", w=w)
-        .select("ts", "score")
-        .toPandas()
-        .sort_values("ts")
-        .reset_index(drop=True)
-    )
-    b = (
-        sliding_zscore_pandas(df, ["k"], "ts", "v", w=w, rows_per_slice=231)
-        .select("ts", "score")
-        .toPandas()
-        .sort_values("ts")
-        .reset_index(drop=True)
-    )
-    na, nb = a["score"].isna().values, b["score"].isna().values
-    assert len(a) == len(b) == n
-    assert (na == nb).all()
-    assert np.allclose(a["score"].values[~na], b["score"].values[~nb], rtol=1e-9)
-    c = (
-        ewma_residual_chunked(df, ["k"], "ts", "v", alpha=0.2, rows_per_slice=500)
-        .select("ts", "ewma_level")
-        .toPandas()
-        .sort_values("ts")
-        .reset_index(drop=True)
-    )
-    want = pdf.sort_values("ts")["v"].ewm(alpha=0.2, adjust=False).mean().values
-    assert np.allclose(c["ewma_level"].values, want, rtol=1e-10)
+    lv, rs = _pandas_ewma(pdf, "k", "ts", "v", 0.2)
+    for rps in (231, 500):
+        c = _chunked_ewma(df, "k", "ts", "v", 0.2, rows_per_slice=rps)
+        assert len(c) == n
+        assert np.allclose(c["ewma_level"].values, lv, rtol=1e-10), rps
+        assert np.allclose(c["resid"].values, rs, rtol=1e-9, atol=1e-9), rps
 
 
 def test_cusum_closed_form_vs_loop_oracle(spark):

@@ -135,13 +135,14 @@ def test_gaussian_density_oracle(spark):
 
 @pytest.mark.parametrize("w,rps", [(1, 40), (5, 40), (24, 64), (24, 23), (7, 1000)])
 def test_sliding_extrema_chunked_matches_jvm_and_pandas(spark, w, rps):
-    """van Herk/Gil-Werman O(n) chunked rolling min/max == JVM window frame
-    == pandas rolling, across non-dividing widths and slice sizes (multi-
-    slice + halo paths included)."""
-    import numpy as np
-    import pandas as pd
+    """JVM window-frame rolling min/max == pandas rolling, and so does the
+    chunked evaluation: per-(key, slice) pandas rolling over the halo slicer
+    with an exact (w-1)-row halo, across non-dividing widths and slice sizes
+    (multi-slice, and a halo longer than one slice at w=24, rps=23)."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from mtsad_spark.operators.stats import sliding_extrema, sliding_extrema_chunked
+    from mtsad_spark.operators.scoring import _slice_with_halo
+    from mtsad_spark.operators.stats import sliding_extrema
 
     rng = np.random.RandomState(11)
     pdf = pd.DataFrame(
@@ -156,14 +157,29 @@ def test_sliding_extrema_chunked_matches_jvm_and_pandas(spark, w, rps):
         sliding_extrema(df, ["k"], "t", "v", w)
         .toPandas().sort_values(["k", "t"]).reset_index(drop=True)
     )
+
+    data_cols = list(df.columns)
+    out_schema = StructType(
+        list(df.schema.fields)
+        + [StructField("roll_min", DoubleType()), StructField("roll_max", DoubleType())]
+    )
+
+    def kernel(part: pd.DataFrame) -> pd.DataFrame:
+        part = part.sort_values("t", kind="mergesort")
+        r = part["v"].rolling(w, min_periods=1)
+        part = part.assign(roll_min=r.min().values, roll_max=r.max().values)
+        return part[~part["_halo"]][data_cols + ["roll_min", "roll_max"]]
+
     chk = (
-        sliding_extrema_chunked(df, ["k"], "t", "v", w, rows_per_slice=rps)
+        _slice_with_halo(df, ["k"], "t", rps, w - 1)
+        .groupBy("k", "_slice").applyInPandas(kernel, schema=out_schema)
         .toPandas().sort_values(["k", "t"]).reset_index(drop=True)
     )
     want = pdf.sort_values(["k", "t"]).reset_index(drop=True)
     g = want.groupby("k")["v"]
     want["roll_min"] = g.rolling(w, min_periods=1).min().values
     want["roll_max"] = g.rolling(w, min_periods=1).max().values
+    assert len(chk) == len(want), (w, rps)
     for col in ("roll_min", "roll_max"):
         assert (jvm[col].values == want[col].values).all(), (w, rps, col, "jvm")
         assert (chk[col].values == want[col].values).all(), (w, rps, col, "chunked")

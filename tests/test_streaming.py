@@ -52,7 +52,7 @@ def test_stateful_streaming_ewma_matches_batch(spark, tmp_path):
 
     from mtsad_spark.fixtures import sequences
     from mtsad_spark.operators.rollup import rollup_tiers
-    from mtsad_spark.operators.scoring import ewma_residual
+    from mtsad_spark.operators.scoring import ewma_residual_chunked
     from mtsad_spark.streaming.stateful_ewma import streaming_ewma
 
     seq = sequences(spark, 5_000, 120, with_tokens=False)
@@ -82,7 +82,7 @@ def test_stateful_streaming_ewma_matches_batch(spark, tmp_path):
         .reset_index(drop=True)
     )
     want = (
-        ewma_residual(m1, ["source"], "ts", "value", alpha=0.25)
+        ewma_residual_chunked(m1, ["source"], "ts", "value", alpha=0.25)
         .toPandas()
         .sort_values(["source", "ts"])
         .reset_index(drop=True)
