@@ -4,7 +4,8 @@ bench.py. Each stage is labeled (setJobDescription) and timed end-to-end
 with the noop writer so the numbers measure computation, not the sink.
 
 Usage: python bench_extra.py [minhash|simhash|knn|queries] ...
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0), SPARK_GRAFT_CPUS.
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1); cores and driver heap
+follow mtsad_spark.session.get_spark (SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM).
 """
 
 from __future__ import annotations
@@ -96,14 +97,12 @@ def profile_queries(spark, sf_dir: str, names: list[str], trials: int = 3) -> di
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(
         "mtsad-bench-extra",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
         extra_confs={"spark.sql.files.maxPartitionBytes": "16m"},
     )
+    cpus = spark.sparkContext.defaultParallelism
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1_000_000).agg(F.sum("id")).collect()  # JIT warmup
 

@@ -15,7 +15,7 @@ Architecture (Spark-first, NOT a port):
 Subpackages:
   operators/  rollup, gapfill, scoring, supervised (lag/lead/windows), dedup,
               similarity, splits
-  functions/  gorilla codec, text analysis, metrics (P/R/F1)
+  functions/  gorilla codec, text features and corpus statistics, metrics (P/R/F1)
   sources/    table provider seam (Iceberg catalog if present, parquet fallback)
   plans/      end-to-end checkpointed pipeline with lineage + row-count metrics
 """

@@ -83,9 +83,7 @@ def _ensure_fixtures() -> None:
         ensure_arff_fixture,
         ensure_kpca_fixture,
         ensure_mat_fixture,
-        ensure_media_fixture,
         ensure_pca_fixture,
-        ensure_planes_fixture,
         ensure_reader_fixtures,
         ensure_seqfix,
         ensure_signal_fixture,
@@ -96,8 +94,6 @@ def _ensure_fixtures() -> None:
     ensure_mat_fixture()
     ensure_pca_fixture()
     ensure_kpca_fixture()
-    ensure_planes_fixture()
-    ensure_media_fixture()
     ensure_reader_fixtures()
     ensure_signal_fixture()
 
@@ -825,83 +821,6 @@ def mktsegment_totals(spark, sf_dir):
 
 
 @_q(
-    "tpch_q3_style",
-    """
-    SELECT l.l_orderkey, o.o_orderdate,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-      AND l.l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-    GROUP BY 1, 2
-    ORDER BY revenue DESC, l_orderkey
-    LIMIT 10
-    """,
-)
-def tpch_q3_style(spark, sf_dir):
-    """Q3-shaped: selective dim filter → two equi-joins → agg → top-k. The
-    segment/date predicates push to the scans (Catalyst), the order-revenue
-    ranking is the shuffle-bounded part."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1995-03-15 00:00:00").cast("timestamp")
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1995-03-15 00:00:00").cast("timestamp")
-    )
-    return (
-        c.join(o, c["c_custkey"] == o["o_custkey"])
-        .join(li, li["l_orderkey"] == o["o_orderkey"])
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
-@_q(
-    "tpch_q5_style",
-    """
-    SELECT n.n_name,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue
-    FROM region r
-    JOIN nation n ON n.n_regionkey = r.r_regionkey
-    JOIN customer c ON c.c_nationkey = n.n_nationkey
-    JOIN orders o ON o.o_custkey = c.c_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey AND s.s_nationkey = c.c_nationkey
-    WHERE r.r_name = 'ASIA'
-    GROUP BY 1
-    ORDER BY revenue DESC, n_name
-    """,
-)
-def tpch_q5_style(spark, sf_dir):
-    """Q5-shaped: 6-way join (region→nation→customer→orders→lineitem→supplier
-    with the local-supplier co-nation predicate) → per-nation revenue.
-    Tiny dims carry explicit broadcast hints; fact-side joins stay shuffled."""
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    j = (
-        c.join(F.broadcast(n.join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])),
-               c["c_nationkey"] == n["n_nationkey"])
-        .join(o, o["o_custkey"] == c["c_custkey"])
-        .join(li, li["l_orderkey"] == o["o_orderkey"])
-        .join(s, (s["s_suppkey"] == li["l_suppkey"]) & (s["s_nationkey"] == c["c_nationkey"]))
-    )
-    return (
-        j.groupBy("n_name")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("revenue"))
-        .orderBy(F.desc("revenue"), F.asc("n_name"))
-    )
-
-
-@_q(
     "props_json_extract",
     """
     SELECT event_type,
@@ -983,42 +902,6 @@ def docs_quality(spark, sf_dir):
         "mean_word_len",
         "punct_ratio",
         "alpha_ratio",
-    )
-
-
-@_q(
-    "docs_fingerprint",
-    """
-    SELECT doc_id, md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp
-    FROM documents
-    """,
-)
-def docs_fingerprint(spark, sf_dir):
-    from mtsad_spark.functions.text import content_fingerprint
-
-    docs = _docs(spark, sf_dir)
-    return docs.select("doc_id", content_fingerprint(F.col("text")).alias("fp"))
-
-
-@_q(
-    "docs_token_stats_by_source",
-    r"""
-    SELECT source,
-           count(*) AS n_docs,
-           CAST(sum(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS total_tokens,
-           round(avg(len(regexp_extract_all(text, '\S+'))), 6) AS avg_tokens
-    FROM documents GROUP BY 1
-    """,
-)
-def docs_token_stats_by_source(spark, sf_dir):
-    from mtsad_spark.functions.text import whitespace_token_count
-
-    docs = _docs(spark, sf_dir)
-    n = whitespace_token_count(F.col("text"))
-    return docs.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(n).alias("total_tokens"),
-        F.round(F.avg(n), 6).alias("avg_tokens"),
     )
 
 
@@ -1546,92 +1429,6 @@ def simhash_docs(spark, sf_dir):
 
 
 @_q(
-    "lang_id_docs",
-    r"""
-    WITH s AS (
-      SELECT doc_id,
-             len(regexp_extract_all(lower(text), '\b(the|and|of|to|is)\b')) AS s_en,
-             len(regexp_extract_all(lower(text), '\b(der|die|und|ist|das)\b')) AS s_de,
-             len(regexp_extract_all(lower(text), '\b(le|la|et|les|des)\b')) AS s_fr,
-             len(regexp_extract_all(lower(text), '\b(el|la|los|que|de)\b')) AS s_es
-      FROM documents)
-    SELECT doc_id,
-           CASE WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'und'
-                WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
-                WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
-                WHEN s_fr >= s_es THEN 'fr'
-                ELSE 'es' END AS lang_pred
-    FROM s
-    """,
-)
-def lang_id_docs(spark, sf_dir):
-    """Argmax-of-marker-counts heuristic; tie semantics = FIRST language in
-    [en, de, fr, es] order achieving the max (with_lang_id replaces only on
-    strict >), which the oracle's cascaded >= CASE reproduces exactly."""
-    from mtsad_spark.functions.text import with_lang_id
-
-    docs = _docs(spark, sf_dir)
-    return with_lang_id(docs, "text").select("doc_id", "lang_pred")
-
-
-def _ann_lsh_sql() -> str:
-    """Oracle for the LSH ANN top-k: DuckDB rebuilds the 6-plane sign-bit
-    buckets from the planes fixture (RandomState fills row-major, so
-    randn(6, dim) is exactly the first 6 rows of the 8-plane tbl=0 draw),
-    joins candidates within a bucket, and ranks on the 6-decimal-rounded
-    cosine with a neighbor-id tiebreak — the SAME rank key the operator
-    uses. Sign-flip safe: min |v·plane| ≥ 5.4e-5 over these planes on every
-    sf dir (measured; fixtures are deterministic). Only the PATH is embedded
-    here (import-time); generation stays lazy in _ensure_fixtures."""
-    from mtsad_spark.fixture_cache import PLANES_PATH
-
-    return f"""
-    WITH planes AS (SELECT plane_idx, plane FROM '{PLANES_PATH}'
-                    WHERE tbl = 0 AND plane_idx < 6),
-         c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         bk AS (SELECT c.vec_id,
-                       CAST(sum(CASE WHEN list_dot_product(c.v, p.plane) > 0
-                                THEN CAST(1 AS BIGINT) << p.plane_idx
-                                ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS bucket
-                FROM c CROSS JOIN planes p GROUP BY 1),
-         cand AS (SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id
-                  FROM bk q JOIN bk n
-                    ON q.bucket = n.bucket AND n.vec_id != q.vec_id
-                  WHERE q.vec_id < 5),
-         sim AS (SELECT query_id, neighbor_id,
-                        round(list_dot_product(a.v, b.v)
-                              / (sqrt(list_dot_product(a.v, a.v))
-                                 * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine
-                 FROM cand
-                 JOIN c a ON a.vec_id = cand.query_id
-                 JOIN c b ON b.vec_id = cand.neighbor_id)
-    SELECT query_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM sim)
-    WHERE rank <= 3
-    """
-
-
-@_q("ann_lsh_embeddings", _ann_lsh_sql())
-def ann_lsh_embeddings(spark, sf_dir):
-    """LSH ANN top-k, fully oracled: DuckDB reproduces the hyperplane
-    buckets bit-for-bit from the shared planes fixture (see _ann_lsh_sql;
-    the old no-oracle rationale — sign flips on near-zero projections — was
-    measured to be a non-issue on these fixtures: min margin 5.4e-5 vs
-    ~1e-15 association noise). Recall floors stay pytest-golden (single- and
-    multi-table)."""
-    from mtsad_spark.operators.similarity import cosine_topk_lsh
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    queries = emb.filter("vec_id < 5")
-    out = cosine_topk_lsh(emb, queries, dim=64, k=3, n_planes=6)
-    return out.withColumn("cosine", F.round("cosine", 6))
-
-
-@_q(
     "ewma_scores_1h",
     _hourly_cte()
     + """
@@ -1975,60 +1772,6 @@ def epsilon_f1_events(spark, sf_dir):
     )
     out = epsilon_by_f1(lab, "density", "tag", n_steps=200, keys=["event_type"])
     return out.select("event_type", F.round("epsilon", 10).alias("epsilon"), F.round("f1", 6).alias("f1"))
-
-
-def _poly_fp_sql(window: int = 32, stride: int = 16, base: int = 257,
-                 mod: int = (1 << 31) - 1) -> str:
-    # the same Horner chain the engine evaluates, mod after every step so
-    # intermediates stay BIGINT-exact (< M·B + 255 < 2^39) in both engines
-    h = "CAST(0 AS BIGINT)"
-    for j in range(window):
-        h = f"(({h}) * {base} + ascii(substr(norm, p + {j + 1}, 1))) % {mod}"
-    return rf"""
-    SELECT doc_id, CAST(p / {stride} AS INTEGER) AS pos, {h} AS fp
-    FROM (SELECT doc_id, regexp_replace(lower(text), '\s+', ' ', 'g') AS norm
-          FROM documents),
-         unnest(generate_series(0, length(norm) - {window}, {stride})) AS t(p)
-    """
-
-
-@_q("rolling_hash_fingerprints_docs", _poly_fp_sql())
-def rolling_hash_fingerprints_docs(spark, sf_dir):
-    """The rolling hash ITSELF, fully oracled (VERDICT r04 #6): Rabin–Karp
-    polynomial fingerprints over stride-aligned windows — exact BIGINT Horner
-    arithmetic both engines can evaluate, so the hash VALUES match, not just
-    the window/stride machinery (which substring_fingerprints_md5_docs
-    already oracles with a portable md5 in place of the fast JVM xxhash64
-    form of functions/text.rolling_hash_fingerprints)."""
-    from mtsad_spark.functions.text import rolling_polynomial_fingerprints
-
-    docs = _docs(spark, sf_dir)
-    return rolling_polynomial_fingerprints(docs, "doc_id", "text", window=32, stride=16)
-
-
-@_q(
-    "substring_fingerprints_md5_docs",
-    r"""
-    SELECT doc_id, CAST(p / 16 AS INTEGER) AS pos,
-           md5(substr(norm, p + 1, 32)) AS fp
-    FROM (SELECT doc_id, regexp_replace(lower(text), '\s+', ' ', 'g') AS norm
-          FROM documents),
-         unnest(generate_series(0, greatest(length(norm) - 32, 0), 16)) AS t(p)
-    """,
-)
-def substring_fingerprints_md5_docs(spark, sf_dir):
-    """Winnowing-style stride-aligned substring fingerprints with a PORTABLE
-    hash (md5 exists in both engines) — oracles the exact window/stride/
-    normalization machinery that rolling_hash_fingerprints runs with the
-    faster JVM xxhash64 (which DuckDB lacks, hence that query is rows-only)."""
-    docs = _docs(spark, sf_dir)
-    window, stride = 32, 16
-    norm = F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
-    positions = F.sequence(
-        F.lit(0), F.greatest(F.length(norm) - window, F.lit(0)), F.lit(stride)
-    )
-    fps = F.transform(positions, lambda p: F.md5(F.substr(norm, p + 1, F.lit(window))))
-    return docs.select(F.col("doc_id"), F.posexplode(fps).alias("pos", "fp"))
 
 
 @_q("simhash_dup_pairs_docs", None)
@@ -2453,213 +2196,6 @@ def tokens_passthrough_hash(spark, sf_dir):
     return seq.select("doc_id", "n_tok", F.md5(tok_str).alias("tok_hash"))
 
 
-def _ivf_trained_sql(n_lists: int = 8, n_probe: int = 3, k: int = 3, iters: int = 2) -> str:
-    """Full oracle for the TRAINED IVF form: DuckDB replays the whole
-    deterministic Lloyd trainer (similarity.kmeans_deterministic) with the
-    iterations unrolled as CTEs — md5-hash-ranked seeds, argmin-L2
-    assignment (tie → lower list id), and EXACT integer micro-means
-    (floor(x·1e6 + 0.5) summed as BIGINT, then the one fixed float
-    expression s/n/1e6) — so the trained centroids are BITWISE equal across
-    engines (verified 0/512 coordinate mismatches at sf0.001/0.01/0.1).
-    Assignment margins (1st vs 2nd centroid distance) ≥ 4.4e-6 over every
-    sf dir — ~10⁹ × the cross-engine association noise."""
-    sql = """
-    WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    cent0 AS (SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS list_id, v AS ctr
-              FROM (SELECT * FROM c ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_lists}))"""
-    for i in range(iters):
-        sql += """,
-    tad{i} AS (SELECT c.vec_id, t.list_id, list_distance(c.v, t.ctr) AS d FROM c CROSS JOIN cent{i} t),
-    asg{i} AS (SELECT vec_id, list_id FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, list_id) rk FROM tad{i}) WHERE rk=1),
-    ex{i} AS (SELECT a.list_id, generate_subscripts(c.v, 1) AS pos, unnest(c.v) AS x
-              FROM asg{i} a JOIN c USING (vec_id)),
-    sums{i} AS (SELECT list_id, pos, sum(CAST(floor(x*1e6 + 0.5) AS BIGINT)) AS s, count(*) AS n
-              FROM ex{i} GROUP BY 1,2),
-    new{j} AS (SELECT list_id, list(CAST(s AS DOUBLE)/n/1e6 ORDER BY pos) AS ctr FROM sums{i} GROUP BY 1),
-    cent{j} AS (SELECT c0.list_id, COALESCE(n1.ctr, c0.ctr) AS ctr FROM cent{i} c0 LEFT JOIN new{j} n1 USING (list_id))""".replace(
-            "{i}", str(i)
-        ).replace("{j}", str(i + 1))
-    sql += """,
-    cent AS (SELECT list_id, ctr FROM cent{T}),
-    ad AS (SELECT c.vec_id, cent.list_id, list_distance(c.v, cent.ctr) AS d
-           FROM c CROSS JOIN cent),
-    assign AS (SELECT vec_id, list_id FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, list_id) AS rk FROM ad)
-        WHERE rk = 1),
-    probe AS (SELECT vec_id AS query_id, list_id FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY d, list_id) AS rk
-        FROM ad WHERE vec_id < 5)
-        WHERE rk <= {n_probe}),
-    cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
-             FROM probe p JOIN assign a ON a.list_id = p.list_id
-             WHERE a.vec_id != p.query_id),
-    sim AS (SELECT query_id, neighbor_id,
-                   round(list_dot_product(a.v, b.v)
-                         / (sqrt(list_dot_product(a.v, a.v))
-                            * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine
-            FROM cand
-            JOIN c a ON a.vec_id = cand.query_id
-            JOIN c b ON b.vec_id = cand.neighbor_id)
-    SELECT query_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM sim)
-    WHERE rank <= {k}
-    """
-    return (
-        sql.replace("{n_lists}", str(n_lists))
-        .replace("{T}", str(iters))
-        .replace("{n_probe}", str(n_probe))
-        .replace("{k}", str(k))
-    )
-
-
-@_q("ivf_ann_embeddings", _ivf_trained_sql())
-def ivf_ann_embeddings(spark, sf_dir):
-    """TRAINED-quantizer IVF, fully oracled since r6: the quantizer is
-    similarity.kmeans_deterministic (hash-ranked seeds + exact integer
-    micro-means — partition-invariant, bitwise cross-engine; VERDICT r05
-    #7), so DuckDB replays training, assignment, probing and ranking
-    end-to-end in _ivf_trained_sql. Rank on round(cosine, 6) + id tiebreak
-    like every ranker."""
-    from mtsad_spark.operators.similarity import cosine_topk_ivf, kmeans_deterministic
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    centroids = kmeans_deterministic(emb, n_lists=8, iters=2)
-    out = cosine_topk_ivf(
-        emb, emb.filter("vec_id < 5"), k=3, n_lists=8, n_probe=3,
-        centroids=centroids,
-    )
-    return out.withColumn("cosine", F.round("cosine", 6))
-
-
-_IVF_SEEDED_SQL = """
-    WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         cent AS (SELECT vec_id AS list_id, v AS ctr FROM c WHERE vec_id < 16),
-         ad AS (SELECT c.vec_id, cent.list_id, list_distance(c.v, cent.ctr) AS d
-                FROM c CROSS JOIN cent),
-         assign AS (SELECT vec_id, list_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY vec_id
-                                         ORDER BY d, list_id) AS rk FROM ad)
-            WHERE rk = 1),
-         probe AS (SELECT vec_id AS query_id, list_id FROM (
-            SELECT *, row_number() OVER (PARTITION BY vec_id
-                                         ORDER BY d, list_id) AS rk
-            FROM ad WHERE vec_id < 5)
-            WHERE rk <= 4),
-         cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
-                  FROM probe p JOIN assign a ON a.list_id = p.list_id
-                  WHERE a.vec_id != p.query_id),
-         sim AS (SELECT query_id, neighbor_id,
-                        round(list_dot_product(a.v, b.v)
-                              / (sqrt(list_dot_product(a.v, a.v))
-                                 * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine
-                 FROM cand
-                 JOIN c a ON a.vec_id = cand.query_id
-                 JOIN c b ON b.vec_id = cand.neighbor_id)
-    SELECT query_id, neighbor_id, cosine, CAST(rank AS INTEGER) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM sim)
-    WHERE rank <= 3
-    """
-
-
-@_q("ivf_seeded_ann_embeddings", _IVF_SEEDED_SQL)
-def ivf_seeded_ann_embeddings(spark, sf_dir):
-    """IVF ANN with a PRE-TRAINED quantizer (the at-scale pattern: train the
-    coarse quantizer offline, reuse it), fully oracled: centroids are the
-    vec_id<16 embeddings themselves (a 0-iteration seeded quantizer both
-    engines can read from the shared table), so DuckDB replays argmin-L2
-    assignment, n_probe list selection and the rounded-cosine ranking
-    exactly. Ordering-safe: min assignment gap (1st vs 2nd centroid) ≥
-    2.3e-5 and min probe-boundary gap ≥ 2.3e-3 over every sf dir (measured;
-    fixtures are deterministic) — ~10^8 × the cross-engine float-association
-    noise. The TRAINED form (`ivf_ann_embeddings`) is oracled too since r6
-    via the deterministic Lloyd trainer."""
-    from mtsad_spark.operators.similarity import cosine_topk_ivf
-
-    emb = _t(spark, sf_dir, "embeddings").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    seeds = emb.filter("vec_id < 16").orderBy("vec_id").collect()
-    centroids = [list(r["embedding"]) for r in seeds]
-    out = cosine_topk_ivf(
-        emb, emb.filter("vec_id < 5"), k=3, n_lists=16, n_probe=4,
-        centroids=centroids,
-    )
-    return out.withColumn("cosine", F.round("cosine", 6))
-
-
-def _near_dup_sql() -> str:
-    """Full oracle for the LSH near-dup pipeline: the planes fixture
-    (fixture_cache.ensure_planes_fixture) reproduces the EXACT hyperplanes
-    hyperplane_buckets embeds as literals, so DuckDB rebuilds the sign-bit
-    buckets, the within-(table, bucket) pair join, the cross-table DISTINCT
-    and the exact-cosine verify end-to-end. Deterministic because the fixture
-    margins are huge (measured over every sf dir): min |v·plane| ≥ 4.9e-6
-    (sign bits can't flip on ~1e-15 association noise) and min
-    |cosine − 0.99| ≥ 8.6e-3 (the threshold can't flip); dup vectors use
-    floor(x·100)/100 — exact in both engines, unlike decimal rounding. Only
-    the PATH is embedded (import-time); generation stays lazy in
-    _ensure_fixtures."""
-    from mtsad_spark.fixture_cache import PLANES_PATH
-
-    return f"""
-    WITH planes AS (SELECT tbl, plane_idx, plane FROM '{PLANES_PATH}'),
-         base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         dup AS (SELECT vec_id + 100000 AS vec_id,
-                        list_transform(embedding::DOUBLE[], x -> floor(x * 100) / 100.0) AS v
-                 FROM embeddings WHERE vec_id < 50),
-         corpus AS (SELECT * FROM base UNION ALL SELECT * FROM dup),
-         bk AS (SELECT c.vec_id, p.tbl,
-                       CAST(sum(CASE WHEN list_dot_product(c.v, p.plane) > 0
-                                THEN CAST(1 AS BIGINT) << p.plane_idx
-                                ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS bucket
-                FROM corpus c CROSS JOIN planes p GROUP BY 1, 2),
-         pairs AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-                   FROM bk a JOIN bk b
-                     ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         sim AS (SELECT id_a, id_b,
-                        list_dot_product(x.v, y.v)
-                          / (sqrt(list_dot_product(x.v, x.v))
-                             * sqrt(list_dot_product(y.v, y.v))) AS cos_raw
-                 FROM pairs
-                 JOIN corpus x ON x.vec_id = pairs.id_a
-                 JOIN corpus y ON y.vec_id = pairs.id_b)
-    SELECT id_a, id_b, round(cos_raw, 6) AS cosine FROM sim WHERE cos_raw >= 0.99
-    """
-
-
-@_q("embedding_near_dups", _near_dup_sql())
-def embedding_near_dups_q(spark, sf_dir):
-    """The embeddings fixture is near-orthogonal random (max pairwise cosine
-    ~0.51 at sf0.01), so true near-dups are synthesized deterministically:
-    vec_id < 50 get a 2-decimal-TRUNCATED copy (floor(x·100)/100 — exact in
-    both engines; cosine ≥ ~0.999 to its original). Multi-table LSH (3 seeds
-    × 8 planes) gives ≥0.999 recall at that cosine; the exact-cosine verify
-    keeps only ≥ 0.99. Fully oracled: DuckDB rebuilds the buckets from the
-    shared planes fixture (see _near_dup_sql)."""
-    from mtsad_spark.operators.similarity import embedding_near_dups
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    dup = emb.filter("vec_id < 50").select(
-        (F.col("vec_id") + 100_000).alias("vec_id"),
-        F.transform(
-            "embedding", lambda x: F.floor(x * 100) / F.lit(100.0)
-        ).alias("embedding"),
-    )
-    corpus = emb.unionByName(dup)
-    out = embedding_near_dups(
-        corpus, dim=64, threshold=0.99, n_planes=8, n_tables=3, max_bucket=100_000
-    )
-    return out.withColumn("cosine", F.round("cosine", 6))
-
-
 @_q(
     "arff_scan_mts2",
     """
@@ -2773,79 +2309,6 @@ def ensemble_stacking_1h(spark, sf_dir):
         test.withColumn("split", F.lit("test"))
     )
     return out.select("event_type", "bucket_ts", "mf_z", "mf_e", "tag", "split")
-
-
-def _media_feat_sql() -> str:
-    # path only at import time; generation stays lazy in _ensure_fixtures
-    from mtsad_spark.fixture_cache import MEDIA_FEAT_ORACLE_PATH
-
-    # scalar projection: one row per (media_id, feat_idx) — the driver's
-    # canonicalizer sorts rows by every column with pandas sort_values, which
-    # throws `unhashable type: 'list'` on array cells (the ONLY never-green
-    # driver row in r1-r3 was exactly that). posexplode/unnest keeps every
-    # value scalar on both sides.
-    return (
-        "SELECT media_id, kind, width, height, n_bytes, "
-        "       CAST(idx1 - 1 AS INT) AS feat_idx, feature "
-        "FROM (SELECT media_id, kind, width, height, n_bytes, "
-        "             generate_subscripts(features, 1) AS idx1, "
-        "             unnest(features) AS feature "
-        f"      FROM '{MEDIA_FEAT_ORACLE_PATH}')"
-    )
-
-
-@_q("media_decode_features", _media_feat_sql())
-def media_decode_features(spark, sf_dir):
-    """Multimodal decode seam with REAL codecs for all three modalities:
-    shared-parquet PNG/WAV/Y4M payloads → mapInPandas decode →
-    pixel-histogram / audio-RMS / luma-histogram features. Oracled against
-    EXPECTED features derived from the SOURCE pixel/sample/frame arrays
-    (fixture_cache.ensure_media_fixture — never runs the decoders), so the
-    driver cross-checks encode → demux/decode → featurize against source
-    truth, the ARFF/MAT independence pattern. Output is posexploded to one
-    scalar row per feature slot (see _media_feat_sql) so the driver's
-    row-sort canonicalizer never sees an array cell."""
-    from mtsad_spark.fixture_cache import ensure_media_fixture
-    from mtsad_spark.functions.multimodal import decode_features
-
-    media_path, _, _ = ensure_media_fixture()
-    media = spark.read.parquet(media_path)
-    out = decode_features(media, n_features=8)
-    return out.select(
-        "media_id", "kind", "width", "height", "n_bytes",
-        F.posexplode(
-            F.transform("features", lambda x: F.round(x, 6))
-        ).alias("feat_idx", "feature"),
-    )
-
-
-def _media_frames_sql() -> str:
-    # path only at import time; generation stays lazy in _ensure_fixtures
-    from mtsad_spark.fixture_cache import MEDIA_FRAMES_ORACLE_PATH
-
-    return (
-        "SELECT media_id, frame_idx, frame_ts_ms, frame_md5 "
-        f"FROM '{MEDIA_FRAMES_ORACLE_PATH}'"
-    )
-
-
-@_q("video_frames_y4m", _media_frames_sql())
-def video_frames_y4m(spark, sf_dir):
-    """Video demux path end-to-end: shared-parquet Y4M clips →
-    sample_frames (real YUV4MPEG2 parse, frame picked by the stream's own
-    4 fps clock) → PNG-encoded frames. Oracled against frame md5s computed
-    from the SOURCE frame arrays (fixture_cache.ensure_media_fixture replays
-    the frame clock from the source frame count and hashes the PNG of the
-    source frame — the demuxer itself never runs on the oracle side)."""
-    from mtsad_spark.fixture_cache import MEDIA_VIDEO_N, ensure_media_fixture
-    from mtsad_spark.functions.multimodal import sample_frames
-
-    media_path, _, _ = ensure_media_fixture()
-    media = spark.read.parquet(media_path).filter(F.col("media_id") < MEDIA_VIDEO_N)
-    out = sample_frames(media, every_ms=1000)
-    return out.select(
-        "media_id", "frame_idx", "frame_ts_ms", F.md5(F.col("frame")).alias("frame_md5")
-    )
 
 
 @_q(
@@ -3563,62 +3026,6 @@ def token_packing_bins(spark, sf_dir):
     )
 
 
-def _logprob_sql() -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH
-
-    seq = f"'{SEQFIX_PATH}'"
-    return f"""
-    WITH tok AS (SELECT doc_id, unnest(tokens) AS t FROM {seq}),
-         freq AS (SELECT t, count(*) AS c FROM tok GROUP BY 1),
-         n AS (SELECT count(*) AS total FROM tok),
-         micro AS (SELECT t, CAST(round(ln(CAST(c AS DOUBLE) / total) * 1000000, 0) AS BIGINT) AS lp
-                   FROM freq, n),
-         per_doc AS (SELECT tok.doc_id, sum(micro.lp) AS s, count(*) AS n_tok
-                     FROM tok JOIN micro ON tok.t = micro.t
-                     GROUP BY 1)
-    SELECT doc_id, n_tok,
-           -CAST(s AS DOUBLE) / (1000000.0 * n_tok) AS neg_logprob
-    FROM per_doc
-    """
-
-
-@_q("token_unigram_logprob", _logprob_sql())
-def token_unigram_logprob(spark, sf_dir):
-    """Token-native quality score for data curation: per-document negative
-    mean unigram log-probability under the corpus's own unigram model (the
-    standard cheap perplexity proxy for filtering pre-tokenized training
-    data). Corpus pass 1 = vocab-bounded frequency table (map-side combined);
-    pass 2 joins it back per token — the frequency table is VOCAB-sized, so
-    the join side is broadcastable at any corpus scale.
-
-    Float discipline: per-token ln(c/total) is rounded to integer
-    micro-units BEFORE the per-doc sum, so the aggregation is exact BIGINT
-    (order-independent) and one final division is bitwise cross-engine —
-    the integer-numerator pattern, with the single ln() 1-ulp risk absorbed
-    by the micro rounding on a fixed fixture."""
-    from mtsad_spark.fixture_cache import ensure_seqfix
-
-    seq = _seqfix_df(spark)
-    tok = seq.select("doc_id", F.explode("tokens").alias("t"))
-    freq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("c"))
-    # total derives from the VOCAB-sized freq table, not a third corpus pass
-    total = freq.agg(F.sum("c").alias("total"))
-    micro = freq.crossJoin(F.broadcast(total)).select(
-        "t",
-        F.round(F.log(F.col("c").cast("double") / F.col("total")) * 1_000_000, 0)
-        .cast("long")
-        .alias("lp"),
-    )
-    per_doc = tok.join(F.broadcast(micro), "t").groupBy("doc_id").agg(
-        F.sum("lp").alias("s"), F.count(F.lit(1)).alias("n_tok")
-    )
-    return per_doc.select(
-        "doc_id",
-        "n_tok",
-        (-F.col("s").cast("double") / (1_000_000.0 * F.col("n_tok"))).alias("neg_logprob"),
-    )
-
-
 @_q(
     "session_window_users",
     """
@@ -3654,7 +3061,7 @@ def session_window_users(spark, sf_dir):
 
 # =====================================================================
 # Continuous-aggregate engine surface (r5): incremental refresh, tier-
-# stitched range queries, deterministic sampling, n-gram contamination
+# stitched range queries, deterministic sampling
 # =====================================================================
 
 _STITCH_T0, _STITCH_T1 = "2024-01-03 05:17:00", "2024-01-27 21:43:00"
@@ -3788,50 +3195,6 @@ def hash_sample_events(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select("event_type", "event_id")
     out = hash_ranked_sample(ev, ["event_type"], "event_id", k=40, seed=42)
     return out.select("event_type", "event_id", "sample_rank")
-
-
-def _contamination_sql() -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH
-
-    n = 13
-    return f"""
-    WITH train AS (SELECT doc_id, tokens FROM '{SEQFIX_PATH}'),
-         holdout AS (SELECT 'ev-' || doc_id AS doc_id, tokens[12:61] AS tokens
-                     FROM '{SEQFIX_PATH}'
-                     WHERE CAST(substr(doc_id, 5, 10) AS BIGINT) % 997 = 0),
-         tg AS (SELECT DISTINCT doc_id AS train_id,
-                       CAST('0x' || substr(md5(array_to_string(tokens[i:i+{n - 1}], ',')), 1, 15)
-                            AS BIGINT) AS ngram_key
-                FROM train, unnest(generate_series(1, len(tokens) - {n - 1})) AS t(i)),
-         hg AS (SELECT DISTINCT doc_id AS holdout_id,
-                       CAST('0x' || substr(md5(array_to_string(tokens[i:i+{n - 1}], ',')), 1, 15)
-                            AS BIGINT) AS ngram_key
-                FROM holdout, unnest(generate_series(1, len(tokens) - {n - 1})) AS t(i))
-    SELECT hg.holdout_id, tg.train_id, count(*) AS n_shared
-    FROM hg JOIN tg USING (ngram_key)
-    GROUP BY 1, 2
-    """
-
-
-@_q("ngram_contamination_seqfix", _contamination_sql())
-def ngram_contamination_seqfix(spark, sf_dir):
-    """Train/eval 13-gram contamination check (operators/dedup.
-    ngram_contamination — the GPT-3 App. C / PaLM-style decontamination
-    step): holdout docs are 50-token slices of every 997th training doc
-    (planted leakage), and each must surface its source doc with
-    n_shared = 38 distinct 13-grams. Candidates are bucket-local by
-    portable 60-bit md5 n-gram keys — never an all-pairs join."""
-    from mtsad_spark.fixture_cache import ensure_seqfix
-    from mtsad_spark.operators.dedup import ngram_contamination
-
-    seq = _seqfix_df(spark).select("doc_id", "tokens")
-    holdout = seq.filter(
-        F.substring("doc_id", 5, 10).cast("long") % 997 == 0
-    ).select(
-        F.concat(F.lit("ev-"), F.col("doc_id")).alias("doc_id"),
-        F.slice("tokens", 12, 50).alias("tokens"),
-    )
-    return ngram_contamination(seq, holdout, "doc_id", "tokens", n=13)
 
 
 def _heavy_hitters_sql() -> str:
@@ -4283,7 +3646,7 @@ def time_weighted_avg_1d(spark, sf_dir):
 
 def _lttb_sql(n_out: int = 12) -> str:
     """Chained-CTE replay of the exact-integer LTTB sweep (one CTE pair per
-    bucket step, the _ivf_trained_sql pattern — recursion with a FIXED small
+    bucket step — recursion with a FIXED small
     step count needs no recursive CTE): bucket bounds are pure integer
     division, the effective-area argmax is an all-BIGINT cross product with
     first-max/smallest-index tiebreak, so both engines select identical
@@ -4359,60 +3722,6 @@ def lttb_downsample_1h(spark, sf_dir):
     ).agg(F.sum(cents).alias("load"))
     out = lttb_downsample(hload, ["event_type"], "bucket_ts", "load", 12)
     return out.select("event_type", "bucket_ts", "load", "sel_pos")
-
-
-def _repeated_spans_sql() -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH
-
-    n = 13
-    return f"""
-    WITH base AS (SELECT doc_id, tokens FROM '{SEQFIX_PATH}'),
-         corpus AS (SELECT doc_id, tokens FROM base
-                    UNION ALL
-                    SELECT 'cp-' || doc_id AS doc_id, tokens[12:41] AS tokens
-                    FROM base
-                    WHERE CAST(substr(doc_id, 5, 10) AS BIGINT) % 997 = 0),
-         pg AS (SELECT doc_id, CAST(i - 1 AS INT) AS pos,
-                       CAST('0x' || substr(md5(array_to_string(tokens[i:i+{n - 1}], ',')), 1, 15)
-                            AS BIGINT) AS ngram_key
-                FROM corpus, unnest(generate_series(1, len(tokens) - {n - 1})) AS t(i)),
-         shared AS (SELECT ngram_key FROM (SELECT DISTINCT doc_id, ngram_key FROM pg)
-                    GROUP BY ngram_key HAVING count(*) >= 2),
-         hit AS (SELECT doc_id, pos FROM pg JOIN shared USING (ngram_key)),
-         lg AS (SELECT doc_id, pos,
-                       lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS lagp
-                FROM hit),
-         isl AS (SELECT doc_id, pos,
-                        sum(CASE WHEN pos - lagp > {n} THEN 1 ELSE 0 END)
-                          OVER (PARTITION BY doc_id ORDER BY pos) AS g
-                 FROM lg)
-    SELECT doc_id, CAST(min(pos) AS INT) AS span_start,
-           CAST(max(pos) + {n - 1} AS INT) AS span_end,
-           CAST(count(*) AS BIGINT) AS n_grams
-    FROM isl GROUP BY doc_id, g
-    """
-
-
-@_q("repeated_spans_docs", _repeated_spans_sql())
-def repeated_spans_docs(spark, sf_dir):
-    """Intra-corpus repeated-passage spans (operators/dedup.repeated_spans —
-    the within-training-set form of the 13-gram decontamination family,
-    approximating Lee et al. 2022 substring dedup): every 997th doc gets a
-    planted copy of its tokens[12..41] passage, and both the source doc and
-    the copy must report the maximal repeated span (0-based inclusive token
-    bounds + matched-window count). Shared-key generation is bucket-local by
-    portable md5 keys; documents never join documents."""
-    from mtsad_spark.fixture_cache import ensure_seqfix
-    from mtsad_spark.operators.dedup import repeated_spans
-
-    seq = _seqfix_df(spark).select("doc_id", "tokens")
-    copies = seq.filter(
-        F.substring("doc_id", 5, 10).cast("long") % 997 == 0
-    ).select(
-        F.concat(F.lit("cp-"), F.col("doc_id")).alias("doc_id"),
-        F.slice("tokens", 12, 30).alias("tokens"),
-    )
-    return repeated_spans(seq.unionByName(copies), "doc_id", "tokens", n=13)
 
 
 def _mixture_sql() -> str:
@@ -4533,95 +3842,6 @@ def rolling_corr_24h(spark, sf_dir):
 
 
 @_q(
-    "tfidf_top_terms_docs",
-    r"""
-    WITH tok AS (SELECT doc_id, unnest(regexp_extract_all(text, '\S+')) AS token
-                 FROM documents),
-         tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
-                FROM tok GROUP BY 1, 2),
-         d AS (SELECT token, count(*) AS dfreq FROM tf GROUP BY 1),
-         n AS (SELECT count(*) AS nd FROM documents),
-         s AS (SELECT tf.doc_id, tf.token, tf.tf,
-                      tf.tf * CAST(round(ln((nd + 1.0) / (dfreq + 1.0)) * 1000000, 0)
-                                   AS BIGINT) AS score_micro
-               FROM tf JOIN d USING (token), n),
-         r AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
-                              ORDER BY score_micro DESC, token) AS INT) AS rk
-               FROM s)
-    SELECT doc_id, token, tf, score_micro, rk FROM r WHERE rk <= 5
-    """,
-)
-def tfidf_top_terms_docs(spark, sf_dir):
-    """Top-5 TF-IDF keywords per document (functions/text.tfidf_top_terms):
-    smoothed idf ln((N+1)/(df+1)) rounded to a micro-int per distinct df
-    BEFORE the tf multiply (margins to the rounding boundary measured at
-    ~7e-3 micro vs ~1e-9 cross-engine ln noise at sf0.001/0.01/0.1), so
-    scores are BIGINT and the per-doc ranking is float-free."""
-    from mtsad_spark.functions.text import tfidf_top_terms
-
-    return tfidf_top_terms(_docs(spark, sf_dir), "doc_id", "text", k=5)
-
-
-def _token_drift_sql() -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH, VOCAB
-
-    v, w = VOCAB, 900
-    return f"""
-    WITH tok AS (SELECT make_timestamp(((epoch(ingest_ts)::BIGINT // {w}) * {w}) * 1000000) AS b,
-                        unnest(tokens) AS token
-                 FROM '{SEQFIX_PATH}'),
-         c AS (SELECT b, token, CAST(count(*) AS BIGINT) AS cnt
-               FROM tok GROUP BY 1, 2),
-         t AS (SELECT b, CAST(sum(cnt) AS BIGINT) AS tot FROM c GROUP BY 1),
-         pairjoin AS (SELECT coalesce(cur.b, prv.b) AS b,
-                             coalesce(cur.cnt, 0) + 1 AS cc,
-                             coalesce(prv.cnt, 0) + 1 AS cp
-                      FROM c cur FULL OUTER JOIN
-                           (SELECT make_timestamp((epoch(b)::BIGINT + {w}) * 1000000) AS b,
-                                   token, cnt FROM c) prv
-                           USING (b, token)),
-         u AS (SELECT p.b, p.cc, p.cp, tc.tot + {v} AS tcc, tpv.tot + {v} AS tpp
-               FROM pairjoin p
-               JOIN t tc ON tc.b = p.b
-               JOIN (SELECT make_timestamp((epoch(b)::BIGINT + {w}) * 1000000) AS b, tot
-                     FROM t) tpv ON tpv.b = p.b),
-         lnms AS (SELECT b, cc, tcc, tpp,
-                         CAST(round(ln(CAST(cc * tpp AS DOUBLE)
-                                       / CAST(cp * tcc AS DOUBLE)) * 1000000, 0)
-                              AS BIGINT) AS lnm
-                  FROM u),
-         terms AS (SELECT b, tcc, tpp,
-                          CAST(count(*) AS BIGINT) AS n_union,
-                          CAST(sum(cc * lnm) AS BIGINT) AS s
-                   FROM lnms GROUP BY 1, 2, 3)
-    SELECT b AS bucket_ts, n_union,
-           CAST(s + ({v} - n_union)
-                    * CAST(round(ln(CAST(tpp AS DOUBLE) / CAST(tcc AS DOUBLE))
-                                 * 1000000, 0) AS BIGINT) AS DOUBLE)
-             / (CAST(tcc AS DOUBLE) * 1e6) AS kl
-    FROM terms
-    """
-
-
-@_q("token_drift_15m_seqfix", _token_drift_sql())
-def token_drift_15m_seqfix(spark, sf_dir):
-    """Bucket-over-bucket token-distribution drift (functions/text.
-    token_distribution_drift — the tier-timeseries × tokens fusion):
-    add-one-smoothed KL(P_cur ‖ P_prev) per 15-minute ingest bucket over
-    the tokenized-sequences corpus. Every per-token term is a micro-int ln
-    of an exactly-representable integer ratio (margins measured 2e-4 micro
-    vs ~1e-9 cross-engine ln noise), the unseen-token mass collapses into
-    a closed-form complement, and the only float emission is ONE division
-    of the exact BIGINT term sum — bitwise across engines and
-    parallelism."""
-    from mtsad_spark.fixture_cache import VOCAB, ensure_seqfix
-    from mtsad_spark.functions.text import token_distribution_drift
-
-    seq = _seqfix_df(spark).select("ingest_ts", "tokens")
-    return token_distribution_drift(seq, "ingest_ts", "tokens", 900, VOCAB)
-
-
-@_q(
     "fano_burstiness_1d",
     """
     WITH c AS (SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) // 60 AS fb,
@@ -4649,49 +3869,6 @@ def fano_burstiness_1d(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events").select("event_type", "ts")
     return fano_burstiness(ev, ["event_type"], "ts", 60, 86400)
-
-
-@_q(
-    "label_centroid_affinity",
-    """
-    WITH ex AS (SELECT label AS grp, i AS dim,
-                       CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000, 0)
-                            AS BIGINT) AS micro
-                FROM embeddings,
-                     unnest(generate_series(1, len(embedding))) AS t(i)),
-         sums AS (SELECT grp, dim, CAST(sum(micro) AS BIGINT) AS s,
-                         CAST(count(*) AS BIGINT) AS n
-                  FROM ex GROUP BY 1, 2),
-         cen AS (SELECT grp, dim, n, s // n AS m FROM sums),
-         pr AS (SELECT a.grp AS group_a, b.grp AS group_b, a.dim,
-                       a.n AS n_a, b.n AS n_b, a.m AS ma, b.m AS mb
-                FROM cen a JOIN cen b ON a.dim = b.dim AND a.grp < b.grp),
-         g AS (SELECT group_a, group_b,
-                      CAST(max(n_a) AS BIGINT) AS n_a,
-                      CAST(max(n_b) AS BIGINT) AS n_b,
-                      CAST(sum(ma * mb) AS BIGINT) AS num,
-                      CAST(sum(ma * ma) AS BIGINT) AS na2,
-                      CAST(sum(mb * mb) AS BIGINT) AS nb2
-               FROM pr GROUP BY 1, 2)
-    SELECT group_a, group_b, n_a, n_b,
-           CASE WHEN na2 > 0 AND nb2 > 0
-                THEN CAST(num AS DOUBLE)
-                     / (sqrt(CAST(na2 AS DOUBLE)) * sqrt(CAST(nb2 AS DOUBLE)))
-           END AS cosine
-    FROM g
-    """,
-)
-def label_centroid_affinity(spark, sf_dir):
-    """Cosine affinity matrix between label centroids of the embeddings
-    table (operators/similarity.centroid_affinity): micro-quantized
-    components (float32·1e6 is an exact double, never a half-integer),
-    truncating integer centroids (Spark `div` ≡ DuckDB `//`, both
-    toward-zero — verified), BIGINT dot products, ONE bitwise float step.
-    The cluster-QA / semantic-drift audit over embedding groups."""
-    from mtsad_spark.operators.similarity import centroid_affinity
-
-    emb = _t(spark, sf_dir, "embeddings").select("label", "embedding")
-    return centroid_affinity(emb, "label", "embedding")
 
 
 @_q(
@@ -4754,64 +3931,6 @@ def sliding_distinct_3d_hll(spark, sf_dir):
             <= 0.05 * F.col("n_exact")
         ).alias("est_ok"),
     )
-
-
-def _token_drift_top_sql() -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH, VOCAB
-
-    v, w, k = VOCAB, 900, 10
-    return f"""
-    WITH tok AS (SELECT make_timestamp(((epoch(ingest_ts)::BIGINT // {w}) * {w}) * 1000000) AS b,
-                        unnest(tokens) AS token
-                 FROM '{SEQFIX_PATH}'),
-         c AS (SELECT b, token, CAST(count(*) AS BIGINT) AS cnt
-               FROM tok GROUP BY 1, 2),
-         t AS (SELECT b, CAST(sum(cnt) AS BIGINT) AS tot FROM c GROUP BY 1),
-         pairjoin AS (SELECT coalesce(cur.b, prv.b) AS b, token,
-                             coalesce(cur.cnt, 0) AS craw,
-                             coalesce(prv.cnt, 0) AS praw
-                      FROM c cur FULL OUTER JOIN
-                           (SELECT make_timestamp((epoch(b)::BIGINT + {w}) * 1000000) AS b,
-                                   token, cnt FROM c) prv
-                           USING (b, token)),
-         u AS (SELECT p.b, p.token, p.craw, p.praw,
-                      p.craw + 1 AS cc, p.praw + 1 AS cp,
-                      tc.tot + {v} AS tcc, tpv.tot + {v} AS tpp
-               FROM pairjoin p
-               JOIN t tc ON tc.b = p.b
-               JOIN (SELECT make_timestamp((epoch(b)::BIGINT + {w}) * 1000000) AS b,
-                            tot FROM t) tpv ON tpv.b = p.b),
-         scored AS (SELECT b, token, craw, praw,
-                           cc * CAST(round(ln(CAST(cc * tpp AS DOUBLE)
-                                             / CAST(cp * tcc AS DOUBLE)) * 1000000, 0)
-                                     AS BIGINT) AS contrib_micro
-                    FROM u),
-         r AS (SELECT *, CAST(row_number() OVER (PARTITION BY b
-                              ORDER BY abs(contrib_micro) DESC, token) AS INT) AS rk
-               FROM scored)
-    SELECT b AS bucket_ts, token, craw AS c_cur, praw AS c_prev,
-           contrib_micro, rk
-    FROM r WHERE rk <= {k}
-    """
-
-
-@_q("token_drift_top_tokens_seqfix", _token_drift_top_sql())
-def token_drift_top_tokens_seqfix(spark, sf_dir):
-    """Drift attribution (functions/text.token_drift_contributions): per
-    15-minute bucket pair, the 10 tokens with the largest absolute exact KL
-    term — the same BIGINT the KL sums, so attribution and metric agree
-    exactly; ranking is integer (|contrib| desc, token asc), float-free."""
-    from mtsad_spark.fixture_cache import VOCAB, ensure_seqfix
-    from mtsad_spark.functions.text import token_drift_contributions
-
-    seq = _seqfix_df(spark).select("ingest_ts", "tokens")
-    cnts = seq.select(
-        ((F.col("ingest_ts").cast("timestamp").cast("long") / 900).cast("long") * 900)
-        .cast("timestamp")
-        .alias("bucket_ts"),
-        F.explode("tokens").alias("token"),
-    ).groupBy("bucket_ts", "token").agg(F.count(F.lit(1)).alias("cnt"))
-    return token_drift_contributions(cnts, 900, VOCAB, k=10)
 
 
 @_q(
@@ -5481,80 +4600,6 @@ def cube_rollup_events(spark, sf_dir):
     )
 
 
-@_q(
-    "vocab_growth_docs",
-    r"""
-    WITH tok AS (SELECT source, doc_id - doc_id % 1000 AS bucket,
-                        unnest(regexp_extract_all(text, '\S+')) AS token
-                 FROM documents),
-    fo AS (SELECT source, token, min(bucket) AS bucket FROM tok GROUP BY 1, 2),
-    nt AS (SELECT source, bucket, CAST(count(*) AS BIGINT) AS new_types
-           FROM fo GROUP BY 1, 2),
-    tt AS (SELECT source, bucket, CAST(count(*) AS BIGINT) AS n_tokens
-           FROM tok GROUP BY 1, 2),
-    j AS (SELECT t.source, t.bucket, t.n_tokens,
-                 coalesce(n.new_types, 0) AS new_types
-          FROM tt t LEFT JOIN nt n USING (source, bucket))
-    SELECT source, CAST(bucket AS BIGINT) AS bucket, n_tokens,
-           CAST(new_types AS BIGINT) AS new_types,
-           CAST(sum(n_tokens) OVER w AS BIGINT) AS cum_tokens,
-           CAST(sum(new_types) OVER w AS BIGINT) AS cum_types
-    FROM j WINDOW w AS (PARTITION BY source ORDER BY bucket
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-    """,
-)
-def vocab_growth_docs(spark, sf_dir):
-    """Heaps'-law vocabulary growth per source (functions/text.vocab_growth):
-    cumulative distinct token types vs cumulative tokens at 1000-doc
-    buckets. First occurrences are map-side min(bucket) — the only windows
-    are per-source cumulative sums over BUCKET rows."""
-    from mtsad_spark.functions.text import vocab_growth
-
-    return vocab_growth(_docs(spark, sf_dir), "source", "doc_id", "text", 1000)
-
-
-@_q(
-    "lang_entropy_by_source",
-    """
-    WITH lc AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS cnt
-                FROM documents GROUP BY 1, 2),
-    agg AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n_docs,
-                   CAST(count(*) AS BIGINT) AS n_langs,
-                   CAST(sum(cnt * CAST(round(ln(cnt) * 1000000, 0) AS BIGINT))
-                        AS BIGINT) AS term
-            FROM lc GROUP BY 1)
-    SELECT source, n_docs, n_langs,
-           CAST(n_docs * CAST(round(ln(n_docs) * 1000000, 0) AS BIGINT) - term
-                AS DOUBLE) / (CAST(n_docs AS DOUBLE) * 1000000.0)
-             AS entropy_nats
-    FROM agg
-    """,
-)
-def lang_entropy_by_source(spark, sf_dir):
-    """Shannon entropy of the language mix per source — corpus-diversity
-    diagnostic for LLM-data pipelines. Exact micro-int ln discipline (the
-    token_unigram_logprob pattern): H = (n·L(n) − Σc·L(c)) / (n·10⁶) with
-    L = round(ln·10⁶) of INTEGER counts, so the sums are BIGINT and the
-    ONE division is bitwise (quantized-log semantics, both engines)."""
-    docs = _docs(spark, sf_dir)
-    lnq = lambda c: F.round(F.log(c.cast("double")) * 1000000, 0).cast("long")
-    lc = docs.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("cnt"))
-    agg = lc.groupBy("source").agg(
-        F.sum("cnt").alias("n_docs"),
-        F.count(F.lit(1)).alias("n_langs"),
-        F.sum(F.col("cnt") * lnq(F.col("cnt"))).alias("term"),
-    )
-    return agg.select(
-        "source",
-        "n_docs",
-        "n_langs",
-        (
-            (F.col("n_docs") * lnq(F.col("n_docs")) - F.col("term")).cast("double")
-            / (F.col("n_docs").cast("double") * F.lit(1000000.0))
-        ).alias("entropy_nats"),
-    )
-
-
 def _hourly_load_df(spark, sf_dir) -> DataFrame:
     """Hourly integer-cents load tier per event_type (the _HOURLY_LOAD_CTE
     twin: lv = sum of exact cents — BIGINT both engines)."""
@@ -5591,45 +4636,6 @@ def rolling_median_24h_1h(spark, sf_dir):
     )
 
 
-@_q(
-    "zipf_slope_docs",
-    r"""
-    WITH tok AS (SELECT source, unnest(regexp_extract_all(text, '\S+')) AS token
-                 FROM documents),
-    freq AS (SELECT source, token, CAST(count(*) AS BIGINT) AS cnt
-             FROM tok GROUP BY 1, 2),
-    rk AS (SELECT source, cnt,
-                  row_number() OVER (PARTITION BY source
-                                     ORDER BY cnt DESC, token ASC) AS rank
-           FROM freq),
-    xy AS (SELECT source,
-                  CAST(round(ln(rank) * 1000000, 0) AS BIGINT) AS x,
-                  CAST(round(ln(cnt) * 1000000, 0) AS BIGINT) AS y
-           FROM rk WHERE rank <= 1000),
-    mo AS (SELECT source, CAST(count(*) AS BIGINT) AS n_terms,
-                  CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-                  CAST(sum(x * y) AS BIGINT) AS sxy,
-                  CAST(sum(x * x) AS BIGINT) AS sxx
-           FROM xy GROUP BY 1)
-    SELECT source, n_terms,
-           CAST(CAST(n_terms AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy
-                AS DOUBLE)
-           / CAST(CAST(n_terms AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx
-                  AS DOUBLE) AS slope
-    FROM mo WHERE n_terms >= 2
-    """,
-)
-def zipf_slope_docs(spark, sf_dir):
-    """Zipf rank-frequency slope per source (functions/text.zipf_slope):
-    quantized-log least-squares over the top-1000 token frequencies —
-    micro-int ln of INTEGER rank/freq (the lang_entropy discipline), BIGINT
-    moment sums, DECIMAL(38)/HUGEINT cross products, ONE double division.
-    Corpus-diversity diagnostic: boilerplate sources read steeper."""
-    from mtsad_spark.functions.text import zipf_slope
-
-    return zipf_slope(_docs(spark, sf_dir), "source", "text", top_k=1000)
-
-
 def _hampel_sql(n_sigmas: float = 3.0) -> str:
     k = float(n_sigmas) * 1.4826  # shared literal: repr round-trips the double
     return (
@@ -5664,54 +4670,6 @@ def hampel_filter_1h(spark, sf_dir):
     return hampel_filter(h, ["event_type"], "bucket_ts", "lv", window=24).select(
         "event_type", "bucket_ts", "lv", "n_w", "med", "mad", "is_outlier", "robust_z"
     )
-
-
-def _bigram_pmi_sql(min_count: int = 5, top_k: int = 20) -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH
-
-    return f"""
-    WITH pr AS (SELECT source, tokens[i] % 128 AS a, tokens[i + 1] % 128 AS b
-                FROM '{SEQFIX_PATH}',
-                     unnest(generate_series(1, len(tokens) - 1)) AS t(i)),
-    cab AS (SELECT source, a, b, CAST(count(*) AS BIGINT) AS c_ab
-            FROM pr GROUP BY 1, 2, 3),
-    ca AS (SELECT source, a, CAST(sum(c_ab) AS BIGINT) AS c_a FROM cab GROUP BY 1, 2),
-    cb AS (SELECT source, b, CAST(sum(c_ab) AS BIGINT) AS c_b FROM cab GROUP BY 1, 2),
-    tot AS (SELECT source, CAST(sum(c_ab) AS BIGINT) AS n FROM cab GROUP BY 1),
-    pm AS (SELECT cab.source, cab.a, cab.b, cab.c_ab,
-                  CAST(round(ln(c_ab) * 1000000, 0) AS BIGINT)
-                  + CAST(round(ln(n) * 1000000, 0) AS BIGINT)
-                  - CAST(round(ln(c_a) * 1000000, 0) AS BIGINT)
-                  - CAST(round(ln(c_b) * 1000000, 0) AS BIGINT) AS pmi_micro
-           FROM cab JOIN ca USING (source, a) JOIN cb USING (source, b)
-                    JOIN tot USING (source)
-           WHERE c_ab >= {min_count}),
-    rk AS (SELECT *, row_number() OVER (PARTITION BY source
-                      ORDER BY pmi_micro DESC, a ASC, b ASC) AS rank FROM pm)
-    SELECT source, a, b, c_ab, pmi_micro,
-           CAST(pmi_micro AS DOUBLE) / 1000000.0 AS pmi_nats,
-           CAST(rank AS INT) AS rank
-    FROM rk WHERE rank <= {top_k}
-    """
-
-
-@_q("bigram_pmi_top_seqfix", _bigram_pmi_sql())
-def bigram_pmi_top_seqfix(spark, sf_dir):
-    """Top-20 bigram collocations per source by quantized PMI
-    (functions/text.bigram_pmi): DIVISION-FREE ranking — pmi_micro is a
-    BIGINT sum/difference of micro-int lns of INTEGER counts, so the rank
-    and the values are exact in both engines; pmi_nats is one literal
-    division. min_count=5 prunes hapax pairs. Tokens are mapped to a
-    128-class alphabet (``t % 128``) first — over the raw 50k uniform
-    vocab no bigram repeats 5× at fixture scale (0-row query); class-level
-    collocation keeps every count frame dense at ANY sf."""
-    from mtsad_spark.fixture_cache import ensure_seqfix
-    from mtsad_spark.functions.text import bigram_pmi
-
-    seq = _seqfix_df(spark).select(
-        "source", F.expr("transform(tokens, t -> t % 128)").alias("tokens")
-    )
-    return bigram_pmi(seq, "source", "tokens", min_count=5, top_k=20)
 
 
 @_q(
@@ -6181,158 +5139,6 @@ def hampel_episodes_1h(spark, sf_dir):
     )
 
 
-def _bigram_entropy_sql() -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH
-
-    return f"""
-    WITH pr AS (SELECT source, tokens[i] AS a, tokens[i + 1] AS b
-                FROM '{SEQFIX_PATH}',
-                     unnest(generate_series(1, len(tokens) - 1)) AS t(i)),
-    cab AS (SELECT source, a, b, CAST(count(*) AS BIGINT) AS c_ab
-            FROM pr GROUP BY 1, 2, 3),
-    ca AS (SELECT source, a, CAST(sum(c_ab) AS BIGINT) AS c_a
-           FROM cab GROUP BY 1, 2),
-    agg AS (SELECT cab.source,
-                   CAST(sum(c_ab) AS BIGINT) AS n_bigrams,
-                   CAST(count(DISTINCT cab.a) AS BIGINT) AS vocab_cur,
-                   CAST(sum(c_ab * (CAST(round(ln(c_a) * 1000000, 0) AS BIGINT)
-                                    - CAST(round(ln(c_ab) * 1000000, 0) AS BIGINT)))
-                        AS BIGINT) AS term
-            FROM cab JOIN ca USING (source, a) GROUP BY 1)
-    SELECT source, n_bigrams, vocab_cur,
-           CAST(term AS DOUBLE) / (CAST(n_bigrams AS DOUBLE) * 1000000.0)
-             AS cond_entropy_nats
-    FROM agg
-    """
-
-
-@_q("bigram_entropy_seqfix", _bigram_entropy_sql())
-def bigram_entropy_seqfix(spark, sf_dir):
-    """Conditional bigram entropy H(next|cur) per source over the
-    north-star tokenized sequences (functions/text.
-    bigram_conditional_entropy): quantized-log discipline — every ln is
-    taken on an INTEGER count, term sums are BIGINT, ONE final division —
-    so both engines agree bitwise. Near-uniform seqfix tokens read close
-    to ln(vocab); templated corpora would read near 0."""
-    from mtsad_spark.fixture_cache import ensure_seqfix
-    from mtsad_spark.functions.text import bigram_conditional_entropy
-
-    seq = _seqfix_df(spark).select("source", "tokens")
-    return bigram_conditional_entropy(seq, "source", "tokens")
-
-
-def _source_jaccard_sql() -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH
-
-    return f"""
-    WITH g AS (SELECT DISTINCT source,
-                      CAST('0x' || substr(md5(array_to_string(tokens[i:i + 1], ',')),
-                                          1, 15) AS BIGINT) AS k
-               FROM '{SEQFIX_PATH}',
-                    unnest(generate_series(1, len(tokens) - 1)) AS t(i)),
-    sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n_grams FROM g GROUP BY 1),
-    inter AS (SELECT a.source AS group_a, b.source AS group_b,
-                     CAST(count(*) AS BIGINT) AS n_inter
-              FROM g a JOIN g b ON a.k = b.k AND a.source < b.source
-              GROUP BY 1, 2)
-    SELECT group_a, group_b, sa.n_grams AS n_a, sb.n_grams AS n_b, n_inter,
-           CAST(n_inter AS DOUBLE)
-             / CAST(sa.n_grams + sb.n_grams - n_inter AS DOUBLE) AS jaccard
-    FROM inter
-    JOIN sz sa ON sa.source = inter.group_a
-    JOIN sz sb ON sb.source = inter.group_b
-    """
-
-
-@_q("source_jaccard_seqfix", _source_jaccard_sql())
-def source_jaccard_seqfix(spark, sf_dir):
-    """Pairwise cross-source bigram Jaccard over the tokenized sequences
-    (operators/dedup.source_ngram_jaccard): the mixture-redundancy matrix —
-    distinct portable md5 2-gram keys per source, gram-keyed equi-self-join
-    (bucket-local, |sources|²-bounded pair rows), three BIGINTs + ONE
-    division. Orders the output for a stable driver hash."""
-    from mtsad_spark.fixture_cache import ensure_seqfix
-    from mtsad_spark.operators.dedup import source_ngram_jaccard
-
-    seq = _seqfix_df(spark).select("source", "tokens")
-    return source_ngram_jaccard(seq, "source", "tokens", n=2)
-
-
-def _token_novelty_sql() -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH
-
-    w = 900
-    return f"""
-    WITH tok AS (SELECT make_timestamp(((epoch(ingest_ts)::BIGINT // {w}) * {w})
-                                       * 1000000) AS bucket_ts,
-                        unnest(tokens) AS token
-                 FROM '{SEQFIX_PATH}'),
-    pb AS (SELECT bucket_ts, CAST(count(*) AS BIGINT) AS n_tokens,
-                  CAST(count(DISTINCT token) AS BIGINT) AS n_distinct
-           FROM tok GROUP BY 1),
-    fo AS (SELECT token, min(bucket_ts) AS bucket_ts FROM tok GROUP BY 1),
-    nv AS (SELECT bucket_ts, CAST(count(*) AS BIGINT) AS n_novel
-           FROM fo GROUP BY 1)
-    SELECT pb.bucket_ts, pb.n_tokens, pb.n_distinct,
-           CAST(coalesce(nv.n_novel, 0) AS BIGINT) AS n_novel,
-           CAST(coalesce(nv.n_novel, 0) AS DOUBLE)
-             / CAST(pb.n_distinct AS DOUBLE) AS novelty_rate
-    FROM pb LEFT JOIN nv USING (bucket_ts)
-    """
-
-
-@_q("token_novelty_15m_seqfix", _token_novelty_sql())
-def token_novelty_15m_seqfix(spark, sf_dir):
-    """Novel-token rate per 15-min ingest bucket (functions/text.
-    token_novelty — the vocabulary-shift leading indicator next to the KL
-    drift): a token is novel in the bucket of its corpus-wide FIRST
-    occurrence (map-side min(bucket), never an ordered scan);
-    novelty_rate is ONE division of exact BIGINTs."""
-    from mtsad_spark.fixture_cache import ensure_seqfix
-    from mtsad_spark.functions.text import token_novelty
-
-    seq = _seqfix_df(spark).select("ingest_ts", "tokens")
-    return token_novelty(seq, "ingest_ts", "tokens", 900)
-
-
-def _token_entropy_sql() -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH
-
-    w = 900
-    return f"""
-    WITH tok AS (SELECT make_timestamp(((epoch(ingest_ts)::BIGINT // {w}) * {w})
-                                       * 1000000) AS bucket_ts,
-                        unnest(tokens) AS token
-                 FROM '{SEQFIX_PATH}'),
-    c AS (SELECT bucket_ts, token, CAST(count(*) AS BIGINT) AS cnt
-          FROM tok GROUP BY 1, 2),
-    agg AS (SELECT bucket_ts, CAST(sum(cnt) AS BIGINT) AS n_tokens,
-                   CAST(count(*) AS BIGINT) AS n_distinct,
-                   CAST(sum(cnt * CAST(round(ln(cnt) * 1000000, 0) AS BIGINT))
-                        AS BIGINT) AS term
-            FROM c GROUP BY 1)
-    SELECT bucket_ts, n_tokens, n_distinct,
-           CAST(n_tokens * CAST(round(ln(n_tokens) * 1000000, 0) AS BIGINT) - term
-                AS DOUBLE) / (CAST(n_tokens AS DOUBLE) * 1000000.0)
-             AS entropy_nats
-    FROM agg
-    """
-
-
-@_q("token_entropy_15m_seqfix", _token_entropy_sql())
-def token_entropy_15m_seqfix(spark, sf_dir):
-    """Per-bucket token-distribution Shannon entropy (functions/text.
-    token_bucket_entropy): scores each 15-min ingest bucket alone — a
-    collapse to templated output is visible without a reference bucket,
-    complementing the consecutive-bucket KL drift. Quantized-log
-    discipline: BIGINT term sums, ONE final division, bitwise."""
-    from mtsad_spark.fixture_cache import ensure_seqfix
-    from mtsad_spark.functions.text import token_bucket_entropy
-
-    seq = _seqfix_df(spark).select("ingest_ts", "tokens")
-    return token_bucket_entropy(seq, "ingest_ts", "tokens", 900)
-
-
 @_q(
     "asof_tolerance_events",
     _hourly_cte()
@@ -6485,15 +5291,9 @@ _PRIORITY = [
     # this form
     "rolling_median_24h_1h",
     "hampel_filter_1h",
-    "zipf_slope_docs",
-    "bigram_entropy_seqfix",
-    "source_jaccard_seqfix",
-    "bigram_pmi_top_seqfix",
     "percentile_rank_1h",
     "tier_consistency_audit",
     "asof_tolerance_events",
-    "token_novelty_15m_seqfix",
-    "token_entropy_15m_seqfix",
     "hampel_episodes_1h",
     "rollup_multi_1h",
     "cusum_alarm_onsets_1h",
@@ -6508,15 +5308,10 @@ _PRIORITY = [
     "cusum_scores_1h",
     "time_weighted_avg_1d",
     "lttb_downsample_1h",
-    "repeated_spans_docs",
     "mixture_sample_seqfix",
     "rolling_corr_24h",
-    "tfidf_top_terms_docs",
-    "token_drift_15m_seqfix",
     "fano_burstiness_1d",
-    "label_centroid_affinity",
     "sliding_distinct_3d_hll",
-    "token_drift_top_tokens_seqfix",
     "session_concurrency_1m",
     "cohort_retention_1d",
     "funnel_view_click_purchase_1d",
@@ -6529,19 +5324,15 @@ _PRIORITY = [
     "spearman_pairs_1h",
     "trimmed_mean_1h",
     "cube_rollup_events",
-    "vocab_growth_docs",
-    "lang_entropy_by_source",
-    "ivf_ann_embeddings",
     "histogram_tier_1d_composed",
     "histogram_quantile_p95_1h",
     "compacted_tier_read_1h",
     # (a0) NEW r5 capability — incremental continuous-aggregate refresh,
-    # tier-stitched range query, deterministic sampling, 13-gram
-    # contamination — never driver-checked
+    # tier-stitched range query, deterministic sampling — never
+    # driver-checked
     "continuous_aggregate_refresh",
     "stitched_range_agg",
     "hash_sample_events",
-    "ngram_contamination_seqfix",
     "token_heavy_hitters_seqfix",
     "zorder_key_events",
     "stored_range_query",
@@ -6559,7 +5350,6 @@ _PRIORITY = [
     # Horner); kernel bitmap scores joined to the grid twin; returning-users
     # left-join semantics; exact dedup without the respread tax
     "ensemble_stacking_1h",
-    "rolling_hash_fingerprints_docs",
     "bitmap_scores_1h",
     "returning_users_1d",
     "dedup_exact_docs",
@@ -6597,7 +5387,6 @@ _PRIORITY = [
     # (d) oldest remaining driver-greens (last attested r2) fill the window
     "top_orders_by_revenue",
     "mktsegment_totals",
-    "tpch_q3_style",
 ]
 _REG = {
     **{k: _REG[k] for k in _PRIORITY if k in _REG},

@@ -230,45 +230,6 @@ def ensure_mat_fixture() -> tuple[str, str]:
     return MAT_PATH, MAT_ORACLE_PATH
 
 
-PLANES_PATH = f"{CACHE_DIR}/lsh_planes.parquet"
-PLANES_N, PLANES_DIM, PLANES_SEED, PLANES_TABLES = 8, 64, 42, 3
-
-
-def ensure_planes_fixture() -> str:
-    """The EXACT hyperplanes operators/similarity.hyperplane_buckets embeds as
-    literals (RandomState(seed + 7919*t).randn(n_planes, dim) per table), as
-    shared parquet (tbl, plane_idx, plane DOUBLE[]) so DuckDB can reproduce
-    the sign-bit buckets bit-for-bit. Safe cross-engine because the fixture
-    corpus' sign margins are huge: min |v·plane| ≥ 4.9e-6 over every sf dir,
-    table and synthesized dup — a million times the ~1e-15 dot-product
-    association noise between the engines (measured in-round; margins are a
-    pure function of the deterministic fixtures)."""
-    if os.path.exists(PLANES_PATH):
-        return PLANES_PATH
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tbls, idxs, planes = [], [], []
-    for t in range(PLANES_TABLES):
-        P = np.random.RandomState(PLANES_SEED + 7919 * t).randn(PLANES_N, PLANES_DIM)
-        for i in range(PLANES_N):
-            tbls.append(t)
-            idxs.append(i)
-            planes.append(P[i].tolist())
-    table = pa.table(
-        {
-            "tbl": pa.array(tbls, type=pa.int64()),
-            "plane_idx": pa.array(idxs, type=pa.int64()),
-            "plane": pa.array(planes, type=pa.list_(pa.float64())),
-        }
-    )
-    os.makedirs(CACHE_DIR, exist_ok=True)
-    tmp = f"{PLANES_PATH}.tmp.{os.getpid()}"
-    pq.write_table(table, tmp)
-    os.replace(tmp, PLANES_PATH)
-    return PLANES_PATH
-
-
 CSV_FIX_PATH = f"{CACHE_DIR}/mts_fixture.csv"
 TSV_FIX_PATH = f"{CACHE_DIR}/mts_fixture.tsv"
 SERIES_TXT_PATH = f"{CACHE_DIR}/series_fixture.txt"
@@ -441,120 +402,3 @@ def ensure_signal_fixture() -> tuple[str, str, str]:
         pdf.to_parquet(tmp)
         os.replace(tmp, path)
     return SIGNAL_FIX_PATH, SIGNAL_FFT_ORACLE_PATH, SIGNAL_HP_ORACLE_PATH
-
-
-MEDIA_FIX_PATH = f"{CACHE_DIR}/media_fixture.parquet"
-MEDIA_FEAT_ORACLE_PATH = f"{CACHE_DIR}/media_features_expected.parquet"
-MEDIA_FRAMES_ORACLE_PATH = f"{CACHE_DIR}/media_frames_expected.parquet"
-MEDIA_N, MEDIA_SEED, MEDIA_NFEAT, MEDIA_VIDEO_N = 60, 42, 8, 30
-
-
-def ensure_media_fixture() -> tuple[str, str, str]:
-    """Shared media table (real PNG/WAV/Y4M payloads) plus EXPECTED outputs
-    derived from the SOURCE arrays — the pre-encode pixels/samples/frames —
-    never from the decoders, so the driver cross-checks the full
-    encode → Spark mapInPandas demux/decode → featurize path against source
-    truth (same independence argument as the ARFF/MAT fixtures; the shared
-    piece is the deterministic ENCODERS, whose bit-exact round-trips are
-    separately pytest-proven).
-
-    Three parquets: the media table (first MEDIA_N items of
-    multimodal.synth_media_items — identical to synth_media's rows), the
-    expected decode_features output (feature formulas replicated here in
-    plain numpy from the sources, rounded to 6), and the expected
-    sample_frames output for the first MEDIA_VIDEO_N items (frame clock
-    replayed from source frame counts; frame md5 = md5 of the PNG-encoded
-    source frame)."""
-    import hashlib
-
-    if (
-        os.path.exists(MEDIA_FIX_PATH)
-        and os.path.exists(MEDIA_FEAT_ORACLE_PATH)
-        and os.path.exists(MEDIA_FRAMES_ORACLE_PATH)
-    ):
-        return MEDIA_FIX_PATH, MEDIA_FEAT_ORACLE_PATH, MEDIA_FRAMES_ORACLE_PATH
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from mtsad_spark.functions.codecs import encode_png
-    from mtsad_spark.functions.multimodal import synth_media_items
-
-    def unit(v: np.ndarray) -> np.ndarray:
-        n = np.linalg.norm(v)
-        return v / n if n > 0 else v
-
-    media = {k: [] for k in
-             ("media_id", "kind", "payload", "width", "height", "duration_ms", "codec")}
-    feats = {k: [] for k in ("media_id", "kind", "width", "height", "n_bytes", "features")}
-    frames_out = {k: [] for k in ("media_id", "frame_idx", "frame_ts_ms", "frame_md5")}
-    for (i, kind, payload, w, h, dur, codec), src in synth_media_items(
-        MEDIA_N, MEDIA_SEED, real_codecs=True
-    ):
-        for col, val in zip(media, (i, kind, bytes(payload), w, h, dur, codec)):
-            media[col].append(val)
-        if kind == "image":
-            gray = src[:, :, :3].mean(axis=2)
-            v = unit(np.histogram(gray, bins=MEDIA_NFEAT, range=(0.0, 256.0))[0]
-                     .astype(np.float64))
-        elif kind == "audio":
-            x = src.reshape(-1, 1).astype(np.float64).mean(axis=1)
-            segs = np.array_split(x, MEDIA_NFEAT)
-            v = unit(np.array([np.sqrt((s * s).mean()) if len(s) else 0.0 for s in segs]))
-        else:
-            luma = src[:, :, :, 0].astype(np.float64)
-            v = unit(np.histogram(luma, bins=MEDIA_NFEAT, range=(0.0, 256.0))[0]
-                     .astype(np.float64))
-        for col, val in zip(
-            feats, (i, kind, w, h, len(bytes(payload)), np.round(v, 6).tolist())
-        ):
-            feats[col].append(val)
-        if kind == "video" and i < MEDIA_VIDEO_N:
-            n_frames = src.shape[0]
-            clip_ms = n_frames * 1000.0 * 1 / 4  # fps 4:1, mirrors sample_frames
-            fi, t = 0, 0.0
-            while t < clip_ms:
-                pick = min(int(t * 4 / (1000.0 * 1)), n_frames - 1)
-                frames_out["media_id"].append(i)
-                frames_out["frame_idx"].append(fi)
-                frames_out["frame_ts_ms"].append(int(t))
-                frames_out["frame_md5"].append(
-                    hashlib.md5(encode_png(src[pick])).hexdigest()
-                )
-                fi, t = fi + 1, t + 1000
-    os.makedirs(CACHE_DIR, exist_ok=True)
-    schemas = {
-        MEDIA_FIX_PATH: pa.table(
-            {
-                "media_id": pa.array(media["media_id"], type=pa.int64()),
-                "kind": pa.array(media["kind"]),
-                "payload": pa.array(media["payload"], type=pa.binary()),
-                "width": pa.array(media["width"], type=pa.int32()),
-                "height": pa.array(media["height"], type=pa.int32()),
-                "duration_ms": pa.array(media["duration_ms"], type=pa.int32()),
-                "codec": pa.array(media["codec"]),
-            }
-        ),
-        MEDIA_FEAT_ORACLE_PATH: pa.table(
-            {
-                "media_id": pa.array(feats["media_id"], type=pa.int64()),
-                "kind": pa.array(feats["kind"]),
-                "width": pa.array(feats["width"], type=pa.int32()),
-                "height": pa.array(feats["height"], type=pa.int32()),
-                "n_bytes": pa.array(feats["n_bytes"], type=pa.int32()),
-                "features": pa.array(feats["features"], type=pa.list_(pa.float64())),
-            }
-        ),
-        MEDIA_FRAMES_ORACLE_PATH: pa.table(
-            {
-                "media_id": pa.array(frames_out["media_id"], type=pa.int64()),
-                "frame_idx": pa.array(frames_out["frame_idx"], type=pa.int32()),
-                "frame_ts_ms": pa.array(frames_out["frame_ts_ms"], type=pa.int32()),
-                "frame_md5": pa.array(frames_out["frame_md5"]),
-            }
-        ),
-    }
-    for path, table in schemas.items():
-        tmp = f"{path}.tmp.{os.getpid()}"
-        pq.write_table(table, tmp)
-        os.replace(tmp, path)
-    return MEDIA_FIX_PATH, MEDIA_FEAT_ORACLE_PATH, MEDIA_FRAMES_ORACLE_PATH

@@ -1,5 +1,6 @@
-"""Text analysis for training-data pipelines: token counting, quality
-scoring, language-ID heuristic, document fingerprinting.
+"""Text analysis for training-data pipelines: whitespace token counting,
+heuristic quality scoring, a language-ID heuristic, document fingerprints
+and corpus statistics (vocabulary growth, Zipf slope).
 
 Everything is built-in ``pyspark.sql.functions`` string/regex expressions —
 whole-stage-codegen'd, pushdown-friendly, no Python. Each function ADDS
@@ -23,12 +24,6 @@ _LANG_MARKERS: dict[str, list[str]] = {
 def whitespace_token_count(text: Column) -> Column:
     """Tokens = maximal non-space runs (regexp_count, JVM-side)."""
     return F.regexp_count(text, F.lit(r"\S+"))
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-flavored proxy: word pieces + digits + punctuation as separate
-    tokens (the GPT-2 pre-tokenizer's coarse shape, public regex)."""
-    return F.regexp_count(text, F.lit(r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"))
 
 
 def with_quality_features(df: DataFrame, text_col: str) -> DataFrame:
@@ -123,254 +118,6 @@ def rolling_hash_fingerprints(
     )
 
 
-def rolling_polynomial_fingerprints(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    window: int = 32,
-    stride: int = 16,
-    base: int = 257,
-    mod: int = (1 << 31) - 1,
-) -> DataFrame:
-    """Rabin–Karp POLYNOMIAL fingerprints (the rolling-hash family proper,
-    Schleimer/Wilkerson/Aiken winnowing, SIGMOD'03):
-    ``fp(p) = Σ_j code(c_{p+j})·B^{w−1−j} mod M`` for every stride-aligned
-    full window of the whitespace-normalized text. Evaluated by Horner's rule
-    with a mod after every step, so intermediates stay < M·B + 255 < 2^39 —
-    BIGINT-exact in ANY engine (the portable-arithmetic move of the md5
-    MinHash/SimHash variants, with no hash library dependence at all).
-
-    Spark-first shape: the per-position Horner chain is a pure JVM column
-    expression under whole-stage codegen — O(w) work per position instead of
-    the O(1) sequential-carry recurrence, but embarrassingly parallel across
-    positions/docs, which at corpus scale beats any per-doc sequential scan.
-    Docs shorter than ``window`` emit no fingerprint (full windows only, so
-    every fingerprint hashes exactly ``window`` character codes)."""
-    norm = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
-    positions = F.when(
-        F.length(norm) >= window,
-        F.sequence(F.lit(0), F.length(norm) - window, F.lit(stride)),
-    ).otherwise(F.array().cast("array<int>"))
-    # explode positions FIRST, then run the Horner chain as a flat column
-    # expression over (doc, position) rows — a w-deep chain inside a
-    # higher-order-function lambda re-inlines the norm expression per step
-    # and overflows the analyzer's resolution fixpoint at w=32
-    d = df.withColumn("_norm", norm).select(
-        F.col(id_col), "_norm", F.posexplode(positions).alias("pos", "p")
-    )
-    h = F.lit(0).cast("long")
-    for j in range(window):
-        code = F.ascii(F.substr(F.col("_norm"), F.col("p") + F.lit(j + 1), F.lit(1)))
-        h = (h * base + code) % mod
-    return d.select(F.col(id_col), "pos", h.alias("fp"))
-
-
-def tfidf_top_terms(
-    df: DataFrame, id_col: str, text_col: str, k: int = 5
-) -> DataFrame:
-    """Top-``k`` TF-IDF keywords per document — the classic
-    characteristic-term extractor (public IR practice; smoothed idf
-    ``ln((N+1)/(df+1))`` of scikit-learn's ``smooth_idf`` family) over the
-    whitespace tokenization the quality/token-count ops use.
-
-    Exactness: idf is rounded to a MICRO-INT per distinct document
-    frequency BEFORE any multiplication (the token_unigram_logprob ln
-    discipline — cross-engine ln noise is ~1e-9 micro-units; fixture
-    margins to the rounding boundary were measured at ~1e-2), so
-    ``score_micro = tf · idf_micro`` is BIGINT-exact and the per-doc
-    ranking (score desc, token asc) is engine-independent with no float
-    comparisons anywhere.
-
-    Scale shape: tf is a map-side-combined (doc, token) count; df an
-    algebraic token count over it; N one scalar agg crossJoined (AQE
-    broadcasts the 1-row frame). The only windows run per DOCUMENT over its
-    distinct tokens — doc-bounded, never corpus-proportional. The tf frame
-    feeds both the df aggregate and the score join, so it is
-    scope-persisted.
-
-    Returns ``(id, token, tf, score_micro, rk)`` with ``rk`` in 1..k.
-    """
-    from pyspark.sql import Window
-
-    from mtsad_spark.plans.scope import scoped_persist
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    tok = df.select(
-        F.col(id_col),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("token"),
-    ).filter(F.col("token") != "")  # Spark split keeps boundary empties
-    tf = scoped_persist(
-        tok.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("_df"))
-    n = df.agg(F.count(F.lit(1)).alias("_N"))
-    idf_micro = F.round(
-        F.log((F.col("_N") + F.lit(1)).cast("double") / (F.col("_df") + F.lit(1)))
-        * F.lit(1_000_000),
-        0,
-    ).cast("long")
-    scored = (
-        tf.join(dfreq, "token")
-        .crossJoin(n)
-        .withColumn("score_micro", F.col("tf") * idf_micro)
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.desc("score_micro"), F.asc("token")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(id_col, "token", "tf", "score_micro", "rk")
-    )
-
-
-def token_distribution_drift(
-    df: DataFrame,
-    ts_col: str,
-    tokens_col: str,
-    bucket_width_s: int,
-    vocab: int,
-) -> DataFrame:
-    """Token-distribution drift between consecutive time buckets — the
-    tier-timeseries × tokens fusion: smoothed KL divergence
-    ``KL(P_cur ‖ P_prev)`` of add-one-smoothed per-bucket token
-    distributions (``p(t) = (cnt+1)/(total+V)``), the standard
-    corpus-mix / vocabulary-shift monitor for a training-data ingest
-    stream.
-
-    EXACT decomposition: with ``c' = cnt+1`` and ``T' = total+V`` integers,
-    each union-support term is ``c'_cur · lnm`` where
-    ``lnm = round(ln((c'_cur·T'_prev)/(c'_prev·T'_cur))·1e6)`` is a
-    MICRO-INT of an exactly-representable integer ratio (products stay
-    below 2^53 — contract: ``cnt·T < 2^53``), tokens unseen in BOTH
-    buckets collapse into the closed-form complement
-    ``(V − |union|)·round(ln(T'_prev/T'_cur)·1e6)``, and the ONLY float
-    emission is one division of the exact BIGINT term sum by
-    ``T'_cur·1e6`` — bitwise across engines, order-independent across
-    parallelism (integer partial sums, the sequences-rollup discipline).
-
-    Scale shape: the explode → (bucket, token) count is map-side combined;
-    the pair join is count-frame-sized (vocab-bounded per bucket), never
-    raw-token-sized; per-bucket totals are a #buckets-row frame.
-
-    Returns ``(bucket_ts, n_union, kl)`` for every bucket with a
-    predecessor; ``n_union`` = tokens observed in either bucket of the pair.
-    """
-    if vocab < 1:
-        raise ValueError(f"vocab must be >= 1, got {vocab}")
-    tok = df.select(
-        _time_bucket(ts_col, bucket_width_s).alias("bucket_ts"),
-        F.explode(tokens_col).alias("token"),
-    )
-    cnts = tok.groupBy("bucket_ts", "token").agg(F.count(F.lit(1)).alias("cnt"))
-    return token_drift_from_counts(cnts, bucket_width_s, vocab)
-
-
-def token_drift_from_counts(
-    cnts: DataFrame, bucket_width_s: int, vocab: int
-) -> DataFrame:
-    """The drift stage of :func:`token_distribution_drift` over a
-    PRE-COUNTED histogram tier ``(bucket_ts, token, cnt)`` — the seam the
-    STREAMING form shares with batch: a continuous-aggregate ingest
-    (``plans/continuous`` with ``keys=[token]``) maintains the per-bucket
-    token counts incrementally, and this read-path computes the identical
-    bitwise KL from the stored tier (stream ≡ batch asserted in
-    tests/test_streaming.py). ``bucket_ts`` must already be aligned to
-    ``bucket_width_s`` (re-bucket finer tiers by integer cnt sums first —
-    exact)."""
-    u, tc, tp, lnm = _drift_terms(cnts, bucket_width_s, vocab)
-    terms = u.groupBy("bucket_ts", "tot", "tot_prev").agg(
-        F.count(F.lit(1)).alias("n_union"),
-        F.sum(F.col("_cc") * lnm).alias("_s"),
-    )
-    lnm0 = F.round(
-        F.log(tp.cast("double") / tc.cast("double")) * F.lit(1_000_000), 0
-    ).cast("long")
-    total_micro = F.col("_s") + (F.lit(int(vocab)) - F.col("n_union")) * lnm0
-    return terms.select(
-        "bucket_ts",
-        "n_union",
-        (total_micro.cast("double") / (tc.cast("double") * F.lit(1e6))).alias("kl"),
-    )
-
-
-def _drift_terms(cnts: DataFrame, bucket_width_s: int, vocab: int):
-    """Shared consecutive-bucket-pair term frame of the drift family:
-    returns ``(u, tc, tp, lnm)`` — the union-support frame with smoothed
-    counts ``_cc``/``_cp`` and per-bucket totals, the smoothed total
-    column expressions, and the micro-int ln of the exact integer ratio."""
-    from mtsad_spark.plans.scope import scoped_persist
-
-    if vocab < 1:
-        raise ValueError(f"vocab must be >= 1, got {vocab}")
-    w = F.lit(int(bucket_width_s)).cast("long")
-    cnts = scoped_persist(cnts.select("bucket_ts", "token", "cnt"))
-    totals = cnts.groupBy("bucket_ts").agg(F.sum("cnt").alias("tot"))
-    tprev = totals.select(
-        (F.col("bucket_ts").cast("long") + w).cast("timestamp").alias("bucket_ts"),
-        F.col("tot").alias("tot_prev"),
-    )
-    pairs = totals.join(tprev, "bucket_ts")  # buckets having a predecessor
-    cur = cnts.select("bucket_ts", "token", F.col("cnt").alias("c_cur"))
-    prv = cnts.select(
-        (F.col("bucket_ts").cast("long") + w).cast("timestamp").alias("bucket_ts"),
-        "token",
-        F.col("cnt").alias("c_prev"),
-    )
-    u = (
-        cur.join(prv, ["bucket_ts", "token"], "full_outer")
-        .join(pairs, "bucket_ts")  # inner: drops edge buckets with no pair
-        .withColumn("_cc", F.coalesce(F.col("c_cur"), F.lit(0)) + F.lit(1))
-        .withColumn("_cp", F.coalesce(F.col("c_prev"), F.lit(0)) + F.lit(1))
-    )
-    tc = F.col("tot") + F.lit(int(vocab))
-    tp = F.col("tot_prev") + F.lit(int(vocab))
-    lnm = F.round(
-        F.log((F.col("_cc") * tp).cast("double") / (F.col("_cp") * tc).cast("double"))
-        * F.lit(1_000_000),
-        0,
-    ).cast("long")
-    return u, tc, tp, lnm
-
-
-def token_drift_contributions(
-    cnts: DataFrame, bucket_width_s: int, vocab: int, k: int = 10
-) -> DataFrame:
-    """WHICH tokens drove the drift — the attribution companion of
-    :func:`token_drift_from_counts`: per bucket pair, the top-``k``
-    union-support tokens by absolute exact KL term
-    ``contrib_micro = (cnt_cur+1)·lnm`` (the same BIGINT the KL sums, so
-    attribution and metric agree exactly). Ranking is (|contrib| desc,
-    token asc) on integers — float-free, engine-independent. The only
-    window runs per BUCKET over its union tokens (vocab-bounded).
-
-    Returns ``(bucket_ts, token, c_cur, c_prev, contrib_micro, rk)`` with
-    raw (unsmoothed) counts, 0 when the token is absent from a side.
-    """
-    from pyspark.sql import Window
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    u, tc, tp, lnm = _drift_terms(cnts, bucket_width_s, vocab)
-    scored = u.withColumn("contrib_micro", F.col("_cc") * lnm)
-    wnd = Window.partitionBy("bucket_ts").orderBy(
-        F.desc(F.abs(F.col("contrib_micro"))), F.asc("token")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(wnd))
-        .filter(F.col("rk") <= k)
-        .select(
-            "bucket_ts",
-            "token",
-            F.coalesce(F.col("c_cur"), F.lit(0)).cast("long").alias("c_cur"),
-            F.coalesce(F.col("c_prev"), F.lit(0)).cast("long").alias("c_prev"),
-            "contrib_micro",
-            "rk",
-        )
-    )
-
-
 def vocab_growth(
     df: DataFrame,
     group_col: str,
@@ -383,7 +130,7 @@ def vocab_growth(
     empirical Heaps'-law curve (``V(n) ≈ K·n^β``, classic corpus
     statistics) used to diagnose dedup quality and corpus diversity in
     LLM-data pipelines. Beyond-reference pipeline surface over the same
-    whitespace tokenization as the quality/TF-IDF ops.
+    whitespace tokenization as the quality ops.
 
     Scale shape: the "first occurrence" of each type is a map-side-combined
     ``min(bucket)`` over (group, token) — never an ordered scan; per-bucket
@@ -502,258 +249,4 @@ def zipf_slope(
             "n_terms",
             (num.cast("double") / den.cast("double")).alias("slope"),
         )
-    )
-
-
-def bigram_conditional_entropy(
-    df: DataFrame,
-    group_col: str,
-    tokens_col: str,
-) -> DataFrame:
-    """Conditional bigram entropy H(next | current) per group over
-    pre-tokenized sequences — the entropy-rate proxy that separates
-    repetitive/templated token streams (low H) from diverse ones, a
-    standard corpus-quality diagnostic next to :func:`zipf_slope` on the
-    north-star tokenized shape (BASELINE.json input_hint).
-
-    ``H = Σ_{ab} c_ab · (L(c_a) − L(c_ab)) / (10⁶ · N)`` with
-    L = round(ln·10⁶) of the INTEGER counts (the lang_entropy quantized-log
-    discipline: each ln is taken on an integer, never on a ratio, so the
-    term sums are BIGINT and engine-portable; the ONE division is final).
-    ``c_ab`` = bigram count, ``c_a = Σ_b c_ab`` = continuation total,
-    ``N = Σ c_ab``.
-
-    Scale shape: bigram pairs come from an ARRAY expression
-    (``arrays_zip`` of two slices — JVM-side, no Python) exploded once;
-    both count frames are map-side-combined groupBys bounded by observed
-    bigram vocabulary; docs shorter than 2 tokens contribute nothing.
-
-    Returns ``(group, n_bigrams, vocab_cur, cond_entropy_nats)``.
-    """
-    pair = F.expr(
-        f"CASE WHEN size({tokens_col}) >= 2 THEN "
-        f"arrays_zip(slice({tokens_col}, 1, size({tokens_col}) - 1), "
-        f"slice({tokens_col}, 2, size({tokens_col}) - 1)) "
-        f"ELSE array() END"
-    )
-    d = (
-        df.select(F.col(group_col).alias("grp"), F.explode(pair).alias("_p"))
-        .select("grp", F.col("_p")["0"].alias("_a"), F.col("_p")["1"].alias("_b"))
-    )
-    from mtsad_spark.plans.scope import scoped_persist
-
-    # cab feeds BOTH the continuation-total aggregate and the entropy join —
-    # persist or the corpus-wide bigram explode+count runs twice (repo rule)
-    cab = scoped_persist(
-        d.groupBy("grp", "_a", "_b").agg(F.count(F.lit(1)).alias("c_ab"))
-    )
-    ca = cab.groupBy("grp", "_a").agg(F.sum("c_ab").alias("c_a"))
-    lnq = lambda c: F.round(F.log(c.cast("double")) * 1000000, 0).cast("long")
-    j = cab.join(ca, ["grp", "_a"])
-    agg = j.groupBy("grp").agg(
-        F.sum("c_ab").alias("n_bigrams"),
-        F.count_distinct("_a").alias("vocab_cur"),
-        F.sum(F.col("c_ab") * (lnq(F.col("c_a")) - lnq(F.col("c_ab")))).alias("_t"),
-    )
-    return agg.select(
-        F.col("grp").alias(group_col),
-        "n_bigrams",
-        "vocab_cur",
-        (
-            F.col("_t").cast("double")
-            / (F.col("n_bigrams").cast("double") * F.lit(1000000.0))
-        ).alias("cond_entropy_nats"),
-    )
-
-
-def bigram_pmi(
-    df: DataFrame,
-    group_col: str,
-    tokens_col: str,
-    min_count: int = 5,
-    top_k: int = 20,
-) -> DataFrame:
-    """Top-k token-bigram collocations per group by pointwise mutual
-    information — the classic collocation detector LLM-data pipelines use
-    to surface templated/boilerplate token pairs. DIVISION-FREE exactness:
-    ``pmi_micro = L(c_ab) + L(N) − L(c_a) − L(c_b)`` with L = round(ln·10⁶)
-    of the INTEGER counts (the lang_entropy quantized-log discipline), so
-    ranking happens on a BIGINT and both engines agree exactly;
-    ``pmi_nats = pmi_micro / 10⁶`` is one literal division.
-
-    ``c_a`` counts bigrams with first token a, ``c_b`` with second token b,
-    ``N`` bigrams in the group. ``min_count`` prunes hapax pairs BEFORE the
-    rank (PMI is maximized by singletons otherwise — standard practice).
-
-    Scale shape: pair explode is the same JVM arrays_zip as
-    :func:`bigram_conditional_entropy`; all count frames are map-side
-    combined and bigram-vocabulary-bounded; the only window is the top-k
-    row_number over the pruned PMI frame (the token_heavy_hitters
-    convention). Ties rank deterministically (pmi desc, a asc, b asc).
-
-    Returns ``(group, a, b, c_ab, pmi_micro, pmi_nats, rank)``.
-    """
-    from pyspark.sql import Window
-
-    if min_count < 1:
-        raise ValueError(f"min_count must be >= 1, got {min_count}")
-    if top_k < 1:
-        raise ValueError(f"top_k must be >= 1, got {top_k}")
-    pair = F.expr(
-        f"CASE WHEN size({tokens_col}) >= 2 THEN "
-        f"arrays_zip(slice({tokens_col}, 1, size({tokens_col}) - 1), "
-        f"slice({tokens_col}, 2, size({tokens_col}) - 1)) "
-        f"ELSE array() END"
-    )
-    d = (
-        df.select(F.col(group_col).alias("grp"), F.explode(pair).alias("_p"))
-        .select("grp", F.col("_p")["0"].alias("a"), F.col("_p")["1"].alias("b"))
-    )
-    from mtsad_spark.plans.scope import scoped_persist
-
-    # cab feeds FOUR consumers (c_a, c_b, N, and the pruned join base) —
-    # persist or the corpus-wide bigram explode+count runs four times
-    cab = scoped_persist(
-        d.groupBy("grp", "a", "b").agg(F.count(F.lit(1)).alias("c_ab"))
-    )
-    ca = cab.groupBy("grp", "a").agg(F.sum("c_ab").alias("c_a"))
-    cb = cab.groupBy("grp", "b").agg(F.sum("c_ab").alias("c_b"))
-    tot = cab.groupBy("grp").agg(F.sum("c_ab").alias("_N"))
-    lnq = lambda c: F.round(F.log(c.cast("double")) * 1000000, 0).cast("long")
-    j = (
-        cab.filter(F.col("c_ab") >= min_count)
-        .join(ca, ["grp", "a"])
-        .join(cb, ["grp", "b"])
-        .join(tot, "grp")
-        .withColumn(
-            "pmi_micro",
-            lnq(F.col("c_ab")) + lnq(F.col("_N")) - lnq(F.col("c_a")) - lnq(F.col("c_b")),
-        )
-    )
-    w = Window.partitionBy("grp").orderBy(
-        F.desc("pmi_micro"), F.asc("a"), F.asc("b")
-    )
-    return (
-        j.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            F.col("grp").alias(group_col),
-            "a",
-            "b",
-            "c_ab",
-            "pmi_micro",
-            (F.col("pmi_micro").cast("double") / F.lit(1000000.0)).alias("pmi_nats"),
-            "rank",
-        )
-    )
-
-
-def _time_bucket(ts_col: str, bucket_width_s: int) -> Column:
-    """Epoch-FLOORED naive bucket timestamp — the one definition the
-    token time-bucket family shares (DuckDB twin: make_timestamp(
-    (epoch // w) * w * 1e6)). F.floor, not a double-divide truncating
-    cast: cast-to-long truncates toward zero, which mis-buckets pre-1970
-    timestamps relative to DuckDB's // floor (code-review r6)."""
-    w = F.lit(int(bucket_width_s)).cast("long")
-    return (
-        F.floor(F.col(ts_col).cast("timestamp").cast("long") / w).cast("long") * w
-    ).cast("timestamp")
-
-
-def token_novelty(
-    df: DataFrame,
-    ts_col: str,
-    tokens_col: str,
-    bucket_width_s: int,
-) -> DataFrame:
-    """Novel-token rate per ingest bucket — the vocabulary-shift monitor
-    that answers "how much of this bucket's vocabulary has NEVER been seen
-    before?" (first-occurrence novelty), the time-axis sibling of
-    :func:`vocab_growth`'s Heaps curve and the drift family's leading
-    indicator for a contaminated or re-mixed ingest stream.
-
-    Exact: a token is novel in the bucket holding its corpus-wide FIRST
-    occurrence — a map-side-combined ``min(bucket)`` per token (never an
-    ordered scan); ``novelty_rate = n_novel / n_distinct`` is ONE division
-    of exact BIGINTs.
-
-    Scale shape: the explode → (bucket, token) count is map-side combined;
-    the first-occurrence frame is vocab-bounded; the join back is
-    bucket-keyed (#buckets rows). Returns
-    ``(bucket_ts, n_tokens, n_distinct, n_novel, novelty_rate)``.
-    """
-    from mtsad_spark.plans.scope import scoped_persist
-
-    tok = df.select(
-        _time_bucket(ts_col, bucket_width_s).alias("bucket_ts"),
-        F.explode(tokens_col).alias("token"),
-    )
-    # ONE map-side-combined (bucket, token) count feeds both consumers (r7,
-    # guide §2.3 aggregate-before-shuffle): the per-bucket totals and the
-    # first-occurrence frame previously each re-ran the corpus explode; the
-    # shared count frame is bucket×vocab-bounded, so its persist is
-    # rollup-sized, not corpus-sized. Same values: n_tokens = Σcnt,
-    # n_distinct = #rows, first occurrence = min bucket with cnt > 0.
-    c = scoped_persist(
-        tok.groupBy("bucket_ts", "token").agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    per_b = c.groupBy("bucket_ts").agg(
-        F.sum("cnt").alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_distinct"),
-    )
-    first = (
-        c.groupBy("token")
-        .agg(F.min("bucket_ts").alias("bucket_ts"))
-        .groupBy("bucket_ts")
-        .agg(F.count(F.lit(1)).alias("n_novel"))
-    )
-    j = per_b.join(first, "bucket_ts", "left").fillna(0, ["n_novel"])
-    return j.select(
-        "bucket_ts",
-        "n_tokens",
-        "n_distinct",
-        "n_novel",
-        (F.col("n_novel").cast("double") / F.col("n_distinct").cast("double")).alias(
-            "novelty_rate"
-        ),
-    )
-
-
-def token_bucket_entropy(
-    df: DataFrame,
-    ts_col: str,
-    tokens_col: str,
-    bucket_width_s: int,
-) -> DataFrame:
-    """Shannon entropy of the token distribution per ingest bucket — the
-    per-bucket diversity tier next to the KL drift
-    (:func:`token_distribution_drift` compares CONSECUTIVE buckets; this
-    scores each bucket alone, so a collapse to templated output is visible
-    without a reference bucket).
-
-    ``H = (N·L(N) − Σc·L(c)) / (N·10⁶)`` with L = round(ln·10⁶) of INTEGER
-    counts (the lang_entropy quantized-log discipline): BIGINT term sums,
-    ONE final division — bitwise across engines and parallelism.
-
-    Returns ``(bucket_ts, n_tokens, n_distinct, entropy_nats)``.
-    """
-    tok = df.select(
-        _time_bucket(ts_col, bucket_width_s).alias("bucket_ts"),
-        F.explode(tokens_col).alias("token"),
-    )
-    lnq = lambda c: F.round(F.log(c.cast("double")) * 1000000, 0).cast("long")
-    c = tok.groupBy("bucket_ts", "token").agg(F.count(F.lit(1)).alias("cnt"))
-    agg = c.groupBy("bucket_ts").agg(
-        F.sum("cnt").alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_distinct"),
-        F.sum(F.col("cnt") * lnq(F.col("cnt"))).alias("_t"),
-    )
-    return agg.select(
-        "bucket_ts",
-        "n_tokens",
-        "n_distinct",
-        (
-            (F.col("n_tokens") * lnq(F.col("n_tokens")) - F.col("_t")).cast("double")
-            / (F.col("n_tokens").cast("double") * F.lit(1000000.0))
-        ).alias("entropy_nats"),
     )

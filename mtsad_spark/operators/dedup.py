@@ -540,235 +540,3 @@ def simhash_oversize_buckets(
         )
         out = g if out is None else out.unionByName(g)
     return out
-
-
-def token_ngrams(
-    df: DataFrame, id_col: str, tokens_col: str, n: int = 13, seed: int = 42
-) -> DataFrame:
-    """Distinct token n-grams per document as 8-byte hash keys:
-    ``(id, ngram_key)`` — one row per DISTINCT n-gram a document contains.
-    Documents shorter than ``n`` tokens emit nothing.
-
-    r7 keying (guide §4.1 cheapest-expression): the key is
-    ``xxhash64(slice(tokens, i, n), seed)`` — the gram's token-id slice
-    hashed DIRECTLY, no per-gram string materialization at all (the previous
-    md5-of-joined-string form built a ~50-byte string, md5'd it and
-    hex-parsed the digest per gram — measured 3-6× slower across the n-gram
-    family). Keys are engine-internal: every consumer (contamination,
-    source Jaccard) emits only counts/ids, and their DuckDB oracles derive
-    their own keys, so equality is on outputs — identical up to 64-bit
-    hash collisions over the corpus gram set (verified output-identical at
-    every SF). Token-id arrays join injectively, so array-equality ≡ the old
-    string-equality exactly."""
-    # sequence(1, 0) counts DOWN ([1, 0]) — docs shorter than n must route
-    # through an empty array (the dropin_augment lesson), or slice(…, 0, n)
-    # throws INVALID_PARAMETER_VALUE
-    keys = F.expr(
-        f"CASE WHEN size({tokens_col}) >= {n} THEN "
-        f"transform(sequence(1, size({tokens_col}) - {n - 1}), "
-        f"i -> xxhash64(slice({tokens_col}, i, {n}), {seed})) "
-        f"ELSE CAST(array() AS ARRAY<BIGINT>) END"
-    )
-    return (
-        df.select(F.col(id_col), F.explode(keys).alias("ngram_key"))
-        .distinct()
-    )
-
-
-def ngram_contamination(
-    train: DataFrame,
-    holdout: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    n: int = 13,
-    df_cap: int | None = None,
-) -> DataFrame:
-    """Train/eval contamination check — the n-gram-overlap decontamination
-    step every LLM training pipeline runs against its eval sets (public
-    practice: GPT-3 App. C / PaLM-style 13-gram overlap): which holdout
-    documents share at least one token n-gram with which training documents.
-
-    Returns (holdout_id, train_id, n_shared) — the number of distinct
-    n-grams the pair shares. Candidate generation is BUCKET-LOCAL by n-gram
-    key (the LSH-banding discipline: never an all-pairs join); a 100 TB
-    corpus shuffles (id, 8-byte key) pairs only.
-
-    ``df_cap`` optionally drops n-grams appearing in more than ``df_cap``
-    training documents BEFORE the join — boilerplate n-grams (licenses,
-    headers) are both a hot-bucket skew risk and non-signal for
-    contamination. The cap is an explicit opt-in and its effect is visible
-    in-band: capped n-grams are simply absent from ``n_shared``.
-    """
-    tg = token_ngrams(train, id_col, tokens_col, n).select(
-        F.col(id_col).alias("train_id"), "ngram_key"
-    )
-    hg = token_ngrams(holdout, id_col, tokens_col, n).select(
-        F.col(id_col).alias("holdout_id"), "ngram_key"
-    )
-    if df_cap is not None:
-        from mtsad_spark.plans.scope import scoped_persist
-
-        # tg feeds BOTH the doc-frequency aggregate and the candidate join —
-        # persist or the corpus-wide explode/hash/distinct runs twice
-        tg = scoped_persist(tg)
-        ok = (
-            tg.groupBy("ngram_key")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= df_cap)
-            .select("ngram_key")
-        )
-        tg = tg.join(ok, "ngram_key")
-    return (
-        hg.join(tg, "ngram_key")
-        .groupBy("holdout_id", "train_id")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-
-
-def repeated_spans(
-    df: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    n: int = 13,
-    min_df: int = 2,
-    df_cap: int | None = None,
-) -> DataFrame:
-    """Intra-corpus repeated-passage detection — the within-training-set
-    counterpart of :func:`ngram_contamination` (public practice: suffix-array
-    substring dedup of Lee et al. 2022, "Deduplicating Training Data Makes
-    Language Models Better", approximated here by its n-gram-overlap form):
-    for every document, the MAXIMAL token spans whose every length-``n``
-    window also appears in at least ``min_df - 1`` OTHER documents.
-
-    Pipeline shape (100-TB discipline):
-
-    1. positional n-gram keys ``(id, pos, xxhash64-of-slice)`` — one row
-       per position, 8-byte keys on the shuffle (the direct-slice keying of
-       :func:`token_ngrams`, which this generalizes by keeping positions);
-    2. shared-key set = keys whose DISTINCT-document frequency is in
-       ``[min_df, df_cap]`` — an algebraic, map-side-combined groupBy;
-       ``df_cap`` bounds hot boilerplate grams (explicit opt-in, visible
-       in-band as missing spans, same contract as ngram_contamination);
-    3. a semi-join of positions against that key set — documents are NEVER
-       joined to documents, so there is no pair blow-up anywhere;
-    4. gaps-and-islands merge per document: consecutive matched positions
-       with ``Δpos ≤ n`` overlap or touch, so a new span starts when
-       ``pos - lag(pos) > n``. The only sequential windows run PER DOCUMENT
-       over its matched positions — bounded by document token count (the
-       tier-points/retention-bounded contract), never a corpus-proportional
-       bare-key frame.
-
-    Returns ``(id, span_start, span_end, n_grams)`` — 0-based inclusive
-    token bounds of each maximal repeated span and the matched-window count
-    inside it (``span_end = last matched pos + n - 1``).
-    """
-    from pyspark.sql import Window
-
-    if min_df < 2:
-        raise ValueError("repeated_spans needs min_df >= 2 (a span must recur)")
-    # r7 keying: grams hashed directly from the token-id slice (see
-    # token_ngrams — no string/md5 per gram; keys stay engine-internal)
-    keys = F.expr(
-        f"CASE WHEN size({tokens_col}) >= {n} THEN "
-        f"transform(sequence(1, size({tokens_col}) - {n - 1}), "
-        f"i -> xxhash64(slice({tokens_col}, i, {n}), 42)) "
-        f"ELSE CAST(array() AS ARRAY<BIGINT>) END"
-    )
-    from mtsad_spark.plans.scope import scoped_persist
-
-    pg = df.select(F.col(id_col), F.posexplode(keys).alias("pos", "ngram_key"))
-    # pg feeds BOTH the doc-frequency aggregate and the position join —
-    # persist or the corpus-wide explode/hash runs twice (repo rule)
-    pg = scoped_persist(pg)
-    docs_per_key = (
-        pg.select(id_col, "ngram_key")
-        .distinct()
-        .groupBy("ngram_key")
-        .agg(F.count(F.lit(1)).alias("_df"))
-    )
-    cond = F.col("_df") >= min_df
-    if df_cap is not None:
-        cond = cond & (F.col("_df") <= df_cap)
-    shared = docs_per_key.filter(cond).select("ngram_key")
-    hit = pg.join(shared, "ngram_key").select(id_col, "pos")
-    wd = Window.partitionBy(id_col).orderBy("pos")
-    isl = (
-        hit.withColumn(
-            "_brk",
-            F.when(
-                F.col("pos") - F.lag("pos").over(wd) > F.lit(n), F.lit(1)
-            ).otherwise(F.lit(0)),
-        )
-        .withColumn(
-            "_isl",
-            F.sum("_brk").over(wd.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        .drop("_brk")
-    )
-    return isl.groupBy(id_col, "_isl").agg(
-        F.min("pos").cast("int").alias("span_start"),
-        (F.max("pos") + F.lit(n - 1)).cast("int").alias("span_end"),
-        F.count(F.lit(1)).alias("n_grams"),
-    ).drop("_isl")
-
-
-def source_ngram_jaccard(
-    df: DataFrame,
-    group_col: str,
-    tokens_col: str,
-    n: int = 2,
-) -> DataFrame:
-    """Pairwise n-gram Jaccard similarity BETWEEN groups (sources) over
-    pre-tokenized sequences — the cross-source overlap/diversity matrix an
-    LLM-data pipeline reads before fixing mixture weights (two sources with
-    high n-gram Jaccard are near-redundant; the per-DOCUMENT near-dup ops
-    above answer a different question). Same direct-slice hash keys as
-    :func:`token_ngrams`.
-
-    Exact: ``jaccard = |A∩B| / (|A| + |B| − |A∩B|)`` on DISTINCT-gram
-    counts — three BIGINTs, ONE final division.
-
-    Scale shape: the distinct (group, gram) frame is built by one map-side
-    combined distinct; the intersection is a gram-keyed equi-self-join
-    (bucket-local, never all-pairs over rows — each gram contributes at
-    most |groups|² pair rows, and |groups| is mixture-source cardinality,
-    not corpus size). The gram frame is consumed three times (sizes + both
-    join sides) → scoped_persist (the lineage-recompute rule).
-
-    Returns ``(group_a, group_b, n_a, n_b, n_inter, jaccard)`` for
-    ``group_a < group_b``.
-    """
-    from mtsad_spark.plans.scope import scoped_persist
-
-    grams = scoped_persist(
-        token_ngrams(
-            df.select(F.col(group_col).alias("_grp"), tokens_col),
-            "_grp",
-            tokens_col,
-            n,
-        )
-    )
-    sizes = grams.groupBy("_grp").agg(F.count(F.lit(1)).alias("n_grams"))
-    a = grams.select(F.col("_grp").alias("group_a"), "ngram_key")
-    b = grams.select(F.col("_grp").alias("group_b"), "ngram_key")
-    inter = (
-        a.join(b, "ngram_key")
-        .filter(F.col("group_a") < F.col("group_b"))
-        .groupBy("group_a", "group_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("_grp", "group_a"), "group_a")
-        .withColumnRenamed("n_grams", "n_a")
-        .join(sizes.withColumnRenamed("_grp", "group_b"), "group_b")
-        .withColumnRenamed("n_grams", "n_b")
-    )
-    union = F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    return out.select(
-        "group_a",
-        "group_b",
-        "n_a",
-        "n_b",
-        "n_inter",
-        (F.col("n_inter").cast("double") / union.cast("double")).alias("jaccard"),
-    )

@@ -123,7 +123,7 @@ def concurrency_curve(
     keys = keys or []
     w = int(bucket_width_s)
     # F.floor, not a truncating cast: matches DuckDB's // for pre-1970
-    # timestamps too (the functions/text._time_bucket rule; code-review r6)
+    # timestamps too (code-review r6)
     b_start = (
         F.floor(F.col(start_col).cast("timestamp").cast("long") / F.lit(w))
         .cast("long") * w

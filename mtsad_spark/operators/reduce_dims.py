@@ -95,7 +95,7 @@ def kernel_pca_to_uts(
     φ̂(x) = A·[k(x,l_1)..k(x,l_m)] as m JVM column expressions — each
     k(x,l_j) is one ``exp`` of column arithmetic, each φ̂ component a linear
     combination of those m columns (plan size O(m²) scalar ops — keep
-    m ≲ 64, the IVF plan-bloat lesson); (4) distributed linear PCA
+    m ≲ 64: every landmark adds m columns to the plan); (4) distributed linear PCA
     (:func:`pca_to_uts`, standardize=False) on φ̂. With m = n the map spans
     the full kernel feature space and the first component matches exact
     KPCA (tested by |pearson| ≈ 1); with m ≪ n it is the standard Nyström

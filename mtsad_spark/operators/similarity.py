@@ -1,16 +1,13 @@
-"""Similarity search over embedding columns (array<float>).
+"""Cosine-similarity building blocks over embedding columns (array<double>).
 
-Baseline: brute-force cosine top-k — broadcast the (small) query set, keep the
-dot product inside JVM higher-order functions (``zip_with`` + ``aggregate``),
-rank per query. Scale path: LSH over random hyperplanes buckets the corpus so
-each query only scans its bucket (and optionally multi-probes neighbors).
-
-No Python UDF in either path.
+The dot product and the L2 norm stay inside JVM higher-order functions
+(``zip_with`` + ``aggregate``), so brute-force cosine top-k
+(:func:`cosine_topk_bruteforce`, and ``driver_queries.knn_cosine_top3``)
+runs with no Python UDF.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -23,11 +20,6 @@ def _dot(a, b):
 
 def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def with_cosine(df: DataFrame, a_col: str, b_col: str, out_col: str = "cosine") -> DataFrame:
-    a, b = F.col(a_col), F.col(b_col)
-    return df.withColumn(out_col, _dot(a, b) / (_norm(a) * _norm(b)))
 
 
 def cosine_topk_bruteforce(
@@ -71,441 +63,3 @@ def cosine_topk_bruteforce(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
-
-
-def hyperplane_buckets(
-    df: DataFrame, vec_col: str, dim: int, n_planes: int = 12, seed: int = 42,
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Sign-of-projection LSH bucket id (int) from seeded random hyperplanes.
-
-    Planes are a deterministic numpy draw embedded as literals (tiny:
-    n_planes × dim) — same buckets on every executor and every run.
-    """
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(n_planes, dim)
-    bucket = F.lit(0).cast("long")
-    v = F.col(vec_col)
-    for i in range(n_planes):
-        plane = F.array(*[F.lit(float(x)) for x in planes[i]])
-        bit = (_dot(v, plane) > 0).cast("long")
-        bucket = bucket + bit * F.lit(1 << i).cast("long")
-    return df.withColumn(out_col, bucket)
-
-
-def cosine_topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_lists: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """IVF ANN: a coarse quantizer partitions the corpus into inverted
-    lists; each query brute-forces only its ``n_probe`` nearest lists.
-
-    Quantizer: by default k-means trains once (distributed, seeded) and
-    assignment is one model.transform pass. Pass ``centroids`` (list of
-    dim-length float lists) to use a PRE-TRAINED/EXTERNAL quantizer instead —
-    the standard at-scale pattern (train offline on a sample, reuse across
-    jobs); assignment is then an argmin-L2 over a broadcast centroid table
-    (n_lists rows per vector, bounded window groups). At 10^9+ vectors the
-    lists are the shuffle partitioning — each query touches
-    n_probe/n_lists of the corpus. Recall < 1 by construction; raise
-    n_probe toward n_lists for the exact limit.
-    """
-    spark = corpus.sparkSession
-    if centroids is not None:
-        cent = spark.createDataFrame(
-            [(i, [float(x) for x in ctr]) for i, ctr in enumerate(centroids)],
-            schema="_list INT, _ctr ARRAY<DOUBLE>",
-        )
-        c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-        dc = F.aggregate(
-            F.zip_with(F.col("_cv"), F.col("_ctr"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        wa = Window.partitionBy("neighbor_id").orderBy("_dc", "_list")
-        lists = (
-            c.crossJoin(F.broadcast(cent))
-            .withColumn("_dc", dc)
-            .withColumn("_ra", F.row_number().over(wa))
-            .filter(F.col("_ra") == 1)
-            .select("neighbor_id", "_cv", "_list")
-        )
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
-            array_to_vector(F.col(vec_col)).alias("_feat"),
-        )
-        km = KMeans(k=n_lists, seed=seed, featuresCol="_feat", predictionCol="_list").fit(c)
-        lists = km.transform(c).drop("_feat")
-        centroids = [[float(x) for x in ctr] for ctr in km.clusterCenters()]
-        cent = spark.createDataFrame(
-            [(i, ctr) for i, ctr in enumerate(centroids)],
-            schema="_list INT, _ctr ARRAY<DOUBLE>",
-        )
-
-    # per-query n_probe nearest centroids via a broadcast CENTROID TABLE join
-    # (round-1 embedded each centroid as a literal expression — at d=1024 /
-    # n_lists=4096 that is multi-MB of plan text per query; a data-side
-    # broadcast keeps the plan O(1) regardless of d·k)
-    # norms hoisted below the joins (r7, guide §4.1): ‖c‖ once per list row
-    # and ‖q‖ once per query — the per-pair work is the dot product alone;
-    # identical floats (the same two doubles are multiplied)
-    lists = lists.withColumn("_cn", _norm(F.col("_cv")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).withColumn("_qn", _norm(F.col("_qv")))
-    d2 = F.aggregate(
-        F.zip_with(F.col("_qv"), F.col("_ctr"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wq = Window.partitionBy("query_id").orderBy("_d", "_list")
-    probe = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("_d", d2)
-        .withColumn("_rk", F.row_number().over(wq))
-        .filter(F.col("_rk") <= n_probe)
-        .select("query_id", "_qv", "_qn", "_list")
-    )
-    joined = lists.join(F.broadcast(probe), "_list").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    sim = joined.withColumn(
-        "cosine", _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    )
-    # rank on the 6-decimal-rounded cosine with an id tiebreak: deterministic
-    # across runs, partitionings and engines (unrounded float order is
-    # ulp-fragile at equal-cosine ties); the emitted cosine stays unrounded
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cosine"), 6)), F.asc("neighbor_id")
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _multi_table_buckets(
-    df: DataFrame, vec_col: str, dim: int, n_planes: int, seed: int, n_tables: int
-) -> DataFrame:
-    """(…, _tbl, bucket) rows — one bucket assignment per LSH table, each
-    table drawn from an independent plane seed. Explodes the frame n_tables×
-    (bounded, user-chosen); the downstream self-join keys on (_tbl, bucket)
-    so tables never cross-join."""
-    out = None
-    for t in range(n_tables):
-        b = hyperplane_buckets(df, vec_col, dim, n_planes, seed + 7919 * t).withColumn(
-            "_tbl", F.lit(t)
-        )
-        out = b if out is None else out.unionByName(b)
-    return out
-
-
-def embedding_near_dups(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    seed: int = 42,
-    n_tables: int = 1,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: hyperplane-LSH buckets the
-    corpus, the self-join runs WITHIN (table, bucket) only, exact cosine
-    verifies. (id_a, id_b, cosine) with cosine ≥ threshold. A θ-angle pair
-    shares a bucket with probability (1 − θ/π)^n_planes per table; missing
-    ALL of n_tables independent tables has probability
-    (1 − (1−θ/π)^n_planes)^n_tables — the recall lever. E.g. cosine 0.99 /
-    8 planes: 0.89 per table, ≥0.999 at 3 tables. Candidate pairs are
-    DISTINCT'd across tables before the exact-cosine verify so the verify
-    cost never multiplies by table count.
-
-    ``max_bucket`` is the hot-bucket guard (VERDICT r03 #5): a degenerate
-    corpus (e.g. many identical embeddings) collapses into one bucket whose
-    self-join is quadratic. Buckets larger than the cap are EXCLUDED from
-    candidate generation — audit what a cap would drop with
-    :func:`oversize_buckets` before relying on the output (no silent caps);
-    identical vectors are exact duplicates and belong to the exact-dedup
-    pre-pass, not the LSH path. The DEFAULT is ``None`` (complete recall):
-    the cap is an explicit caller opt-in paired with the audit — scale
-    pipelines pass 100_000 (ADVICE r04: no silent recall change)."""
-    b = _multi_table_buckets(
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
-        "_v", dim, n_planes, seed, n_tables,
-    )
-    if max_bucket is not None:
-        sizes = b.groupBy("_tbl", "bucket").agg(F.count(F.lit(1)).alias("_bn"))
-        # bucket list is corpus-proportional — shuffled equi-join, no
-        # broadcast hint (AQE may still promote a genuinely small side)
-        b = b.join(
-            sizes.filter(F.col("_bn") <= max_bucket).select("_tbl", "bucket"),
-            ["_tbl", "bucket"],
-        )
-    l = b.select(F.col("_id").alias("id_a"), "_tbl", "bucket")
-    r = b.select(F.col("_id").alias("id_b"), "_tbl", "bucket")
-    pairs = (
-        l.join(r, ["_tbl", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # per-vector norms computed BELOW the pair joins (r7, guide §4.1): once
-    # per vector row instead of once per pair; identical floats
-    vecs = df.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    ).withColumn("_n", _norm(F.col("_v")))
-    sim = (
-        pairs.join(
-            vecs.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"), F.col("_n").alias("_na")),
-            "id_a",
-        )
-        .join(
-            vecs.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"), F.col("_n").alias("_nb")),
-            "id_b",
-        )
-        .withColumn(
-            "cosine",
-            _dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb")),
-        )
-    )
-    return sim.filter(F.col("cosine") >= threshold).select("id_a", "id_b", "cosine")
-
-
-def oversize_buckets(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 8,
-    seed: int = 42,
-    n_tables: int = 1,
-    max_bucket: int = 100_000,
-) -> DataFrame:
-    """Audit companion to :func:`embedding_near_dups`'s hot-bucket guard:
-    ``(_tbl, bucket, n)`` for every bucket the cap would exclude. Count (or
-    sink) this frame next to the dedup run so capped coverage is recorded,
-    never silent."""
-    b = _multi_table_buckets(
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")),
-        "_v", dim, n_planes, seed, n_tables,
-    )
-    return (
-        b.groupBy("_tbl", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > max_bucket)
-    )
-
-
-def cosine_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    k: int = 10,
-    n_planes: int = 8,
-    seed: int = 42,
-    n_tables: int = 1,
-) -> DataFrame:
-    """ANN top-k: bucket corpus + queries by hyperplane LSH, brute-force only
-    within the query's (table, bucket). Recall < 1 by construction
-    (candidates sharing a full sign pattern); raise recall with fewer planes,
-    or with ``n_tables`` independent plane seeds union'd (candidates
-    dedup'd), the standard multi-table LSH lever.
-    """
-    cb = _multi_table_buckets(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")),
-        "_cv", dim, n_planes, seed, n_tables,
-    )
-    qb = _multi_table_buckets(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
-        "_qv", dim, n_planes, seed, n_tables,
-    )
-    # candidate dedup across tables keys on the two IDs ONLY (VERDICT r03
-    # #6-nit): distinct over rows that still carry both d-length vectors
-    # would shuffle and compare full arrays; vectors re-attach afterwards —
-    # broadcast for the query side, shuffled equi-join for the corpus side
-    # (the embedding_near_dups shape)
-    cand = (
-        cb.select("neighbor_id", "_tbl", "bucket")
-        .join(F.broadcast(qb.select("query_id", "_tbl", "bucket")), ["_tbl", "bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    # norms once per vector row below the re-attach joins (r7, guide §4.1)
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).withColumn("_qn", _norm(F.col("_qv")))
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
-    ).withColumn("_cn", _norm(F.col("_cv")))
-    joined = cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-    sim = joined.withColumn(
-        "cosine", _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
-    )
-    # rank on the 6-decimal-rounded cosine with an id tiebreak: deterministic
-    # across runs, partitionings and engines (unrounded float order is
-    # ulp-fragile at equal-cosine ties); the emitted cosine stays unrounded
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(F.round(F.col("cosine"), 6)), F.asc("neighbor_id")
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def kmeans_deterministic(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_lists: int = 8,
-    iters: int = 2,
-) -> list[list[float]]:
-    """Deterministic Lloyd trainer for the IVF coarse quantizer (VERDICT r05
-    #7: the Spark-ML k-means|| init is partition-dependent, leaving the
-    trained IVF form rows-only). Every step here is partition-invariant AND
-    cross-engine reproducible, so the trained path oracles exactly:
-
-    * init: the ``n_lists`` corpus vectors with the smallest
-      ``md5(cast(id as string))`` rank (id tiebreak) — the hash-ranked
-      sampler's portable ordering, identical in any engine;
-    * assignment: argmin L2 against the current centroids (left-fold over
-      dims; tie → lower list id), n_lists rows per vector — bounded window
-      groups, never a corpus×corpus join;
-    * update: per-(list, dim) mean from EXACT integer micro-sums —
-      ``floor(x·1e6 + 0.5)`` per coordinate summed as BIGINT (associative ⇒
-      the same total under any parallelism; half-up floor form because
-      Spark/DuckDB/numpy disagree on round()'s half rule), then the one
-      fixed float expression ``s / n / 1e6``. Empty lists keep their
-      previous centroid.
-
-    Driver state is n_lists × dim floats per iteration (two bounded collects
-    per iteration — seed rows and the micro-sum grid), the same bounded-seed
-    pattern as reduce_dims' landmarks. The DuckDB oracle replays the whole
-    trainer in SQL (driver_queries._ivf_trained_sql, iterations unrolled);
-    assignment-margin noise is the measured seeded-IVF budget (≥2.3e-5 vs
-    ~1e-15 association noise).
-    """
-    spark = corpus.sparkSession
-    c = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    seed_rows = (
-        c.withColumn("_h", F.md5(F.col("_id").cast("string")))
-        .orderBy("_h", "_id")
-        .limit(n_lists)
-        .collect()
-    )
-    seed_rows.sort(key=lambda r: (r["_h"], r["_id"]))
-    centroids = [[float(x) for x in r["_v"]] for r in seed_rows]
-    dim = len(centroids[0])
-    for _ in range(iters):
-        cent = spark.createDataFrame(
-            [(i, ctr) for i, ctr in enumerate(centroids)],
-            schema="_list INT, _ctr ARRAY<DOUBLE>",
-        )
-        d2 = F.aggregate(
-            F.zip_with(F.col("_v"), F.col("_ctr"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        w = Window.partitionBy("_id").orderBy("_dc", "_list")
-        assign = (
-            c.crossJoin(F.broadcast(cent))
-            .withColumn("_dc", d2)
-            .withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select("_id", "_v", "_list")
-        )
-        micro = F.transform(
-            F.col("_v"), lambda x: F.floor(x * F.lit(1e6) + F.lit(0.5)).cast("long")
-        )
-        grid = (
-            assign.select("_list", F.posexplode(micro).alias("_pos", "_m"))
-            .groupBy("_list", "_pos")
-            .agg(F.sum("_m").alias("_s"), F.count("*").alias("_n"))
-            .collect()  # bounded: n_lists × dim rows
-        )
-        by_list: dict[int, dict[int, tuple[int, int]]] = {}
-        for r in grid:
-            by_list.setdefault(r["_list"], {})[r["_pos"]] = (r["_s"], r["_n"])
-        centroids = [
-            [by_list[i][p][0] / by_list[i][p][1] / 1e6 for p in range(dim)]
-            if i in by_list
-            else old
-            for i, old in enumerate(centroids)
-        ]
-    return centroids
-
-
-def centroid_affinity(
-    df: DataFrame, group_col: str, vec_col: str, micro_scale: int = 1_000_000
-) -> DataFrame:
-    """Cosine affinity matrix between GROUP CENTROIDS of an embedding
-    column — the semantic-drift / cluster-QA companion to the pairwise ANN
-    family: how close are the mean embeddings of two sources, labels or
-    days (public practice: class-centroid similarity for dataset audits).
-
-    EXACT-INTEGER spec: every component is micro-quantized
-    (``round(x·1e6)`` — a float32 times 1e6 is an exact double with ≤44
-    mantissa bits, so the value is NEVER a representable half-integer and
-    the rounding is engine-unambiguous), per-(group, dim) BIGINT sums are
-    floor-divided by the group count (``div`` — integer centroid), and the
-    pair dot products / norms are BIGINT sums of micro² products
-    (contract: ``dims · (micro_scale·max|x|)² < 2^63``). Cosine is ONE
-    float step ``num/(√a·√b)`` on exactly-representable integers — bitwise
-    across engines and parallelism. Zero-norm centroids emit NULL.
-
-    Scale shape: the only corpus-sized stage is the map-side-combined
-    (group, dim) sum over the exploded components; everything after runs
-    on #groups·dims rows. No broadcast hints anywhere.
-
-    Returns ``(group_a, group_b, n_a, n_b, cosine)`` for group_a < group_b.
-    """
-    ex = df.select(
-        F.col(group_col).alias("grp"), F.posexplode(vec_col).alias("dim", "v")
-    )
-    micro = F.round(F.col("v").cast("double") * F.lit(int(micro_scale)), 0).cast(
-        "long"
-    )
-    sums = ex.groupBy("grp", "dim").agg(
-        F.sum(micro).alias("s"), F.count(F.lit(1)).alias("n")
-    )
-    cen = sums.withColumn("m", F.expr("s div n")).select("grp", "dim", "n", "m")
-    a = cen.select(
-        F.col("grp").alias("group_a"), "dim",
-        F.col("n").alias("n_a"), F.col("m").alias("ma"),
-    )
-    b = cen.select(
-        F.col("grp").alias("group_b"), "dim",
-        F.col("n").alias("n_b"), F.col("m").alias("mb"),
-    )
-    j = a.join(b, "dim").filter(F.col("group_a") < F.col("group_b"))
-    g = j.groupBy("group_a", "group_b").agg(
-        F.max("n_a").alias("n_a"),
-        F.max("n_b").alias("n_b"),
-        F.sum(F.col("ma") * F.col("mb")).alias("_num"),
-        F.sum(F.col("ma") * F.col("ma")).alias("_na2"),
-        F.sum(F.col("mb") * F.col("mb")).alias("_nb2"),
-    )
-    cos = F.when(
-        (F.col("_na2") > 0) & (F.col("_nb2") > 0),
-        F.col("_num").cast("double")
-        / (F.sqrt(F.col("_na2").cast("double")) * F.sqrt(F.col("_nb2").cast("double"))),
-    )
-    return g.withColumn("cosine", cos).drop("_num", "_na2", "_nb2")

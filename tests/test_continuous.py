@@ -1,5 +1,5 @@
 """Continuous-aggregate surface (r5): incremental refresh, tier stitching,
-deterministic sampling, n-gram contamination."""
+deterministic sampling."""
 
 from __future__ import annotations
 
@@ -192,40 +192,6 @@ def test_hash_ranked_sample_matches_naive_and_is_stable(spark, events):
         .toPandas().sort_values(["event_type", "sample_rank"])
     )
     assert list(got2["event_id"]) == list(g["event_id"])
-
-
-def test_ngram_contamination_finds_planted_overlap(spark):
-    from mtsad_spark.operators.dedup import ngram_contamination
-
-    rows = [
-        ("t1", list(range(100, 160))),           # source doc
-        ("t2", list(range(500, 560))),           # unrelated
-        ("t3", list(range(9, 12))),              # shorter than n → no grams
-    ]
-    train = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
-    holdout = spark.createDataFrame(
-        [("e1", list(range(110, 140))),          # 30-token slice of t1
-         ("e2", list(range(900, 930)))],         # clean
-        "doc_id string, tokens array<int>",
-    )
-    out = ngram_contamination(train, holdout, "doc_id", "tokens", n=13).toPandas()
-    assert len(out) == 1
-    r = out.iloc[0]
-    assert (r["holdout_id"], r["train_id"]) == ("e1", "t1")
-    assert r["n_shared"] == 30 - 13 + 1  # every 13-gram of the slice
-
-    # df_cap drops boilerplate n-grams shared by too many training docs
-    boiler = spark.createDataFrame(
-        [(f"b{i}", list(range(0, 20))) for i in range(5)] + rows,
-        "doc_id string, tokens array<int>",
-    )
-    h2 = spark.createDataFrame(
-        [("e3", list(range(0, 20)))], "doc_id string, tokens array<int>"
-    )
-    capped = ngram_contamination(boiler, h2, "doc_id", "tokens", n=13, df_cap=3)
-    assert capped.count() == 0
-    uncapped = ngram_contamination(boiler, h2, "doc_id", "tokens", n=13)
-    assert uncapped.count() == 5
 
 
 def test_range_query_on_stored_tables_prunes_partitions(spark, events, tmp_path):

@@ -19,11 +19,6 @@ def events(spark):
     return spark.read.parquet("/root/testdata/sf0.001/events.parquet")
 
 
-@pytest.fixture(scope="module")
-def embeddings(spark):
-    return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-
-
 def test_filter_and_projection_pushed_to_scan(events):
     q = events.filter(F.col("value") > 400).select("event_id", "value")
     p = plan_of(q)
@@ -286,20 +281,6 @@ def test_sax_and_ngram_bitmap_are_scale_clean(spark, events):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
-def test_lsh_candidate_distinct_carries_no_vectors(spark, embeddings):
-    """VERDICT r03 #6: the ANN candidate dedup must key on the two id longs
-    only — a distinct over rows still carrying the d-length arrays shuffles
-    and compares full vectors. Vectors re-attach after the distinct."""
-    from mtsad_spark.operators.similarity import cosine_topk_lsh
-
-    q = embeddings.filter(F.col("vec_id") < 5)
-    out = cosine_topk_lsh(embeddings, q, k=3, dim=64, n_planes=8, n_tables=2)
-    tree = out._jdf.queryExecution().optimizedPlan().toString()
-    for line in tree.splitlines():
-        if "Aggregate [" in line and ("_qv" in line or "_cv" in line):
-            raise AssertionError(f"candidate distinct carries vectors:\n{line}")
-
-
 def test_prefix_sum_is_scale_clean(spark, events):
     """keyed_prefix_sum must compose from per-(key, coarse-bucket) partials —
     the only per-key sequential window runs over the bucket-sum frame, never
@@ -417,25 +398,9 @@ def test_scope_registry_values_do_not_pin_their_session(spark):
 
 
 def test_contamination_and_sampler_plans_are_scale_clean(spark):
-    """r5 additions under the same static-plan bans: the n-gram contamination
-    join must be a bucket-local equi-join (no cartesian/nested-loop, no
-    broadcast hints — the n-gram frames are corpus-proportional), and the
-    hash sampler must never window raw rows by the bare key."""
-    from mtsad_spark.operators.dedup import ngram_contamination
+    """r5 additions under the same static-plan bans: the hash sampler must
+    never window raw rows by the bare key."""
     from mtsad_spark.operators.splits import hash_ranked_sample
-
-    seq = spark.createDataFrame(
-        [("d%d" % i, list(range(i, i + 30))) for i in range(50)],
-        "doc_id string, tokens array<int>",
-    )
-    hold = seq.limit(5).select(
-        F.concat(F.lit("e-"), "doc_id").alias("doc_id"), "tokens"
-    )
-    q = ngram_contamination(seq, hold, "doc_id", "tokens", n=13, df_cap=100)
-    p = plan_of(q)
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-    assert "ResolvedHint" not in q._jdf.queryExecution().analyzed().toString()
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     s = hash_ranked_sample(
@@ -486,52 +451,15 @@ def test_fit_joins_broadcast_via_aqe_without_hints(spark, events):
 
 
 def test_r6_ops_plans_are_scale_clean(spark, events):
-    """r6 additions under the same static-plan bans: repeated_spans and
-    token_distribution_drift must stay equi-join/bucket-local (no
-    cartesian/nested-loop, no Python eval nodes, no broadcast hints on
-    corpus-proportional frames), and the mixture sampler's raw-row windows
-    must carry the hash bucket (its only bare-key windows run over the
-    #sources/#buckets aggregate frames)."""
-    from mtsad_spark.functions.text import tfidf_top_terms, token_distribution_drift
-    from mtsad_spark.operators.dedup import repeated_spans
+    """r6 additions under the same static-plan bans: the mixture sampler's
+    raw-row windows must carry the hash bucket (its only bare-key windows
+    run over the #sources/#buckets aggregate frames)."""
     from mtsad_spark.operators.splits import mixture_token_sample
 
     seq = spark.createDataFrame(
         [("d%d" % i, "s%d" % (i % 3), list(range(i, i + 30))) for i in range(50)],
         "doc_id string, source string, tokens array<int>",
     )
-    for q, allow_scalar_cross in (
-        (repeated_spans(seq, "doc_id", "tokens", n=13), False),
-        (
-            token_distribution_drift(
-                seq.withColumn(
-                    "ts", F.lit("2024-01-01 00:00:00").cast("timestamp")
-                ),
-                "ts",
-                "tokens",
-                900,
-                100,
-            ),
-            False,
-        ),
-        # tfidf cross-joins the ONE-ROW corpus-count aggregate (the keyless
-        # fit_join shape) — a broadcast nested-loop of a scalar is fine
-        (
-            tfidf_top_terms(
-                seq.select("doc_id", F.concat_ws(" ", "tokens").alias("text")),
-                "doc_id",
-                "text",
-            ),
-            True,
-        ),
-    ):
-        p = plan_of(q)
-        assert "CartesianProduct" not in p
-        if not allow_scalar_cross:
-            assert "BroadcastNestedLoopJoin" not in p
-        assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-        assert "ResolvedHint" not in q._jdf.queryExecution().analyzed().toString()
-
     m = mixture_token_sample(
         seq.withColumn("n_tok", F.size("tokens")),
         "source",
@@ -561,35 +489,17 @@ def test_r6_ops_plans_are_scale_clean(spark, events):
 def test_r6_robust_and_corpus_ops_are_scale_clean(spark):
     """Round-6 additions under the standing static-plan bans: the robust
     scorers (rolling median / Hampel) must stay pure JVM window algebra
-    (no Python eval), the corpus-statistics family (zipf, PMI, entropy,
-    novelty, jaccard) must be equi-join only (no cartesian / nested-loop),
-    and none may carry explicit broadcast hints on corpus-proportional
-    frames."""
+    (no Python eval), interval coverage, packing and the multi-measure
+    rollup must be equi-join only (no cartesian / nested-loop), and none
+    may carry explicit broadcast hints on corpus-proportional frames."""
     import datetime as dt
 
-    from mtsad_spark.functions.text import (
-        bigram_conditional_entropy,
-        bigram_pmi,
-        token_bucket_entropy,
-        token_novelty,
-        zipf_slope,
-    )
-    from mtsad_spark.operators.dedup import source_ngram_jaccard
     from mtsad_spark.operators.stats import hampel_filter, rolling_median
 
     t0 = dt.datetime(2024, 1, 1)
     tier = spark.createDataFrame(
         [("a", t0 + dt.timedelta(hours=i), 100 + i) for i in range(30)],
         "key string, ts timestamp, v long",
-    )
-    seq = spark.createDataFrame(
-        [("s%d" % (i % 3), t0 + dt.timedelta(seconds=60 * i), list(range(i, i + 8)))
-         for i in range(30)],
-        "source string, ts timestamp, tokens array<int>",
-    )
-    docs = spark.createDataFrame(
-        [("s%d" % (i % 3), "tok%d word%d the and" % (i, i % 7)) for i in range(30)],
-        "source string, text string",
     )
     from mtsad_spark.operators.prefix import (
         interval_coverage,
@@ -614,12 +524,6 @@ def test_r6_robust_and_corpus_ops_are_scale_clean(spark):
     frames = [
         rolling_median(tier, ["key"], "ts", "v", 5),
         hampel_filter(tier, ["key"], "ts", "v", 5),
-        zipf_slope(docs, "source", "text", top_k=100),
-        bigram_conditional_entropy(seq, "source", "tokens"),
-        bigram_pmi(seq, "source", "tokens", min_count=1, top_k=5),
-        source_ngram_jaccard(seq, "source", "tokens", n=2),
-        token_novelty(seq, "ts", "tokens", 900),
-        token_bucket_entropy(seq, "ts", "tokens", 900),
         interval_coverage(iv, ["key"], "st", "en"),
         pack_training_windows(packin, ["key"], "ord", "n", 64, coarse_width=4000),
         rollup_partials_multi(ev2, "ts", ["m1", "m2"], ["key"], "1m"),

@@ -509,76 +509,6 @@ def test_iceberg_fresh_checkpoint_refuses_existing_table(spark):
         sink2(ev, batch_id=0)
 
 
-def test_streaming_token_drift_matches_batch(spark, tmp_path):
-    """The tier-timeseries × tokens fusion END-TO-END in streaming: a
-    foreachBatch continuous aggregate keyed by TOKEN maintains the stored
-    per-bucket token histogram across micro-batches, and the drift read
-    path (token_drift_from_counts over the re-bucketed stored 1m tier) is
-    BITWISE equal to the batch token_distribution_drift over the same
-    rows."""
-    import datetime as dt
-
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from mtsad_spark.functions.text import (
-        token_distribution_drift,
-        token_drift_from_counts,
-    )
-    from mtsad_spark.plans.continuous import ContinuousAggregate
-    from mtsad_spark.streaming.continuous_stream import StreamingContinuousAggregate
-
-    rng = np.random.default_rng(31)
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    for b in range(3):
-        lo, hi = (0, 20) if b < 2 else (10, 40)
-        toks = rng.integers(lo, hi, size=300).tolist()
-        for j in range(0, len(toks), 50):
-            rows.append(
-                (t0 + dt.timedelta(seconds=600 * b + j // 50), toks[j : j + 50])
-            )
-    docs = spark.createDataFrame(rows, "ts timestamp, tokens array<int>")
-    V = 40
-
-    src = str(tmp_path / "src")
-    docs.repartition(3).write.parquet(src)
-    agg = ContinuousAggregate(
-        spark, str(tmp_path / "ca"), ["token"], "ts", "one"
-    )
-    sink = StreamingContinuousAggregate(agg)
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .select("ts", F.explode("tokens").alias("token"))
-        .withColumn("one", F.lit(1).cast("long"))
-    )
-    q = sink.start(stream, checkpoint=str(tmp_path / "ck"))
-    q.awaitTermination(120)
-    assert len(sink._applied()) >= 2, "expected multiple micro-batches"
-
-    stored = agg.read_partials("1m")
-    rebucketed = stored.groupBy(
-        (
-            (F.col("bucket_ts").cast("timestamp").cast("long") / 600).cast("long")
-            * 600
-        )
-        .cast("timestamp")
-        .alias("bucket_ts"),
-        "token",
-    ).agg(F.sum("cnt").alias("cnt"))
-    got = {
-        r["bucket_ts"]: (r["n_union"], r["kl"])
-        for r in token_drift_from_counts(rebucketed, 600, V).collect()
-    }
-    want = {
-        r["bucket_ts"]: (r["n_union"], r["kl"])
-        for r in token_distribution_drift(docs, "ts", "tokens", 600, V).collect()
-    }
-    assert got == want and len(got) == 2  # bitwise stream ≡ batch
-
-
 def test_streamed_store_feeds_robust_scorer_bitwise(spark, tmp_path):
     """North-star composition: micro-batches maintain the STORED tier
     tables (foreachBatch continuous aggregate), and the robust scorer

@@ -4,9 +4,10 @@ Usage: python tools/capture_plans.py <suffix> [query ...]
   suffix: "before" or "after" — written as plans/r07/<query>_<suffix>.txt
   with no query list, captures the full headline set.
 
-Plans are captured at $SPARK_GRAFT_SF_DIR (default sf1.0 — the driver's
-measurement scale in BENCH_r06.json) so join-strategy/AQE claims match what
-the bench actually runs.
+Plans are captured at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1, the
+same default as bench.py) so join-strategy/AQE claims match what the bench
+actually runs. Cores and driver heap follow mtsad_spark.session.get_spark
+(SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM).
 """
 
 from __future__ import annotations
@@ -40,15 +41,12 @@ HEADLINE = [
 def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:] or HEADLINE
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from mtsad_spark.session import get_spark
 
     spark = get_spark(
         "mtsad-plan-capture",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
         extra_confs={"spark.sql.files.maxPartitionBytes": "16m"},
     )
     spark.sparkContext.setLogLevel("ERROR")
