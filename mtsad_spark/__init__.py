@@ -14,10 +14,12 @@ Architecture (Spark-first, NOT a port):
 
 Subpackages:
   operators/  rollup, gapfill, scoring, supervised (lag/lead/windows), dedup,
-              similarity, splits
-  functions/  gorilla codec, text features and corpus statistics, metrics (P/R/F1)
+              similarity, splits, prefix sums, as-of join
+  functions/  gorilla codec, text quality features, metrics (P/R/F1)
   sources/    table provider seam (Iceberg catalog if present, parquet fallback)
-  plans/      end-to-end checkpointed pipeline with lineage + row-count metrics
+  plans/      end-to-end checkpointed pipeline with lineage + row-count metrics,
+              continuous aggregates
+  streaming/  watermarked 1m rollup, stateful EWMA, continuous-aggregate ingest
 """
 
 __version__ = "0.1.0"

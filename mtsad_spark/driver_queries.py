@@ -1281,67 +1281,6 @@ def dup_group_size_hist_docs(spark, sf_dir):
     )
 
 
-@_q(
-    "funnel_timeout_conversion_1d",
-    """
-    WITH ue AS (SELECT user_id, ts, event_type FROM events
-                WHERE event_type IN ('view', 'purchase')),
-    nx AS (SELECT user_id, ts, event_type,
-                  min(CASE WHEN event_type = 'purchase' THEN ts END)
-                    OVER (PARTITION BY user_id ORDER BY ts
-                          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-                    AS next_p
-           FROM ue),
-    v AS (SELECT date_trunc('day', ts) AS day_ts,
-                 CASE WHEN next_p IS NOT NULL
-                      AND next_p <= ts + INTERVAL 24 HOUR THEN 1 ELSE 0 END AS conv
-          FROM nx WHERE event_type = 'view')
-    SELECT day_ts, CAST(count(*) AS BIGINT) AS n_views,
-           CAST(sum(conv) AS BIGINT) AS n_converted,
-           CAST(sum(conv) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS cvr
-    FROM v GROUP BY 1
-    """,
-)
-def funnel_timeout_conversion_1d(spark, sf_dir):
-    """Timeout-bounded funnel conversion: of each day's 'view' events, the
-    share whose SAME USER purchases within 24h — the time-bounded variant
-    of the ordered funnel (industry-standard conversion-window semantics).
-    The next-purchase timestamp is a reverse running min per user (the
-    sessionize-style per-user window over its two event types only); cvr
-    is ONE division of exact BIGINTs."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    w = Window.partitionBy("user_id").orderBy("ts").rowsBetween(
-        Window.currentRow, Window.unboundedFollowing
-    )
-    nx = ev.withColumn(
-        "next_p",
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).over(w),
-    )
-    v = nx.filter(F.col("event_type") == "view").select(
-        F.date_trunc("day", "ts").alias("day_ts"),
-        F.when(
-            F.col("next_p").isNotNull()
-            & (F.col("next_p") <= F.col("ts") + F.expr("INTERVAL 24 HOURS")),
-            1,
-        )
-        .otherwise(0)
-        .alias("conv"),
-    )
-    return v.groupBy("day_ts").agg(
-        F.count(F.lit(1)).alias("n_views"),
-        F.sum("conv").alias("n_converted"),
-        (
-            F.sum("conv").cast("double") / F.count(F.lit(1)).cast("double")
-        ).alias("cvr"),
-    )
-
-
 _SH60_BITS = 60
 _SH60_SQL = (
     r"WITH toks AS (SELECT doc_id, unnest(regexp_extract_all(lower(text), '\S+')) AS tok"
@@ -1987,55 +1926,6 @@ def cross_series_correlation(spark, sf_dir):
     )
 
 
-def _with_session_ids(ev, sid_col: str = "session_id"):
-    """Shared 30-min-gap sessionization (lag + cumsum boundary trick) — the
-    ONE definition behind sessionize_users / session_concurrency_1m /
-    session_type_lift (code-review r6: three verbatim copies risked silent
-    divergence). The boundary rule (strict ``ts > prev + 30min``, event_id
-    tiebreak) must stay consistent with
-    streaming/sessionize_stream.sessionize's strict-boundary semantics."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    prev = F.lag("ts").over(w)
-    new_s = F.when(
-        prev.isNull() | (F.col("ts") > prev + F.expr("INTERVAL 30 MINUTES")), 1
-    ).otherwise(0)
-    return (
-        ev.withColumn("_n", new_s)
-        .withColumn(sid_col, F.sum("_n").over(cum))
-        .drop("_n")
-    )
-
-
-@_q(
-    "sessionize_users",
-    """
-    WITH g AS (SELECT user_id, ts, event_id,
-                      CASE WHEN ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                           OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_s
-               FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         s AS (SELECT user_id, ts,
-                      sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-               FROM g)
-    SELECT user_id, CAST(session_id AS BIGINT) AS session_id, count(*) AS n_events,
-           min(ts) AS session_start, max(ts) AS session_end
-    FROM s GROUP BY 1, 2
-    """,
-)
-def sessionize_users(spark, sf_dir):
-    """Gap-based sessionization (30-min inactivity): cumulative-sum-of-
-    boundaries trick — two window passes, no UDF, scales per user key."""
-    s = _with_session_ids(_t(spark, sf_dir, "events"))
-    return s.groupBy("user_id", "session_id").agg(
-        F.count("*").alias("n_events"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-    )
-
-
 @_q(
     "distinct_users_1d",
     """
@@ -2075,44 +1965,6 @@ def asof_enrich_events(spark, sf_dir):
     return out.select(
         "event_id", "ts", "event_type", F.round("avg_v", 6).alias("last_hourly_avg")
     )
-
-
-@_q(
-    "events_in_sessions_range_join",
-    """
-    WITH g AS (SELECT user_id, ts, event_id,
-                      CASE WHEN ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                           OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_s
-               FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         s AS (SELECT user_id, ts,
-                      sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-               FROM g),
-         iv AS (SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-                       min(ts) AS session_start, max(ts) AS session_end
-                FROM s GROUP BY 1, 2)
-    SELECT e.event_id, e.user_id, iv.session_id
-    FROM events e JOIN iv
-      ON e.user_id = iv.user_id
-     AND e.ts BETWEEN iv.session_start AND iv.session_end
-    """,
-)
-def events_in_sessions_range_join(spark, sf_dir):
-    """Point-in-interval range join (operators/joins.py, binned): events land
-    in their own sessionization intervals — binning keeps the join an
-    equi-join on (user, hour-bin) instead of |events|x|sessions|. The oracle
-    is DuckDB's plain range join over identical intervals."""
-    from mtsad_spark.operators.joins import interval_join_binned
-
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    sessions = sessionize_users(spark, sf_dir).select(
-        "user_id", "session_id", "session_start", "session_end"
-    )
-    out = interval_join_binned(
-        ev, sessions, ["user_id"], "ts", "session_start", "session_end",
-        bin_width_s=3600,
-    )
-    return out.select("event_id", "user_id", "session_id")
 
 
 @_q(
@@ -2863,58 +2715,6 @@ def rolling_minmax_channel_1h(spark, sf_dir):
 
 
 @_q(
-    "returning_users_1d",
-    """
-    WITH d AS (SELECT DISTINCT event_type, date_trunc('day', ts) AS bucket_ts, user_id
-               FROM events)
-    SELECT a.event_type, a.bucket_ts,
-           count(DISTINCT a.user_id) AS n_today,
-           count(DISTINCT CASE WHEN b.user_id IS NOT NULL THEN a.user_id END) AS n_returning,
-           TRUE AS est_ok
-    FROM d a
-    LEFT JOIN d b ON b.event_type = a.event_type AND b.user_id = a.user_id
-                 AND b.bucket_ts = a.bucket_ts - INTERVAL 1 DAY
-    GROUP BY 1, 2
-    """,
-)
-def returning_users_1d(spark, sf_dir):
-    """Day-over-day returning users via Theta-sketch set intersection
-    (rollup.distinct_overlap_1d) — the set-operation tier HLL cannot express.
-    Spark's Theta sketches are deterministic and partition-invariant
-    (probed), but the estimate is still engine-specific, so the driver
-    checks exact n_today / n_returning plus ``est_ok``: both sketch
-    estimates within 5% + 1 of the exact counts (exact below the sketch's
-    nominal entries, which covers every sandbox scale factor)."""
-    from mtsad_spark.operators.rollup import distinct_overlap_1d
-
-    ev = _t(spark, sf_dir, "events")
-    est = distinct_overlap_1d(ev, "ts", "user_id", ["event_type"])
-    day = F.date_trunc("day", "ts")
-    d = ev.select("event_type", day.alias("bucket_ts"), "user_id").distinct()
-    prev = d.select(
-        "event_type",
-        F.date_add("bucket_ts", 1).cast("timestamp").alias("bucket_ts"),
-        "user_id",
-    )
-    exact = (
-        d.join(prev.withColumn("_ret", F.lit(1)), ["event_type", "bucket_ts", "user_id"], "left")
-        .groupBy("event_type", "bucket_ts")
-        .agg(
-            F.count_distinct("user_id").alias("n_today"),
-            F.count_distinct(F.when(F.col("_ret") == 1, F.col("user_id"))).alias("n_returning"),
-        )
-    )
-    out = est.join(exact, ["event_type", "bucket_ts"])
-    ok = (
-        F.abs(F.col("n_today_est") - F.col("n_today")) <= 0.05 * F.col("n_today") + 1
-    ) & (
-        F.abs(F.col("returning_est") - F.col("n_returning"))
-        <= 0.05 * F.col("n_returning") + 1
-    )
-    return out.select("event_type", "bucket_ts", "n_today", "n_returning", ok.alias("est_ok"))
-
-
-@_q(
     "quantile_rollup_1d_kll",
     """
     SELECT event_type, date_trunc('day', ts) AS bucket_ts, count(*) AS n_rows,
@@ -2985,83 +2785,9 @@ def m4_downsample_1h(spark, sf_dir):
     return m4_downsample(hourly, ["event_type"], "bucket_ts", "avg_v", 21600.0)
 
 
-def _packing_sql() -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH
-
-    return f"""
-    WITH d AS (SELECT source, CAST(substr(doc_id, 5, 10) AS BIGINT) AS doc_idx,
-                      CAST(n_tok AS BIGINT) AS n_tok
-               FROM '{SEQFIX_PATH}'),
-         p AS (SELECT source, doc_idx, n_tok,
-                      CAST(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_idx)
-                        - n_tok AS BIGINT) AS excl
-               FROM d)
-    SELECT source, excl // 8192 AS bin,
-           count(*) AS n_docs, CAST(sum(n_tok) AS BIGINT) AS tok_in_bin
-    FROM p GROUP BY 1, 2
-    """
-
-
-@_q("token_packing_bins", _packing_sql())
-def token_packing_bins(spark, sf_dir):
-    """Training-sequence packing stats: contiguous next-fit packing of the
-    tokenized docs into 8192-token bins per source (operators/prefix.py
-    pack_sequences — keyed prefix sum composed from per-(key, coarse-bucket)
-    partials, no bare-key window over raw rows). The oracle's serial window
-    cumsum is the semantic spec; the engine computes the same totals with
-    bounded sequential work. Integer token counts ⇒ exact cross-engine."""
-    from mtsad_spark.fixture_cache import ensure_seqfix
-    from mtsad_spark.operators.prefix import pack_sequences
-
-    seq = _seqfix_df(spark).select(
-        "source",
-        F.substring("doc_id", 5, 10).cast("long").alias("doc_idx"),
-        F.col("n_tok").cast("long").alias("n_tok"),
-    )
-    packed = pack_sequences(
-        seq, ["source"], "doc_idx", "n_tok", capacity=8192, coarse_width=1024.0
-    )
-    return packed.groupBy("source", "bin").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("n_tok").alias("tok_in_bin")
-    )
-
-
-@_q(
-    "session_window_users",
-    """
-    WITH o AS (SELECT user_id, ts,
-                      lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-               FROM events),
-         b AS (SELECT user_id, ts,
-                      CASE WHEN prev IS NULL OR ts >= prev + INTERVAL 30 MINUTE
-                           THEN 1 ELSE 0 END AS nb
-               FROM o),
-         s AS (SELECT user_id, ts,
-                      sum(nb) OVER (PARTITION BY user_id ORDER BY ts) AS sid
-               FROM b)
-    SELECT user_id, min(ts) AS session_start,
-           max(ts) + INTERVAL 30 MINUTE AS session_end,
-           count(*) AS n_events
-    FROM s GROUP BY user_id, sid
-    """,
-)
-def session_window_users(spark, sf_dir):
-    """Native ``session_window`` sessionization (streaming/
-    sessionize_stream.sessionize — the same expression drives the
-    Structured-Streaming form), oracled against the classic cumulative-sum-
-    of-boundaries algebra. The boundary predicate is ``ts >= prev + gap``:
-    session_window keeps an event iff strictly before last+gap, so an event
-    at exactly the gap boundary starts a new session. Tie rows (equal ts)
-    are boundary-0 either way, so the tie order cannot shift a session."""
-    from mtsad_spark.streaming.sessionize_stream import sessionize
-
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts")
-    return sessionize(ev, key_col="user_id", ts_col="ts", gap="30 minutes")
-
-
 # =====================================================================
 # Continuous-aggregate engine surface (r5): incremental refresh, tier-
-# stitched range queries, deterministic sampling
+# stitched range queries
 # =====================================================================
 
 _STITCH_T0, _STITCH_T1 = "2024-01-03 05:17:00", "2024-01-27 21:43:00"
@@ -3166,52 +2892,6 @@ def continuous_aggregate_refresh(spark, sf_dir):
         (F.col("s1").cast("double") / F.lit(100.0)).alias("sum_v"),
         (F.col("s1").cast("double") / (F.lit(100.0) * F.col("cnt"))).alias("avg_v"),
     )
-
-
-@_q(
-    "hash_sample_events",
-    """
-    WITH h AS (SELECT event_type, event_id,
-                      CAST('0x' || substr(md5('42|' || CAST(event_id AS VARCHAR)), 1, 15)
-                           AS BIGINT) AS hv
-               FROM events),
-         r AS (SELECT event_type, event_id,
-                      row_number() OVER (PARTITION BY event_type
-                                         ORDER BY hv, event_id) AS rn
-               FROM h)
-    SELECT event_type, event_id, CAST(rn - 1 AS BIGINT) AS sample_rank
-    FROM r WHERE rn <= 40
-    """,
-)
-def hash_sample_events(spark, sf_dir):
-    """Deterministic per-key uniform sample (operators/splits.
-    hash_ranked_sample): 40 events per event_type by smallest md5(seed|id) —
-    reproducible in any engine, and scale-clean: per-key rank composed from
-    per-(key, hash-bucket) counts with top-k bucket pruning, never a
-    bare-key window over raw rows. The oracle's serial window is the
-    semantic spec."""
-    from mtsad_spark.operators.splits import hash_ranked_sample
-
-    ev = _t(spark, sf_dir, "events").select("event_type", "event_id")
-    out = hash_ranked_sample(ev, ["event_type"], "event_id", k=40, seed=42)
-    return out.select("event_type", "event_id", "sample_rank")
-
-
-def _heavy_hitters_sql() -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH
-
-    return f"""
-    WITH tok AS (SELECT source, unnest(tokens) AS token FROM '{SEQFIX_PATH}'),
-         cnt AS (SELECT source, token, count(*) AS cnt FROM tok GROUP BY 1, 2),
-         tot AS (SELECT source, count(*) AS total FROM tok GROUP BY 1),
-         r AS (SELECT cnt.source, token, cnt,
-                      CAST(row_number() OVER (PARTITION BY cnt.source
-                                              ORDER BY cnt DESC, token) AS INTEGER) AS rank,
-                      CAST(cnt AS DOUBLE) / total AS support
-               FROM cnt JOIN tot USING (source))
-    SELECT source, token, CAST(cnt AS BIGINT) AS cnt, rank, support
-    FROM r WHERE rank <= 20
-    """
 
 
 @_q(
@@ -3347,51 +3027,6 @@ def counter_rate_1h(spark, sf_dir):
     )
     out = counter_rate(ctr, ["event_type"], "bucket_ts", "counter")
     return out.select("event_type", "bucket_ts", "counter", "increase", "rate")
-
-
-def _zorder_sql(bits: int = 21) -> str:
-    expr = " + ".join(
-        f"(((a >> {j}) & 1) << {2 * j}) + (((b >> {j}) & 1) << {2 * j + 1})"
-        for j in range(bits)
-    )
-    return f"""
-    WITH m AS (SELECT event_id,
-                      event_id % {1 << bits} AS a,
-                      user_id % {1 << bits} AS b
-               FROM events)
-    SELECT event_id, CAST({expr} AS BIGINT) AS z FROM m
-    """
-
-
-@_q("zorder_key_events", _zorder_sql())
-def zorder_key_events(spark, sf_dir):
-    """Z-order (Morton) clustering key (sources/tables.zorder_key — the
-    Delta/Iceberg OPTIMIZE ZORDER idea as a deterministic column
-    expression): 21-bit interleave of (event_id, user_id), the multi-column
-    file-skipping axis linear range clustering can't provide. Exact integer
-    bit algebra — bitwise cross-engine."""
-    from mtsad_spark.sources.tables import zorder_key
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id",
-        (F.col("event_id") % (1 << 21)).alias("a"),
-        (F.col("user_id") % (1 << 21)).alias("b"),
-    )
-    return ev.select("event_id", zorder_key("a", "b").alias("z"))
-
-
-@_q("token_heavy_hitters_seqfix", _heavy_hitters_sql())
-def token_heavy_hitters_seqfix(spark, sf_dir):
-    """Per-source heavy-hitter tokens (operators/rollup.token_heavy_hitters):
-    the frequency member of the tier-sketch family (HLL distinct / KLL
-    quantiles / Theta overlap / frequency). Exact counts with deterministic
-    (cnt DESC, token) tie-break; support is one division of exact longs —
-    bitwise cross-engine."""
-    from mtsad_spark.fixture_cache import ensure_seqfix
-    from mtsad_spark.operators.rollup import token_heavy_hitters
-
-    seq = _seqfix_df(spark).select("source", "tokens")
-    return token_heavy_hitters(seq, ["source"], "tokens", k=20)
 
 
 @_q(
@@ -3724,69 +3359,6 @@ def lttb_downsample_1h(spark, sf_dir):
     return out.select("event_type", "bucket_ts", "load", "sel_pos")
 
 
-def _mixture_sql() -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH
-
-    return f"""
-    WITH docs AS (SELECT doc_id, source, CAST(n_tok AS BIGINT) AS n_tok
-                  FROM '{SEQFIX_PATH}'),
-         bud AS (SELECT CAST(sum(n_tok) * 35 // 100 AS BIGINT) AS B FROM docs),
-         tot AS (SELECT source, CAST(sum(n_tok) AS BIGINT) AS tot
-                 FROM docs GROUP BY 1),
-         s1 AS (SELECT source, tot,
-                       CAST(floor(sqrt(CAST(tot AS DOUBLE))) AS BIGINT) AS s0
-                FROM tot),
-         w AS (SELECT source, tot,
-                      s0 - CASE WHEN s0 * s0 > tot THEN 1 ELSE 0 END
-                         + CASE WHEN (s0 + 1) * (s0 + 1) <= tot THEN 1 ELSE 0 END AS wt
-               FROM s1),
-         tw AS (SELECT source, tot, wt,
-                       CAST(sum(wt) OVER () AS BIGINT) AS wsum, B
-                FROM w, bud),
-         ap AS (SELECT source, tot, B,
-                       CAST(CAST(B AS HUGEINT) * wt // wsum AS BIGINT) AS base,
-                       CAST(CAST(B AS HUGEINT) * wt % wsum AS BIGINT) AS rem
-                FROM tw),
-         lo AS (SELECT source, tot, base,
-                       CAST(B - sum(base) OVER () AS BIGINT) AS L,
-                       row_number() OVER (ORDER BY rem DESC, source) AS rk
-                FROM ap),
-         q AS (SELECT source,
-                      LEAST(base + CASE WHEN rk <= L THEN 1 ELSE 0 END, tot) AS quota
-               FROM lo),
-         h AS (SELECT source, doc_id, n_tok,
-                      CAST('0x' || substr(md5('42|' || doc_id), 1, 15) AS BIGINT) AS hv
-               FROM docs),
-         c AS (SELECT source, doc_id, n_tok, hv,
-                      CAST(sum(n_tok) OVER (PARTITION BY source
-                                            ORDER BY hv, doc_id) AS BIGINT) AS cum_tok
-               FROM h)
-    SELECT c.source, c.doc_id, c.n_tok, c.cum_tok, CAST(q.quota AS BIGINT) AS quota
-    FROM c JOIN q USING (source) WHERE cum_tok <= quota
-    """
-
-
-@_q("mixture_sample_seqfix", _mixture_sql())
-def mixture_sample_seqfix(spark, sf_dir):
-    """Token-budget mixture resampling (operators/splits.mixture_token_sample
-    — the α=0.5 temperature data-mixing step of an LLM training pipeline):
-    35% of the corpus's tokens apportioned across sources by exact
-    largest-remainder rounding over isqrt weights, documents then selected
-    per source in deterministic md5 hash order until the quota fills. The
-    oracle's serial per-source window is the semantic spec; the engine runs
-    the bucket-composed prefix sum with quota-reached bucket pruning. The
-    single driver-side collect is the 1-row corpus token total (bounded)."""
-    from mtsad_spark.fixture_cache import ensure_seqfix
-    from mtsad_spark.operators.splits import mixture_token_sample
-
-    seq = _seqfix_df(spark).select("source", "doc_id", "n_tok")
-    total = seq.agg(F.sum(F.col("n_tok").cast("long"))).collect()[0][0]
-    out = mixture_token_sample(
-        seq, "source", "doc_id", "n_tok", int(total) * 35 // 100
-    )
-    return out.select("source", "doc_id", "n_tok", "cum_tok", "quota")
-
-
 @_q(
     "rolling_corr_24h",
     """
@@ -3930,195 +3502,6 @@ def sliding_distinct_3d_hll(spark, sf_dir):
             F.abs(F.col("distinct_est") - F.col("n_exact"))
             <= 0.05 * F.col("n_exact")
         ).alias("est_ok"),
-    )
-
-
-@_q(
-    "session_concurrency_1m",
-    """
-    WITH g AS (SELECT user_id, ts, event_id,
-                      CASE WHEN ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                           OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_s
-               FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         s AS (SELECT user_id, ts,
-                      sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-               FROM g),
-         sess AS (SELECT user_id, session_id, min(ts) AS st, max(ts) AS en
-                  FROM s GROUP BY 1, 2),
-         d AS (SELECT make_timestamp(((CAST(floor(epoch(st)) AS BIGINT) // 60) * 60)
-                                     * 1000000) AS bucket_ts,
-                      CAST(1 AS BIGINT) AS dd
-               FROM sess
-               UNION ALL
-               SELECT make_timestamp(((CAST(floor(epoch(en)) AS BIGINT) // 60) * 60 + 60)
-                                     * 1000000) AS bucket_ts,
-                      CAST(-1 AS BIGINT) AS dd
-               FROM sess),
-         agg AS (SELECT bucket_ts, CAST(sum(dd) AS BIGINT) AS delta
-                 FROM d GROUP BY 1)
-    SELECT bucket_ts, delta,
-           CAST(sum(delta) OVER (ORDER BY bucket_ts
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-             AS concurrent
-    FROM agg
-    """,
-)
-def session_concurrency_1m(spark, sf_dir):
-    """Concurrent-session curve (operators/prefix.concurrency_curve over
-    the 30-min-gap sessionization): +1/−1 difference algebra per minute
-    bucket, running count composed from per-coarse-bucket partial sums —
-    the oracle's serial global window is the semantic spec; the engine's
-    only sequential window runs over the bucket-count frame. Sparse
-    change-point rows (compose with LOCF gap-fill for a dense spine)."""
-    from mtsad_spark.operators.prefix import concurrency_curve
-
-    sess = (
-        _with_session_ids(_t(spark, sf_dir, "events"))
-        .groupBy("user_id", "session_id")
-        .agg(F.min("ts").alias("st"), F.max("ts").alias("en"))
-    )
-    return concurrency_curve(sess, "st", "en", 60)
-
-
-@_q(
-    "cohort_retention_1d",
-    """
-    WITH act AS (SELECT DISTINCT user_id,
-                        CAST(date_trunc('day', ts) AS TIMESTAMP) AS d
-                 FROM events),
-         first AS (SELECT user_id, min(d) AS cohort_day FROM act GROUP BY 1),
-         sizes AS (SELECT cohort_day, CAST(count(*) AS BIGINT) AS cohort_size
-                   FROM first GROUP BY 1)
-    SELECT f.cohort_day,
-           CAST((epoch(a.d) - epoch(f.cohort_day)) // 86400 AS BIGINT) AS day_offset,
-           CAST(count(*) AS BIGINT) AS n_active,
-           sizes.cohort_size
-    FROM act a
-    JOIN first f USING (user_id)
-    JOIN sizes ON sizes.cohort_day = f.cohort_day
-    GROUP BY 1, 2, 4
-    """,
-)
-def cohort_retention_1d(spark, sf_dir):
-    """Cohort retention triangle — users grouped by first-seen day, counted
-    on each later active day (the standard growth-analytics matrix).
-    Pure exact algebra: distinct (user, day) activity (map-side combined),
-    per-user min-day cohort fit (key-proportional aggregate, hint-free
-    join per the fit_join rule), integer day offsets, BIGINT counts —
-    no windows at all, no floats."""
-    ev = _t(spark, sf_dir, "events")
-    act = ev.select(
-        "user_id", F.date_trunc("day", "ts").cast("timestamp").alias("d")
-    ).distinct()
-    from mtsad_spark.plans.scope import scoped_persist
-
-    act = scoped_persist(act)  # feeds cohort fit AND the activity join
-    first = act.groupBy("user_id").agg(F.min("d").alias("cohort_day"))
-    sizes = first.groupBy("cohort_day").agg(
-        F.count(F.lit(1)).alias("cohort_size")
-    )
-    j = act.join(first, "user_id")
-    off = (
-        (F.col("d").cast("long") - F.col("cohort_day").cast("long"))
-        / F.lit(86400)
-    ).cast("long")
-    return (
-        j.groupBy("cohort_day", off.alias("day_offset"))
-        .agg(F.count(F.lit(1)).alias("n_active"))
-        .join(sizes, "cohort_day")
-        .select("cohort_day", "day_offset", "n_active", "cohort_size")
-    )
-
-
-@_q(
-    "funnel_view_click_purchase_1d",
-    """
-    WITH ev AS (SELECT user_id, event_type, ts,
-                       CAST(date_trunc('day', ts) AS TIMESTAMP) AS d
-                FROM events),
-         s1 AS (SELECT user_id, d,
-                       min(CASE WHEN event_type = 'view' THEN ts END) AS t1
-                FROM ev GROUP BY 1, 2),
-         s2 AS (SELECT e.user_id, e.d,
-                       min(CASE WHEN e.event_type = 'click'
-                                AND e.ts >= s1.t1 THEN e.ts END) AS t2
-                FROM ev e JOIN s1 ON s1.user_id = e.user_id AND s1.d = e.d
-                WHERE s1.t1 IS NOT NULL
-                GROUP BY 1, 2),
-         s3 AS (SELECT e.user_id, e.d,
-                       min(CASE WHEN e.event_type = 'purchase'
-                                AND e.ts >= s2.t2 THEN e.ts END) AS t3
-                FROM ev e JOIN s2 ON s2.user_id = e.user_id AND s2.d = e.d
-                WHERE s2.t2 IS NOT NULL
-                GROUP BY 1, 2)
-    SELECT s1.d AS day_ts,
-           CAST(count(*) AS BIGINT) AS n_view,
-           CAST(count(s2.t2) AS BIGINT) AS n_view_click,
-           CAST(count(s3.t3) AS BIGINT) AS n_view_click_purchase
-    FROM s1
-    LEFT JOIN s2 ON s2.user_id = s1.user_id AND s2.d = s1.d
-    LEFT JOIN s3 ON s3.user_id = s1.user_id AND s3.d = s1.d
-    WHERE s1.t1 IS NOT NULL
-    GROUP BY 1
-    """,
-)
-def funnel_view_click_purchase_1d(spark, sf_dir):
-    """Ordered three-step funnel per day (view → click-after-view →
-    purchase-after-click), the standard product-analytics conversion
-    query: each step is a conditional-min aggregate gated on the previous
-    step's timestamp — three map-side-combined agg passes with
-    (user, day) equi-joins, no windows, all-integer outputs. The raw-event
-    frame is scope-persisted across the three passes."""
-    from mtsad_spark.plans.scope import scoped_persist
-
-    ev = scoped_persist(
-        _t(spark, sf_dir, "events").select(
-            "user_id",
-            "event_type",
-            "ts",
-            F.date_trunc("day", "ts").cast("timestamp").alias("d"),
-        )
-    )
-    s1 = ev.groupBy("user_id", "d").agg(
-        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t1")
-    ).filter(F.col("t1").isNotNull())
-    s2 = (
-        ev.join(s1, ["user_id", "d"])
-        .groupBy("user_id", "d")
-        .agg(
-            F.min(
-                F.when(
-                    (F.col("event_type") == "click") & (F.col("ts") >= F.col("t1")),
-                    F.col("ts"),
-                )
-            ).alias("t2")
-        )
-        .filter(F.col("t2").isNotNull())
-    )
-    s3 = (
-        ev.join(s2, ["user_id", "d"])
-        .groupBy("user_id", "d")
-        .agg(
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("ts") >= F.col("t2")),
-                    F.col("ts"),
-                )
-            ).alias("t3")
-        )
-        .filter(F.col("t3").isNotNull())
-    )
-    return (
-        s1.join(s2.select("user_id", "d", "t2"), ["user_id", "d"], "left")
-        .join(s3.select("user_id", "d", "t3"), ["user_id", "d"], "left")
-        .groupBy(F.col("d").alias("day_ts"))
-        .agg(
-            F.count(F.lit(1)).alias("n_view"),
-            F.count("t2").alias("n_view_click"),
-            F.count("t3").alias("n_view_click_purchase"),
-        )
     )
 
 
@@ -4304,82 +3687,6 @@ def seasonal_strength_1h(spark, sf_dir):
         "event_type", F.date_trunc("hour", "ts").alias("bt")
     ).agg(F.sum(cents).alias("load"))
     return seasonal_strength(hload, ["event_type"], "bt", "load")
-
-
-@_q(
-    "session_type_lift",
-    """
-    WITH g AS (SELECT user_id, ts, event_id, event_type,
-                      CASE WHEN ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                           OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_s
-               FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         s AS (SELECT user_id, event_type,
-                      sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-               FROM g),
-         st AS (SELECT DISTINCT user_id, sid, event_type FROM s),
-         n AS (SELECT CAST(count(DISTINCT (user_id, sid)) AS BIGINT) AS n_sessions
-               FROM st),
-         marg AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_t
-                  FROM st GROUP BY 1),
-         pairs AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-                          CAST(count(*) AS BIGINT) AS n_ab
-                   FROM st a JOIN st b
-                     ON a.user_id = b.user_id AND a.sid = b.sid
-                    AND a.event_type < b.event_type
-                   GROUP BY 1, 2)
-    SELECT p.type_a, p.type_b, ma.n_t AS n_a, mb.n_t AS n_b, p.n_ab,
-           n.n_sessions,
-           CAST(n.n_sessions * p.n_ab AS DOUBLE)
-             / CAST(ma.n_t * mb.n_t AS DOUBLE) AS lift
-    FROM pairs p
-    JOIN marg ma ON ma.event_type = p.type_a
-    JOIN marg mb ON mb.event_type = p.type_b, n
-    """,
-)
-def session_type_lift(spark, sf_dir):
-    """Event-type co-occurrence lift within 30-min sessions (market-basket
-    association over the sessionization the engine already computes):
-    lift(a,b) = N·n_ab/(n_a·n_b) — all counts BIGINT, one float division,
-    bitwise. The pair join runs on DISTINCT (session, type) rows — at most
-    |types| per session, never event-sized fan-out."""
-    from mtsad_spark.plans.scope import scoped_persist
-
-    st = scoped_persist(
-        _with_session_ids(_t(spark, sf_dir, "events"), "sid")
-        .select("user_id", "sid", "event_type")
-        .distinct()
-    )
-    n = st.select("user_id", "sid").distinct().agg(
-        F.count(F.lit(1)).alias("n_sessions")
-    )
-    marg = st.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_t"))
-    a = st.select("user_id", "sid", F.col("event_type").alias("type_a"))
-    b = st.select("user_id", "sid", F.col("event_type").alias("type_b"))
-    pairs = (
-        a.join(b, ["user_id", "sid"])
-        .filter(F.col("type_a") < F.col("type_b"))
-        .groupBy("type_a", "type_b")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-    )
-    out = (
-        pairs.join(
-            marg.select(F.col("event_type").alias("type_a"), F.col("n_t").alias("n_a")),
-            "type_a",
-        )
-        .join(
-            marg.select(F.col("event_type").alias("type_b"), F.col("n_t").alias("n_b")),
-            "type_b",
-        )
-        .crossJoin(F.broadcast(n))
-    )
-    return out.select(
-        "type_a", "type_b", "n_a", "n_b", "n_ab", "n_sessions",
-        (
-            (F.col("n_sessions") * F.col("n_ab")).cast("double")
-            / (F.col("n_a") * F.col("n_b")).cast("double")
-        ).alias("lift"),
-    )
 
 
 _HOURLY_LOAD_CTE = (
@@ -4673,173 +3980,6 @@ def hampel_filter_1h(spark, sf_dir):
 
 
 @_q(
-    "hourly_top_user_1h",
-    """
-    WITH c AS (SELECT event_type, date_trunc('hour', ts) AS b, user_id,
-                      CAST(count(*) AS BIGINT) AS cnt
-               FROM events GROUP BY 1, 2, 3),
-    t AS (SELECT event_type, b, CAST(sum(cnt) AS BIGINT) AS tot
-          FROM c GROUP BY 1, 2),
-    r AS (SELECT *, row_number() OVER (PARTITION BY event_type, b
-                     ORDER BY cnt DESC, user_id ASC) AS rk
-          FROM c)
-    SELECT r.event_type, r.b AS bucket_ts,
-           CAST(r.user_id AS BIGINT) AS top_user,
-           CAST(r.cnt AS BIGINT) AS n_top, t.tot AS n_events,
-           CAST(r.cnt AS DOUBLE) / CAST(t.tot AS DOUBLE) AS share
-    FROM r JOIN t USING (event_type, b) WHERE rk = 1
-    """,
-)
-def hourly_top_user_1h(spark, sf_dir):
-    """Per-bucket MODE: the dominant user per (event_type, hour) with its
-    share — deterministic tie-break (count desc, user asc) instead of the
-    engines' differing mode() tie rules; the rank runs over the
-    (type, hour, user) COUNT frame (aggregate-sized, never raw rows) and
-    share is one division of exact BIGINTs."""
-    from pyspark.sql import Window
-
-    ev = _t(spark, sf_dir, "events")
-    c = ev.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("bucket_ts"), "user_id"
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    # totals as a window sum over the SAME aggregate frame — one events
-    # scan, no self-join (code-review r6: the join form scanned twice)
-    wtot = Window.partitionBy("event_type", "bucket_ts")
-    w = wtot.orderBy(F.desc("cnt"), F.asc("user_id"))
-    r = (
-        c.withColumn("n_events", F.sum("cnt").over(wtot))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-    )
-    return r.select(
-        "event_type",
-        "bucket_ts",
-        F.col("user_id").cast("long").alias("top_user"),
-        F.col("cnt").alias("n_top"),
-        "n_events",
-        (F.col("cnt").cast("double") / F.col("n_events").cast("double")).alias(
-            "share"
-        ),
-    )
-
-
-@_q(
-    "session_coverage_1d",
-    """
-    WITH g AS (SELECT user_id, ts, event_id,
-                      CASE WHEN ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                           OR lag(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_s
-               FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-    sess AS (SELECT user_id, ts,
-                    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-             FROM g),
-    iv AS (SELECT user_id, CAST(floor(epoch(min(ts))) AS BIGINT) AS s,
-                  CAST(floor(epoch(max(ts))) AS BIGINT) AS e
-           FROM sess GROUP BY user_id, sid
-           HAVING CAST(floor(epoch(max(ts))) AS BIGINT)
-                  > CAST(floor(epoch(min(ts))) AS BIGINT)),
-    seg AS (SELECT user_id, CAST(d AS BIGINT) AS d,
-                   GREATEST(s, d * 86400) AS ss, LEAST(e, (d + 1) * 86400) AS se
-            FROM iv, unnest(generate_series(s // 86400, (e - 1) // 86400)) AS t(d)),
-    isl AS (SELECT *, CASE WHEN max(se) OVER wp IS NULL OR ss > max(se) OVER wp
-                           THEN 1 ELSE 0 END AS ni
-            FROM seg WINDOW wp AS (PARTITION BY user_id, d ORDER BY ss, se
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-    ii AS (SELECT *, sum(ni) OVER (PARTITION BY user_id, d ORDER BY ss, se
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl_id
-           FROM isl),
-    pi AS (SELECT user_id, d, isl_id, CAST(max(se) - min(ss) AS BIGINT) AS len,
-                  CAST(count(*) AS BIGINT) AS nseg
-           FROM ii GROUP BY 1, 2, 3)
-    SELECT CAST(user_id AS BIGINT) AS user_id,
-           make_timestamp(d * 86400 * 1000000) AS day_ts,
-           CAST(sum(len) AS BIGINT) AS covered_s,
-           CAST(sum(nseg) AS BIGINT) AS n_intervals,
-           CAST(count(*) AS BIGINT) AS n_islands,
-           CAST(sum(len) AS DOUBLE) / 86400.0 AS utilization
-    FROM pi GROUP BY 1, 2
-    """,
-)
-def session_coverage_1d(spark, sf_dir):
-    """Active-session UPTIME per (user, day) — union-of-intervals coverage
-    (operators/prefix.interval_coverage): session [first_ts, last_ts)
-    intervals merge without double-counting overlaps, split exactly at
-    midnight, all LONG seconds; one division for utilization. The
-    TimescaleDB state_agg/uptime question over the engine's own
-    sessionization; single-event sessions (zero length) drop."""
-    from mtsad_spark.operators.prefix import interval_coverage
-
-    sess = (
-        _with_session_ids(_t(spark, sf_dir, "events"))
-        .groupBy("user_id", "session_id")
-        .agg(F.min("ts").alias("st"), F.max("ts").alias("en"))
-    )
-    out = interval_coverage(sess, ["user_id"], "st", "en")
-    return out.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        "day_ts", "covered_s", "n_intervals", "n_islands", "utilization",
-    )
-
-
-def _pack_windows_sql(capacity: int = 2048) -> str:
-    from mtsad_spark.fixture_cache import SEQFIX_PATH
-
-    return f"""
-    WITH d AS (SELECT source, doc_id, CAST(n_tok AS BIGINT) AS n,
-                      CAST('0x' || substr(md5('42|' || doc_id), 1, 15) AS BIGINT) AS ord
-               FROM '{SEQFIX_PATH}' WHERE n_tok > 0),
-    p AS (SELECT *, CAST(coalesce(sum(n) OVER (PARTITION BY source ORDER BY ord
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-                 AS strt
-          FROM d),
-    s AS (SELECT source, doc_id, n, strt, CAST(w AS BIGINT) AS window_id
-          FROM p, unnest(generate_series(strt // {capacity},
-                                         (strt + n - 1) // {capacity})) AS t(w))
-    SELECT source, doc_id, window_id,
-           CAST(GREATEST(0, window_id * {capacity} - strt) AS BIGINT) AS off_start,
-           CAST(LEAST(n, (window_id + 1) * {capacity} - strt) AS BIGINT) AS off_end,
-           CAST(LEAST(n, (window_id + 1) * {capacity} - strt)
-                - GREATEST(0, window_id * {capacity} - strt) AS BIGINT) AS n_in_window,
-           CAST(GREATEST(0, strt - window_id * {capacity}) AS BIGINT) AS pos_in_window
-    FROM s
-    """
-
-
-@_q("pack_windows_seqfix", _pack_windows_sql())
-def pack_windows_seqfix(spark, sf_dir):
-    """GPT-style training-window packing of the tokenized corpus
-    (operators/prefix.pack_training_windows): per source, documents
-    concatenate in portable md5 hash order and split every 2048 tokens —
-    one row per (document, window) overlap with exact in-document offsets,
-    so boundary-straddling documents are split, not truncated. Pure
-    integer prefix-sum algebra (per-(key, coarse-bucket) composition, no
-    bare-key raw-row window), bitwise cross-engine."""
-    from mtsad_spark.fixture_cache import ensure_seqfix
-    from mtsad_spark.operators.prefix import pack_training_windows
-
-    seq = _seqfix_df(spark).select(
-        "source",
-        "doc_id",
-        F.col("n_tok").cast("long").alias("n"),
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("42|"), F.col("doc_id"))), 1, 15),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("ord"),
-    )
-    out = pack_training_windows(
-        seq, ["source"], "ord", "n", 2048, coarse_width=float(2**50)
-    )
-    return out.select(
-        "source", "doc_id", "window_id",
-        "off_start", "off_end", "n_in_window", "pos_in_window",
-    )
-
-
-@_q(
     "seasonal_median_residual_1h",
     _HOURLY_LOAD_CTE
     + """
@@ -5016,7 +4156,7 @@ def rollup_multi_1h(spark, sf_dir):
 def share_of_day_1h(spark, sf_dir):
     """Each hour's share of its day's total load per type — percent-of-
     total normalization as a WINDOW SUM over the hourly aggregate frame
-    (one scan, no self-join — the hourly_top_user_1h lesson); exact cents,
+    (one scan, no self-join); exact cents,
     ONE division."""
     from pyspark.sql import Window
 
@@ -5298,27 +4438,18 @@ _PRIORITY = [
     "rollup_multi_1h",
     "cusum_alarm_onsets_1h",
     "seasonal_median_residual_1h",
-    "pack_windows_seqfix",
-    "hourly_top_user_1h",
-    "session_coverage_1d",
     "dup_group_size_hist_docs",
-    "funnel_timeout_conversion_1d",
     "share_of_day_1h",
     "gap_stats_1h",
     "cusum_scores_1h",
     "time_weighted_avg_1d",
     "lttb_downsample_1h",
-    "mixture_sample_seqfix",
     "rolling_corr_24h",
     "fano_burstiness_1d",
     "sliding_distinct_3d_hll",
-    "session_concurrency_1m",
-    "cohort_retention_1d",
-    "funnel_view_click_purchase_1d",
     "sliding_histogram_p95_6h",
     "histogram_tv_drift_1h",
     "seasonal_strength_1h",
-    "session_type_lift",
     "anomaly_episodes_1h",
     "acf_hourly_loads",
     "spearman_pairs_1h",
@@ -5332,26 +4463,21 @@ _PRIORITY = [
     # driver-checked
     "continuous_aggregate_refresh",
     "stitched_range_agg",
-    "hash_sample_events",
-    "token_heavy_hitters_seqfix",
-    "zorder_key_events",
     "stored_range_query",
     "minhash_md5_near_dups_docs",
     "seasonal_residual_1h",
     "counter_rate_1h",
     # (a) the four r4 hash-fails, now CAST to BIGINT oracle-side (VERDICT r04
-    # #1) — flipping these green closes A9/A15/J4/A16/S10 + the packing op
+    # #1) — flipping these green closes A9/A15/J4/A16/S10
     "prf_rounded3",
     "bitmap_distance_halves",
     "pipeline_lineage_counts",
-    "token_packing_bins",
     # (b) new/changed oracles this round: stacking meta-feature stage now
     # fully oracled; the rolling hash ITSELF oracled (Rabin–Karp BIGINT
-    # Horner); kernel bitmap scores joined to the grid twin; returning-users
-    # left-join semantics; exact dedup without the respread tax
+    # Horner); kernel bitmap scores joined to the grid twin; exact dedup
+    # without the respread tax
     "ensemble_stacking_1h",
     "bitmap_scores_1h",
-    "returning_users_1d",
     "dedup_exact_docs",
     "drop_exact_dups_docs",
     # (b') operators touched by the scoped-persist change — re-attest
@@ -5375,7 +4501,6 @@ _PRIORITY = [
     "rollup_1d_composed",
     "rollup_1h_composed",
     "rollup_1m",
-    "sessionize_users",
     "stack_long_lineitem",
     "stratified_split_counts",
     "tag_encode",

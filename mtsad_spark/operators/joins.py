@@ -1,7 +1,7 @@
 """Time-series joins Spark lacks natively (SURVEY.md §2.3 addenda).
 
 The reference aligns positionally (pandas index), which the engine replaces
-with explicit keys (J1-J5). Two alignment shapes a production time-series
+with explicit keys (J1-J5). The alignment shape a production time-series
 store additionally needs:
 
 * ``asof_join`` — attach to each left row the LATEST right row with
@@ -17,12 +17,6 @@ store additionally needs:
   Semantics match pandas ``merge_asof`` (backward, exact ties allowed) and
   DuckDB ``ASOF JOIN`` (the driver oracle): the latest right ROW wins —
   null right values are carried as nulls, not skipped.
-
-* ``interval_join_binned`` — point-in-interval equi-ish join: intervals
-  explode into fixed-width time bins, points compute their bin, the join is
-  an equi-join on (keys, bin) followed by the exact BETWEEN filter. Work is
-  proportional to overlaps + interval span/bin_width, never |points|×
-  |intervals| — the standard binning defusal of a range join.
 """
 
 from __future__ import annotations
@@ -202,33 +196,3 @@ def asof_join(
         .select(*lcols, *vals)
     )
     return matched.unionByName(left_null)
-
-
-def interval_join_binned(
-    points: DataFrame,
-    intervals: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    start_col: str,
-    end_col: str,
-    bin_width_s: int = 3600,
-) -> DataFrame:
-    """Inner join of points to enclosing intervals (start ≤ ts ≤ end) per
-    key, binned so the equi-join carries the range predicate's selectivity."""
-    p = points.withColumn(
-        "_bin", F.floor(_epoch(points, ts_col) / bin_width_s).cast("long")
-    )
-    iv = intervals.withColumn(
-        "_bin",
-        F.explode(
-            F.sequence(
-                F.floor(_epoch(intervals, start_col) / bin_width_s).cast("long"),
-                F.floor(_epoch(intervals, end_col) / bin_width_s).cast("long"),
-            )
-        ),
-    )
-    return (
-        p.join(iv, [*keys, "_bin"])
-        .filter(F.col(ts_col).between(F.col(start_col), F.col(end_col)))
-        .drop("_bin")
-    )

@@ -263,62 +263,6 @@ def quantile_rollup_tiers(
     return {t: _final(s, t) for t, s in sk.items()}
 
 
-def distinct_overlap_1d(
-    df: DataFrame,
-    ts_col: str,
-    id_col: str,
-    keys: list[str],
-) -> DataFrame:
-    """Day-over-day distinct-set overlap (returning users / churn) via Theta
-    sketch partials — the SET-OPERATION tier op HLL cannot do: Theta sketches
-    support intersection/difference, not just union, and Spark's
-    implementation is deterministic and partition-invariant (probed — unlike
-    the randomized KLL).
-
-    Per (keys, day): sketch of ids; consecutive days join on an exact
-    date_add key; ``returning_est`` = |today ∩ yesterday| estimate,
-    ``union_est`` = |today ∪ yesterday| estimate (→ day-over-day Jaccard).
-    At 100 TB the sketches are the ONLY thing crossing days — no raw id sets
-    move; below the sketch's nominal entries the estimates are exact.
-
-    EVERY observed (keys, day) emits a row (LEFT join against the previous
-    day): a key's first day — or a day after a per-key gap — reports
-    ``returning_est = 0`` and ``union_est = n_today_est`` rather than being
-    dropped (ADVICE r04: the old inner join silently lost those days, which
-    only looked right on gap-free fixtures).
-
-    Returns (keys..., bucket_ts, n_today_est, returning_est, union_est).
-    """
-    sk = df.groupBy(*keys, bucket_expr(ts_col, "1d").alias("bucket_ts")).agg(
-        F.theta_sketch_agg(F.col(id_col)).alias("_th")
-    )
-    prev = sk.select(
-        *keys,
-        F.date_add(F.col("bucket_ts"), 1).cast("timestamp").alias("bucket_ts"),
-        F.col("_th").alias("_th_prev"),
-    )
-    j = sk.join(prev, [*keys, "bucket_ts"], "left")
-    has_prev = F.col("_th_prev").isNotNull()
-    today_est = F.theta_sketch_estimate("_th").cast("long")
-    return j.select(
-        *keys,
-        "bucket_ts",
-        today_est.alias("n_today_est"),
-        F.when(
-            has_prev,
-            F.theta_sketch_estimate(F.theta_intersection("_th", "_th_prev")).cast("long"),
-        )
-        .otherwise(F.lit(0).cast("long"))
-        .alias("returning_est"),
-        F.when(
-            has_prev,
-            F.theta_sketch_estimate(F.theta_union("_th", "_th_prev")).cast("long"),
-        )
-        .otherwise(today_est)
-        .alias("union_est"),
-    )
-
-
 def merge_partials(a: DataFrame, b: DataFrame, keys: list[str], tier: str) -> DataFrame:
     """Merge two same-tier partial frames (continuous-aggregate refresh
     algebra): union + re-aggregate. Exact for LONG s1/s2 — associative, so
@@ -424,46 +368,6 @@ def stitched_range_aggregate(
         "vmin",
         "vmax",
     )
-
-
-def token_heavy_hitters(
-    df: DataFrame,
-    keys: list[str],
-    tokens_col: str,
-    k: int = 20,
-    min_support: float = 0.0,
-) -> DataFrame:
-    """Per-key heavy hitters over a token-array column: the ``k`` most
-    frequent tokens (ties broken by token id) with their exact counts and
-    support — the frequency member of the tier-sketch family (HLL distinct /
-    KLL quantiles / Theta overlap / this).
-
-    Spark-first: explode + hash-groupBy(keys, token) is map-side combined and
-    shuffles at most (tasks × vocab) rows — for LLM token streams the vocab
-    (~50k) bounds every per-key frame, so the ranking window runs over a
-    vocab-BOUNDED count frame, never raw rows (the ngram_bitmap discipline).
-    Exact by construction; a Misra-Gries sketch only becomes necessary for
-    unbounded key spaces (raw strings), where the same pipeline applies after
-    a fingerprint.
-
-    support = cnt/total is ONE division of exact longs — bitwise
-    cross-engine."""
-    tok = df.select(*keys, F.explode(F.col(tokens_col)).alias("token"))
-    cnt = tok.groupBy(*keys, "token").agg(F.count(F.lit(1)).alias("cnt"))
-    # total = sum of cnt over the ALREADY vocab-bounded count frame — never a
-    # second explode of the raw token stream (code-review r5: the tok frame
-    # would otherwise be scanned twice and joined)
-    wt = Window.partitionBy(*keys)
-    w = Window.partitionBy(*keys).orderBy(F.col("cnt").desc(), F.col("token"))
-    ranked = (
-        cnt.withColumn("_total", F.sum("cnt").over(wt))
-        .withColumn("rank", F.row_number().over(w))
-        .withColumn("support", F.col("cnt").cast("double") / F.col("_total"))
-    )
-    out = ranked.filter(F.col("rank") <= k)
-    if min_support > 0:
-        out = out.filter(F.col("support") >= min_support)
-    return out.select(*keys, "token", "cnt", "rank", "support")
 
 
 def _hist_bin_expr(val_col: str, lo: float, width: float, n_bins: int) -> F.Column:

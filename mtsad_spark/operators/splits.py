@@ -130,225 +130,3 @@ def label_encode(df: DataFrame, col: str, mapping: dict[str, int], out_col: str 
     for k, v in mapping.items():
         expr = F.when(F.col(col) == k, v) if expr is None else expr.when(F.col(col) == k, v)
     return df.withColumn(out_col, expr)
-
-
-def hash_ranked_sample(
-    df: DataFrame,
-    keys: list[str],
-    id_col: str,
-    k: int,
-    seed: int = 42,
-    n_buckets: int = 256,
-) -> DataFrame:
-    """Deterministic uniform per-key sample: the ``k`` rows with the smallest
-    60-bit ``md5(seed|id)`` per key — reproducible across engines, reruns and
-    partitionings (the portable-hash discipline of the md5 MinHash variants),
-    unlike ``rand()``/``TABLESAMPLE`` which resample every run.
-
-    Scale shape: NEVER a bare-key window over the raw rows. The hash space is
-    cut into ``n_buckets`` order-compatible slices (top bits of the hash);
-    rows are counted per (keys, bucket) — algebraic, map-side combined — and
-    the only keys-only window runs over that n_buckets-row COUNT frame.
-    Buckets whose cumulative predecessor count already reaches ``k`` are
-    PRUNED before the local rank window, so the per-(key, bucket) sort
-    touches ~k candidate rows per key, not the corpus (the
-    scoring._global_row_numbers composition plus top-k pruning).
-
-    Returns the sampled rows with ``sample_rank`` (0-based ascending hash
-    order, ties broken by id — exact, engine-independent).
-    """
-    if n_buckets & (n_buckets - 1):
-        raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
-    shift = 60 - n_buckets.bit_length() + 1
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws("|", F.lit(str(seed)), F.col(id_col).cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    b = df.withColumn("_h", h).withColumn(
-        "_hb", F.shiftrightunsigned(F.col("_h"), shift)
-    )
-    counts = b.groupBy(*keys, "_hb").agg(F.count(F.lit(1)).alias("_n"))
-    woff = (
-        Window.partitionBy(*keys).orderBy("_hb").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        counts.withColumn("_off", F.coalesce(F.sum("_n").over(woff), F.lit(0)))
-        .filter(F.col("_off") < k)  # top-k pruning: later buckets can't contribute
-        .drop("_n")
-    )
-    wloc = Window.partitionBy(*keys, "_hb").orderBy("_h", id_col)
-    return (
-        b.join(offsets, [*keys, "_hb"])  # inner join = the prune
-        .withColumn("sample_rank", F.col("_off") + F.row_number().over(wloc) - 1)
-        .filter(F.col("sample_rank") < k)
-        .drop("_h", "_hb", "_off")
-    )
-
-
-def mixture_quotas(
-    df: DataFrame,
-    source_col: str,
-    tok_col: str,
-    budget: int,
-    sqrt_weights: bool = True,
-) -> DataFrame:
-    """Per-source token quotas for training-mix resampling: apportion a total
-    token ``budget`` across sources by largest-remainder (Hamilton) rounding
-    over integer weights — ``w_s = isqrt(Σtok_s)`` when ``sqrt_weights``
-    (α=0.5 temperature flattening, the standard upweight-the-tails mixing
-    move), else ``w_s = Σtok_s`` (proportional). EXACT integer arithmetic
-    throughout: the isqrt is floor(sqrt(double)) with a ±1 Newton correction
-    (double sqrt alone is off-by-one near perfect squares), and the
-    ``budget·w`` product runs in DECIMAL(38,0) so quotas are engine- and
-    scale-independent as long as each QUOTA fits int64 (contract:
-    ``Σtok < 2^62``, ``budget < 2^63``).
-
-    A source's quota is capped at its own total (``LEAST(·, tot)``); the
-    shortfall is emitted in-band as ``unmet`` (no silent redistribution —
-    callers deciding to re-apportion do so explicitly).
-
-    Scale shape: everything after the map-side-combined per-source token sum
-    operates on the #sources-row frame; the only unpartitioned windows
-    (largest-remainder rank, leftover sum) run over that frame, bounded by
-    source cardinality, never raw rows.
-
-    Returns ``(source, tot_tok, weight, quota, unmet)``.
-    """
-    if budget < 0:
-        raise ValueError(f"budget must be >= 0, got {budget}")
-    tot = df.groupBy(F.col(source_col).alias("source")).agg(
-        F.sum(F.col(tok_col).cast("long")).alias("tot_tok")
-    )
-    if sqrt_weights:
-        s0 = F.floor(F.sqrt(F.col("tot_tok").cast("double"))).cast("long")
-        w = (
-            s0
-            - F.when(s0 * s0 > F.col("tot_tok"), F.lit(1)).otherwise(F.lit(0))
-            + F.when((s0 + 1) * (s0 + 1) <= F.col("tot_tok"), F.lit(1)).otherwise(
-                F.lit(0)
-            )
-        )
-    else:
-        w = F.col("tot_tok")
-    wf = tot.withColumn("weight", w.cast("long"))
-    tw = wf.crossJoin(
-        wf.agg(
-            F.sum("weight").cast("long").alias("_W"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-    ).withColumn("_B", F.lit(int(budget)).cast("long"))
-    # all-zero-weight corpus (every source's tot_tok = 0): Hamilton over the
-    # true weights is a division by _W = 0 that would NULL-propagate into
-    # silent empty samples (code-review r6). Fall back to EQUAL weights so
-    # quotas come out 0 (capped at tot_tok = 0) and the entire budget
-    # surfaces in-band as `unmet` — deterministic, Σunmet = budget.
-    tw = tw.withColumn(
-        "_w_eff", F.when(F.col("_W") == 0, F.lit(1)).otherwise(F.col("weight"))
-    ).withColumn(
-        "_W", F.when(F.col("_W") == 0, F.col("_n")).otherwise(F.col("_W"))
-    )
-    ap = tw.withColumn(
-        "base", F.expr("(CAST(_B AS DECIMAL(38,0)) * _w_eff) div _W")
-    ).withColumn(
-        "rem",
-        F.expr("CAST((CAST(_B AS DECIMAL(38,0)) * _w_eff) % _W AS BIGINT)"),
-    )
-    lo = ap.crossJoin(ap.agg(F.sum("base").cast("long").alias("_SB"))).withColumn(
-        "_rk",
-        F.row_number().over(Window.orderBy(F.desc("rem"), F.asc("source"))),
-    )
-    raw = F.col("base") + F.when(
-        F.col("_rk") <= F.col("_B") - F.col("_SB"), F.lit(1)
-    ).otherwise(F.lit(0))
-    return lo.select(
-        "source",
-        "tot_tok",
-        "weight",
-        F.least(raw, F.col("tot_tok")).cast("long").alias("quota"),
-        F.greatest(raw - F.col("tot_tok"), F.lit(0).cast("long")).alias("unmet"),
-    )
-
-
-def mixture_token_sample(
-    df: DataFrame,
-    source_col: str,
-    id_col: str,
-    tok_col: str,
-    budget: int,
-    seed: int = 42,
-    sqrt_weights: bool = True,
-    n_buckets: int = 256,
-) -> DataFrame:
-    """Token-budget mixture resampling — the data-mixing step of an LLM
-    training pipeline (public practice: temperature-based source reweighting
-    à la multilingual α-sampling): apportion ``budget`` tokens across
-    sources via :func:`mixture_quotas`, then, per source, keep documents in
-    deterministic ``md5(seed|id)`` hash order while the INCLUSIVE running
-    token count stays within the quota (greedy prefix; the document that
-    would cross the quota is excluded).
-
-    The per-source prefix sum is the :func:`hash_ranked_sample` composition
-    with a SUM instead of a COUNT (cf. ``operators/prefix.keyed_prefix_sum``):
-    hash-space buckets → per-(source, bucket) token sums (algebraic,
-    map-side combined) → prefix offsets over the n_buckets-row frame →
-    buckets whose offset already reaches the quota are PRUNED before the
-    only bucket-local sort. Requires ``tok_col > 0`` rows (zero-token docs
-    would ride along for free — filter them upstream).
-
-    Returns selected rows ``(source, id, n_tok, cum_tok, quota)`` —
-    reproducible across engines, reruns and partitionings.
-    """
-    if n_buckets & (n_buckets - 1):
-        raise ValueError(f"n_buckets must be a power of two, got {n_buckets}")
-    quotas = mixture_quotas(df, source_col, tok_col, budget, sqrt_weights).select(
-        "source", "quota"
-    )
-    shift = 60 - n_buckets.bit_length() + 1
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat_ws("|", F.lit(str(seed)), F.col(id_col).cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
-    b = (
-        df.select(
-            F.col(source_col).alias("source"),
-            F.col(id_col),
-            F.col(tok_col).cast("long").alias("n_tok"),
-        )
-        .withColumn("_h", h)
-        .withColumn("_hb", F.shiftrightunsigned(F.col("_h"), shift))
-    )
-    sums = b.groupBy("source", "_hb").agg(F.sum("n_tok").alias("_s"))
-    woff = (
-        Window.partitionBy("source")
-        .orderBy("_hb")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        sums.withColumn(
-            "_off", F.coalesce(F.sum("_s").over(woff), F.lit(0).cast("long"))
-        )
-        .join(quotas, "source")
-        .filter(F.col("_off") < F.col("quota"))  # quota-reached bucket prune
-        .drop("_s")
-    )
-    wloc = (
-        Window.partitionBy("source", "_hb")
-        .orderBy("_h", id_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        b.join(offsets, ["source", "_hb"])  # inner join = the prune
-        .withColumn("cum_tok", F.col("_off") + F.sum("n_tok").over(wloc))
-        .filter(F.col("cum_tok") <= F.col("quota"))
-        .drop("_h", "_hb", "_off")
-    )

@@ -41,6 +41,7 @@ from mtsad_spark.operators.rollup import (
     reaggregate,
     rollup_partials,
 )
+from mtsad_spark.sources.tables import fs_path
 
 
 class ContinuousAggregate:
@@ -74,23 +75,11 @@ class ContinuousAggregate:
         # pack bit-reinterpreted int64 vs float64
         return set(PARTIAL_COLS) if self.exact_int else {"cnt"}
 
-    def _fs(self, p: str):
-        """(Hadoop FileSystem, Path) for any storage scheme — same seam as
-        plans/pipeline._fs_path and sources/tables.drop_partitions_before.
-        VERDICT r05 "wrong" #1: the old os.path probe returned False for
-        file://, hdfs:// and s3a:// URIs, silently degrading refresh's merge
-        into REPLACE (all prior partials outside the batch's days dropped);
-        the Hadoop FS API resolves whatever filesystem the URI names."""
-        jvm = self.spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(p)
-        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, path
-
     def _days_at(self, path_str: str) -> set[str] | None:
         """ISO day strings with a stored ``_day=`` partition dir at
         ``path_str``, or None if the table does not exist. FS metadata only —
         never a data scan."""
-        fs, path = self._fs(path_str)
+        fs, path = fs_path(self.spark, path_str)
         if not fs.exists(path):
             return None
         days = {
@@ -248,10 +237,9 @@ class ContinuousAggregate:
         )
         # the packed write above is a completed action on a DIFFERENT path,
         # so deleting the source dirs needs no checkpoint barrier
-        fs, base = self._fs(self._path(tier))
-        jvm = self.spark._jvm
         for d in todo:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(base, f"_day={d}"), True)
+            fs, day_dir = fs_path(self.spark, os.path.join(self._path(tier), f"_day={d}"))
+            fs.delete(day_dir, True)
         return len(todo)
 
     def refresh(self, batch: DataFrame) -> dict[str, int]:

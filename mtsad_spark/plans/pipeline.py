@@ -37,7 +37,7 @@ from ..functions.gorilla import pack_rollup
 from ..operators.gapfill import gap_fill
 from ..operators.rollup import TIER_ORDER, finalize, reaggregate, rollup_partials
 from ..operators.scoring import ewma_residual_chunked, sliding_zscore
-from ..sources.tables import TableProvider
+from ..sources.tables import TableProvider, fs_path
 
 
 def flagship_outputs(
@@ -92,15 +92,6 @@ class RollupPipeline:
             "ewma_alpha": ewma_alpha,
         }
 
-    def _fs_path(self, p: str):
-        """(Hadoop FileSystem, Path) for any storage scheme (file://, hdfs://,
-        s3a://) — the manifest guard must work wherever TableProvider writes,
-        not just on the local filesystem."""
-        jvm = self.spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(p)
-        fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, path
-
     def _check_manifest(self, resume: bool) -> None:
         """Checkpoints are only valid for the config that produced them: a
         resume with different parameters must fail loudly, not silently serve
@@ -109,7 +100,7 @@ class RollupPipeline:
         no-op'd on hdfs://, serving stale checkpoints)."""
         import json
 
-        fs, path = self._fs_path(f"{self.tables.base_dir}/_manifest.json")
+        fs, path = fs_path(self.spark, f"{self.tables.base_dir}/_manifest.json")
         if fs.exists(path):
             stream = fs.open(path)
             try:

@@ -21,6 +21,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
+def fs_path(spark: SparkSession, p: str):
+    """(Hadoop FileSystem, Path) for ``p`` under any storage scheme (plain
+    local paths, file://, hdfs://, s3a://). Every filesystem probe, read,
+    write or delete outside the DataFrame reader/writer goes through here:
+    ``os.path`` sees only the local filesystem, so a probe of a
+    scheme-qualified path is always False."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(p)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
+
+
 def _iceberg_catalog(spark: SparkSession) -> str | None:
     """Name of a configured Iceberg catalog, or None (sandbox default)."""
     try:
@@ -47,7 +57,8 @@ class TableProvider:
     def exists(self, name: str) -> bool:
         if self.catalog:
             return self.spark.catalog.tableExists(f"{self.catalog}.{name}")
-        return os.path.exists(os.path.join(self.path(name), "_SUCCESS"))
+        fs, marker = fs_path(self.spark, os.path.join(self.path(name), "_SUCCESS"))
+        return fs.exists(marker)
 
     def write(
         self,
@@ -171,9 +182,7 @@ class TableProvider:
                 f"DELETE FROM {full} WHERE {partition_col} < '{cutoff}'"
             )
             return {"dropped": dropped, "kept": kept}
-        jvm = self.spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(self.path(name))
-        fs = root.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs, root = fs_path(self.spark, self.path(name))
         prefix = f"{partition_col}="
         dropped, kept = [], []
         found_layout = False
@@ -197,33 +206,3 @@ class TableProvider:
                 "(write(..., partition_by=[...]))"
             )
         return {"dropped": sorted(dropped), "kept": sorted(kept)}
-
-
-def zorder_key(col_a, col_b, bits: int = 21):
-    """Two-dimensional Z-order (Morton) clustering key: interleaves the low
-    ``bits`` of two non-negative integer columns into one 2·bits-bit long.
-    Writing a table sorted by this key (``TableProvider.write(cluster_by=
-    [...])`` on the derived column) gives every output file a NARROW min/max
-    range on BOTH dimensions — the multi-column file-skipping axis a linear
-    range-cluster can't provide (its second column spans the full range in
-    every file). This is the public Delta/Iceberg OPTIMIZE ZORDER idea as a
-    plain deterministic column expression: exact integer bit algebra, so the
-    key is reproducible in any engine (oracled in zorder_key_events).
-
-    Callers must pre-map values into [0, 2^bits) — e.g. ``F.pmod(hash, 2^21)``
-    for ids, or a scaled epoch for timestamps. 2·bits ≤ 62 keeps the key a
-    positive long."""
-    from pyspark.sql import functions as F
-
-    if 2 * bits > 62:
-        raise ValueError(f"2*bits must be <= 62, got {2 * bits}")
-    a = F.col(col_a).cast("long") if isinstance(col_a, str) else col_a.cast("long")
-    b = F.col(col_b).cast("long") if isinstance(col_b, str) else col_b.cast("long")
-    z = F.lit(0).cast("long")
-    for j in range(bits):
-        z = (
-            z
-            + F.shiftleft(F.shiftrightunsigned(a, j).bitwiseAND(F.lit(1)), 2 * j)
-            + F.shiftleft(F.shiftrightunsigned(b, j).bitwiseAND(F.lit(1)), 2 * j + 1)
-        )
-    return z

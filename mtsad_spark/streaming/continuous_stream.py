@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from mtsad_spark.plans.continuous import ContinuousAggregate
+from mtsad_spark.sources.tables import fs_path
 
 
 class StreamingContinuousAggregate:
@@ -50,9 +51,16 @@ class StreamingContinuousAggregate:
         self._applied_path = os.path.join(agg.base_dir, "_applied_batches.json")
 
     def _state(self) -> dict:
-        if os.path.exists(self._applied_path):
-            with open(self._applied_path) as f:
-                st = json.load(f)
+        spark = self.agg.spark
+        fs, path = fs_path(spark, self._applied_path)
+        if fs.exists(path):
+            stream = fs.open(path)
+            try:
+                st = json.loads(
+                    spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+                )
+            finally:
+                stream.close()
             if "ids" in st:  # pre-r6 ledger stored the full id list
                 st = {
                     "checkpoint": st["checkpoint"],
@@ -88,10 +96,23 @@ class StreamingContinuousAggregate:
 
     def _mark(self, batch_id: int) -> None:
         last = max(self._last(), batch_id)
-        tmp = self._applied_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"checkpoint": self.checkpoint, "last": last}, f)
-        os.replace(tmp, self._applied_path)  # atomic on POSIX
+        spark = self.agg.spark
+        fs, path = fs_path(spark, self._applied_path)
+        _, tmp = fs_path(spark, self._applied_path + ".tmp")
+        state = json.dumps({"checkpoint": self.checkpoint, "last": last})
+        out = fs.create(tmp, True)
+        try:
+            out.write(bytearray(state, "utf-8"))
+        finally:
+            out.close()
+        # atomic replace: FileContext's rename with OVERWRITE (a plain
+        # FileSystem.rename refuses an existing destination on HDFS)
+        jvm = spark._jvm
+        opts = spark.sparkContext._gateway.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
+        opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
+        jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+            path.toUri(), spark._jsc.hadoopConfiguration()
+        ).rename(tmp, path, opts)
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         if batch_id <= self._last():

@@ -164,36 +164,6 @@ def test_stitched_range_equals_direct(spark, events, t0, t1):
         assert (got[c].values == direct[c].values).all(), (t0, t1, c)
 
 
-def test_hash_ranked_sample_matches_naive_and_is_stable(spark, events):
-    """Exact per-key ranks vs a pandas recompute of the same md5 order, and
-    partitioning-invariance (the determinism the op exists for)."""
-    import hashlib
-
-    from mtsad_spark.operators.splits import hash_ranked_sample
-
-    ev = events.select("event_type", "event_id")
-    got = hash_ranked_sample(ev, ["event_type"], "event_id", k=7, seed=9).toPandas()
-    pdf = ev.toPandas()
-    pdf["h"] = [
-        int(hashlib.md5(f"9|{i}".encode()).hexdigest()[:15], 16)
-        for i in pdf["event_id"]
-    ]
-    want = (
-        pdf.sort_values(["h", "event_id"])
-        .groupby("event_type")
-        .head(7)
-        .sort_values(["event_type", "h"])
-    )
-    g = got.sort_values(["event_type", "sample_rank"])
-    assert list(g["event_id"]) == list(want["event_id"])
-    assert list(g["sample_rank"]) == sorted(range(7)) * want["event_type"].nunique()
-    got2 = (
-        hash_ranked_sample(ev.repartition(13), ["event_type"], "event_id", k=7, seed=9)
-        .toPandas().sort_values(["event_type", "sample_rank"])
-    )
-    assert list(got2["event_id"]) == list(g["event_id"])
-
-
 def test_range_query_on_stored_tables_prunes_partitions(spark, events, tmp_path):
     """The stored-table read path: stitched [t0, t1) against the CA tables
     must (a) equal the direct raw aggregation and (b) PRUNE day partitions —
@@ -235,101 +205,6 @@ def test_range_query_on_stored_tables_prunes_partitions(spark, events, tmp_path)
     assert len(pf_lines) == 3, f"expected 3 tier scans: {pf_lines}"
     for l in pf_lines:
         assert "_day" in l and ">=" in l and "<=" in l, f"unpruned scan: {l}"
-
-
-def test_zorder_key_interleaves_and_localizes(spark):
-    """(a) the key equals a python bit-interleave recompute; (b) chunking a
-    2-D grid by z-order gives every chunk a bbox covering ~1/chunks of the
-    AREA (both dims narrow), where a linear sort leaves dim-2 spanning the
-    full range in every chunk — the file-skipping property the key exists
-    for."""
-    import pandas as pd
-
-    from mtsad_spark.sources.tables import zorder_key
-
-    side = 64  # 64×64 grid
-    grid = spark.range(side * side).select(
-        (F.col("id") % side).alias("x"), (F.col("id") / side).cast("long").alias("y")
-    )
-    got = grid.select("x", "y", zorder_key("x", "y", bits=6).alias("z")).toPandas()
-
-    def interleave(x, y, bits=6):
-        z = 0
-        for j in range(bits):
-            z |= ((x >> j) & 1) << (2 * j)
-            z |= ((y >> j) & 1) << (2 * j + 1)
-        return z
-
-    want = [interleave(x, y) for x, y in zip(got["x"], got["y"])]
-    assert list(got["z"]) == want
-    assert got["z"].nunique() == side * side  # bijective on the grid
-
-    n_chunks = 16
-    df = got.sort_values("z").reset_index(drop=True)
-    df["chunk"] = df.index * n_chunks // len(df)
-    spans = df.groupby("chunk").agg(
-        xa=("x", "min"), xb=("x", "max"), ya=("y", "min"), yb=("y", "max")
-    )
-    areas = (spans["xb"] - spans["xa"] + 1) * (spans["yb"] - spans["ya"] + 1)
-    # perfect quad-tree chunks would be side²/16 each; allow 2× slop
-    assert areas.max() <= side * side / n_chunks * 2, areas.max()
-    # linear sort on x: every chunk's y-range spans the whole side
-    lin = got.sort_values(["x", "y"]).reset_index(drop=True)
-    lin["chunk"] = lin.index * n_chunks // len(lin)
-    lspans = lin.groupby("chunk").agg(ya=("y", "min"), yb=("y", "max"))
-    assert ((lspans["yb"] - lspans["ya"] + 1) == side).all()
-
-
-def test_streaming_heavy_hitters_misra_gries_guarantees(spark, tmp_path):
-    """MG streaming summary: after an availableNow drain over several
-    micro-batches, for each key (a) every token with true count > err is
-    present, (b) every estimate under-counts by at most err, and
-    (c) err ≤ n/(m+1) — the classic MG guarantee, maintained across batch
-    boundaries by the mergeable-summaries combine."""
-    import numpy as np
-    import pandas as pd
-
-    from mtsad_spark.streaming.heavy_hitters_stream import streaming_heavy_hitters
-
-    rng = np.random.RandomState(7)
-    # skewed stream: a few heavy tokens + a long uniform tail
-    heavy = rng.choice([1, 2, 3], size=3000, p=[0.5, 0.3, 0.2])
-    tail = rng.randint(100, 5000, size=3000)
-    toks = np.concatenate([heavy, tail])
-    rng.shuffle(toks)
-    rows = [
-        ("web", [int(t) for t in toks[i : i + 50]]) for i in range(0, len(toks), 50)
-    ]
-    df = spark.createDataFrame(rows, "source string, tokens array<long>")
-    src = str(tmp_path / "src")
-    df.repartition(4).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        streaming_heavy_hitters(stream, m=32)
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    out = spark.read.parquet(str(tmp_path / "out")).toPandas()
-    final = out[out["n_total"] == out["n_total"].max()]
-    assert final["n_total"].iloc[0] == len(toks)
-    err = final["err"].iloc[0]
-    assert err <= len(toks) // (32 + 1)
-    true = pd.Series(toks).value_counts()
-    est = dict(zip(final["token"], final["est_count"]))
-    for t, c in true.items():
-        if c > err:
-            assert t in est, f"token {t} (count {c} > err {err}) missing"
-        if t in est:
-            assert est[t] <= c and c - est[t] <= err, (t, c, est[t], err)
 
 
 def test_continuous_aggregate_full_lifecycle(spark, events, tmp_path):
@@ -457,6 +332,34 @@ def test_compact_to_gorilla_cold_tier(spark, events, tmp_path):
     assert (got["cnt"].values == want["cnt"].values).all()
     assert (got["sum_v"].values == want["s1"].values).all()
 
+    # the packed read path prunes too: with minute edges (the low one in a
+    # cold day) the agg_1m_packed scan carries both _day bounds as PARTITION
+    # filters, as the row-form scans do
+    lo_m, hi_m = lo + dtmod.timedelta(minutes=13), hi + dtmod.timedelta(minutes=47)
+    plan_df = ca.range_query(lo_m, hi_m)
+    got_m = plan_df.toPandas().sort_values("event_type")
+    want_m = (
+        ev.filter((F.col("ts") >= F.lit(lo_m)) & (F.col("ts") < F.lit(hi_m)))
+        .groupBy("event_type")
+        .agg(F.count("*").alias("cnt"))
+        .toPandas()
+        .sort_values("event_type")
+    )
+    assert (got_m["cnt"].values == want_m["cnt"].values).all()
+    plan = plan_df._sc._jvm.PythonSQLUtils.explainString(
+        plan_df._jdf.queryExecution(), "formatted"
+    )
+    packed_pf = [
+        l
+        for node in plan.split("\n\n")
+        if "agg_1m_packed" in node
+        for l in node.splitlines()
+        if "PartitionFilters" in l
+    ]
+    assert packed_pf, f"no agg_1m_packed scan in the plan:\n{plan}"
+    for l in packed_pf:
+        assert "_day" in l and ">=" in l and "<=" in l, f"unpruned packed scan: {l}"
+
     # idempotent: nothing left to compact below the cutoff
     assert ca.compact("1m", dtmod.date.fromisoformat(cut)) == 0
 
@@ -485,91 +388,3 @@ def test_compact_to_gorilla_cold_tier(spark, events, tmp_path):
     got3 = snap("1m")
     for c in ("cnt", "s1", "s2", "vmin", "vmax"):
         assert (got3[c].values == exp[c].values).all(), c
-
-
-def test_mixture_token_sample_vs_python_oracle(spark):
-    """Quotas must match a python Hamilton apportionment over isqrt weights,
-    and the greedy hash-order selection must match an md5-sorted cumsum —
-    including the capped-quota (unmet) path and partitioning invariance."""
-    import hashlib
-    import math
-
-    import numpy as np
-
-    from mtsad_spark.operators.splits import mixture_quotas, mixture_token_sample
-
-    rng = np.random.default_rng(3)
-    rows = []
-    sizes = {"web": 60, "code": 20, "wiki": 5, "tiny": 2}
-    for src, nd in sizes.items():
-        for j in range(nd):
-            rows.append((src, f"{src}-{j:04d}", int(rng.integers(40, 400))))
-    df = spark.createDataFrame(rows, "source string, doc_id string, n_tok int")
-    toks = {s: sum(t for ss, _, t in rows if ss == s) for s in sizes}
-    total = sum(toks.values())
-
-    def py_quotas(budget, sqrt_w):
-        w = {s: (math.isqrt(t) if sqrt_w else t) for s, t in toks.items()}
-        W = sum(w.values())
-        base = {s: budget * w[s] // W for s in w}
-        rem = {s: budget * w[s] % W for s in w}
-        left = budget - sum(base.values())
-        order = sorted(w, key=lambda s: (-rem[s], s))
-        raw = {
-            s: base[s] + (1 if order.index(s) < left else 0) for s in w
-        }
-        return {s: (min(raw[s], toks[s]), max(raw[s] - toks[s], 0)) for s in w}
-
-    for budget, sqrt_w in [(total // 3, True), (total // 3, False), (total * 2, True)]:
-        want = py_quotas(budget, sqrt_w)
-        got = {
-            r["source"]: (r["quota"], r["unmet"])
-            for r in mixture_quotas(df, "source", "n_tok", budget, sqrt_w).collect()
-        }
-        assert got == want, (budget, sqrt_w)
-
-    # sqrt weights upweight 'tiny' far beyond its totals at a big budget
-    assert py_quotas(total * 2, True)["tiny"][1] > 0
-
-    budget = total // 3
-    want_q = py_quotas(budget, True)
-    sel = mixture_token_sample(df, "source", "doc_id", "n_tok", budget).toPandas()
-
-    def py_select(src):
-        docs = [(d, t) for ss, d, t in rows if ss == src]
-        docs.sort(key=lambda x: (int(hashlib.md5(f"42|{x[0]}".encode()).hexdigest()[:15], 16), x[0]))
-        out, cum = [], 0
-        for d, t in docs:
-            if cum + t <= want_q[src][0]:
-                cum += t
-                out.append((d, cum))
-        return out
-
-    for src in sizes:
-        sub = sel[sel.source == src].sort_values("cum_tok")
-        assert list(zip(sub.doc_id, sub.cum_tok)) == py_select(src), src
-        assert (sub.quota == want_q[src][0]).all()
-
-    sel2 = mixture_token_sample(
-        df.repartition(13), "source", "doc_id", "n_tok", budget
-    ).toPandas()
-    assert sorted(sel2.doc_id) == sorted(sel.doc_id)
-
-
-def test_mixture_quotas_zero_total_weight_surfaces_unmet(spark):
-    """code-review r6: a corpus where every source has zero tokens made
-    _W = 0 NULL-propagate through the DECIMAL div/% into silent NULL quotas
-    (and an empty sample with no signal). The guard falls back to equal
-    weights: quotas 0 (capped at tot_tok = 0), Σunmet = budget, in-band."""
-    from mtsad_spark.operators.splits import mixture_quotas, mixture_token_sample
-
-    rows = [("a", "a-0", 0), ("a", "a-1", 0), ("b", "b-0", 0), ("c", "c-0", 0)]
-    df = spark.createDataFrame(rows, "source string, doc_id string, n_tok int")
-    for sqrt_w in (True, False):
-        got = mixture_quotas(df, "source", "n_tok", 100, sqrt_w).toPandas()
-        assert got.quota.notna().all() and got.unmet.notna().all()
-        assert (got.quota == 0).all()
-        assert got.unmet.sum() == 100, "the whole budget must surface in-band"
-    sel = mixture_token_sample(df, "source", "doc_id", "n_tok", 100).toPandas()
-    # zero-token docs fit any quota (cum 0 <= 0) — present, contributing 0
-    assert sel.cum_tok.notna().all() and (sel.cum_tok == 0).all()

@@ -1,5 +1,5 @@
-"""Dedup, brute-force cosine top-k and text-analysis operators on synthetic
-documents, with numpy / python-set oracles."""
+"""Dedup and text-quality operators on synthetic documents, with python-set
+oracles."""
 
 from __future__ import annotations
 
@@ -9,10 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mtsad_spark.functions.text import (
-    content_fingerprint,
-    rolling_hash_fingerprints,
     whitespace_token_count,
-    with_lang_id,
     with_quality_features,
 )
 from mtsad_spark.operators.dedup import (
@@ -26,8 +23,6 @@ from mtsad_spark.operators.dedup import (
     simhash_dup_pairs,
     word_shingles,
 )
-from mtsad_spark.operators.similarity import cosine_topk_bruteforce
-
 
 @pytest.fixture(scope="module")
 def docs(spark):
@@ -170,24 +165,6 @@ def test_simhash_near_dup(spark, docs):
     assert h01 == 0
 
 
-def test_cosine_topk_vs_numpy(spark):
-    rng = np.random.RandomState(5)
-    emb = rng.randn(100, 16).astype(np.float64)
-    pdf = pd.DataFrame({"vec_id": range(100), "embedding": [list(map(float, e)) for e in emb]})
-    df = spark.createDataFrame(pdf)
-    queries = df.filter("vec_id < 3")
-    got = cosine_topk_bruteforce(df, queries, k=5).toPandas()
-    norms = np.linalg.norm(emb, axis=1)
-    sims = emb @ emb.T / np.outer(norms, norms)
-    for q in range(3):
-        s = sims[q].copy()
-        s[q] = -np.inf
-        top = np.argsort(-s, kind="stable")[:5]
-        mine = got[got["query_id"] == q].sort_values("rank")
-        assert list(mine["neighbor_id"]) == list(top)
-        assert np.allclose(mine["cosine"].values, s[top], rtol=1e-9)
-
-
 def test_token_counts_and_quality(spark, docs):
     out = (
         docs.withColumn("n_ws", whitespace_token_count(F.col("text")))
@@ -200,26 +177,6 @@ def test_token_counts_and_quality(spark, docs):
     q = with_quality_features(docs, "text").toPandas().set_index("doc_id")
     assert bool(q.loc[0, "quality_ok"])
     assert not bool(q.loc[6, "quality_ok"])  # too short
-
-
-def test_lang_id(spark, docs):
-    out = with_lang_id(docs, "text").toPandas().set_index("doc_id")["lang_pred"]
-    assert out[0] == "en"
-    assert out[3] == "de"
-    assert out[4] == "fr"
-    assert out[5] == "es"
-
-
-def test_fingerprints(spark, docs):
-    fp = docs.withColumn("fp", content_fingerprint(F.col("text"))).toPandas().set_index("doc_id")["fp"]
-    assert fp[0] == fp[1]  # exact dups share fingerprint
-    assert fp[0] != fp[2]
-    rh = rolling_hash_fingerprints(docs, "doc_id", "text").toPandas()
-    assert {0, 1} <= set(rh["doc_id"])
-    # identical docs → identical fingerprint sets
-    s0 = set(rh[rh["doc_id"] == 0]["fp"])
-    s1 = set(rh[rh["doc_id"] == 1]["fp"])
-    assert s0 == s1 and len(s0) > 0
 
 
 def test_simhash_pigeonhole_scales_with_max_hamming(spark):
@@ -325,106 +282,3 @@ def test_hot_bucket_guard_simhash_pathological_corpus(spark):
         sigs.filter(F.col("doc_id") < 40), "doc_id", max_hamming=3, max_bucket=100
     )
     assert small.count() == 40 * 39 // 2
-
-
-def test_vocab_growth_vs_python(spark):
-    """vocab_growth must equal a pure-python first-occurrence scan: per
-    group, cumulative tokens and cumulative distinct types at each id
-    bucket, with sparse ids and a no-token doc handled."""
-    import numpy as np
-
-    from mtsad_spark.functions.text import vocab_growth
-
-    rng = np.random.default_rng(19)
-    rows = []
-    for g, n_docs, vocab in (("a", 37, 12), ("b", 9, 5)):
-        ids = sorted(rng.choice(200, size=n_docs, replace=False).tolist())
-        for i in ids:
-            toks = rng.integers(0, vocab, size=int(rng.integers(0, 9)))
-            rows.append((g, int(i), " ".join(f"w{t}" for t in toks)))
-    df = spark.createDataFrame(rows, "source string, doc_id long, text string")
-
-    exp = {}
-    for g in ("a", "b"):
-        seen, cum_tok, cum_typ = set(), 0, 0
-        per_bucket = {}
-        for gg, i, text in sorted(rows, key=lambda r: r[1]):
-            if gg != g:
-                continue
-            b = i - i % 10
-            toks = text.split()
-            nt = sum(1 for t in toks if t not in seen and not seen.add(t))
-            per_bucket.setdefault(b, [0, 0])
-            per_bucket[b][0] += len(toks)
-            per_bucket[b][1] += nt
-        for b in sorted(per_bucket):
-            n_tok, new_t = per_bucket[b]
-            if n_tok == 0:
-                continue  # token-less buckets are absent from the output
-            cum_tok += n_tok
-            cum_typ += new_t
-            exp[(g, b)] = (n_tok, new_t, cum_tok, cum_typ)
-
-    got = {
-        (r.source, r.bucket): (r.n_tokens, r.new_types, r.cum_tokens, r.cum_types)
-        for r in vocab_growth(df, "source", "doc_id", "text", 10).collect()
-    }
-    assert got == exp
-
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        vocab_growth(df, "source", "doc_id", "text", 0)
-
-
-def test_zipf_slope_vs_numpy(spark):
-    """Quantized-log least-squares slope must equal an independent numpy
-    replay (same micro-int L), and a Zipfy synthetic corpus must come out
-    clearly steeper than a uniform one. Margin to the micro-int rounding
-    boundary is asserted so the cross-engine round can't flip."""
-    import math
-
-    import numpy as np
-
-    from mtsad_spark.functions.text import zipf_slope
-
-    rng = np.random.default_rng(5)
-    words = [f"w{i}" for i in range(300)]
-    # zipfy: P(rank r) ~ 1/r ; uniform: equal
-    zp = 1.0 / np.arange(1, 301)
-    zp /= zp.sum()
-    rows = []
-    for _ in range(400):
-        zw = rng.choice(words, size=50, p=zp)
-        uw = rng.choice(words, size=50)
-        rows.append(("zipfy", " ".join(zw)))
-        rows.append(("uniform", " ".join(uw)))
-    df = spark.createDataFrame(rows, "source string, text string")
-    got = zipf_slope(df, "source", "text", top_k=200).toPandas().set_index("source")
-
-    def py_slope(texts, k):
-        from collections import Counter
-
-        c = Counter(t for s in texts for t in s.split() if t)
-        top = sorted(c.items(), key=lambda x: (-x[1], x[0]))[:k]
-        L = lambda v: round(math.log(v) * 1e6)
-        xs = [L(r + 1) for r in range(len(top))]
-        ys = [L(cnt) for _, cnt in top]
-        # margin: no 1e6*ln value may sit near a .5 rounding boundary
-        for v in {r + 1 for r in range(len(top))} | {cnt for _, cnt in top}:
-            frac = abs((math.log(v) * 1e6) % 1 - 0.5)
-            assert frac > 1e-4, f"rounding-boundary margin too small for {v}"
-        m = len(xs)
-        num = m * sum(x * y for x, y in zip(xs, ys)) - sum(xs) * sum(ys)
-        den = m * sum(x * x for x in xs) - sum(xs) ** 2
-        # match the engines' float association: DECIMAL→double casts on
-        # num and den SEPARATELY, then one double division (int/int in
-        # python is single-rounded and can differ by 1 ulp)
-        return m, float(num) / float(den)
-
-    for src in ("zipfy", "uniform"):
-        texts = [t for s, t in rows if s == src]
-        m, sl = py_slope(texts, 200)
-        assert got.loc[src, "n_terms"] == m
-        assert got.loc[src, "slope"] == sl, src
-    assert got.loc["zipfy", "slope"] < got.loc["uniform", "slope"] - 0.3

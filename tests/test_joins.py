@@ -1,4 +1,4 @@
-"""As-of and binned range joins vs pandas merge_asof / brute-force oracles."""
+"""As-of joins vs pandas merge_asof oracles."""
 
 from __future__ import annotations
 
@@ -6,7 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from mtsad_spark.operators.joins import asof_join, interval_join_binned
+from mtsad_spark.operators.joins import asof_join
 
 
 def test_asof_join_matches_merge_asof(spark):
@@ -131,40 +131,6 @@ def test_asof_join_rejects_column_collisions(spark):
     rt2 = rt.withColumnRenamed("v", "_asof_rv")
     with pytest.raises(ValueError, match="reserved"):
         asof_join(lt, rt2, ["k"], "ts", "ts", ["_asof_rv"])
-
-
-def test_interval_join_binned_vs_bruteforce(spark):
-    rng = np.random.RandomState(20)
-    pts = pd.DataFrame(
-        {
-            "k": rng.choice(["a", "b", "c"], 500),
-            "ts": pd.Timestamp("2024-01-01") + pd.to_timedelta(rng.randint(0, 200_000, 500), unit="s"),
-            "pid": range(500),
-        }
-    )
-    starts = pd.Timestamp("2024-01-01") + pd.to_timedelta(rng.randint(0, 180_000, 40), unit="s")
-    iv = pd.DataFrame(
-        {
-            "k": rng.choice(["a", "b", "c"], 40),
-            "start": starts,
-            "end": starts + pd.to_timedelta(rng.randint(60, 30_000, 40), unit="s"),
-            "iid": range(40),
-        }
-    )
-    got = (
-        interval_join_binned(
-            spark.createDataFrame(pts), spark.createDataFrame(iv),
-            ["k"], "ts", "start", "end", bin_width_s=3600,
-        )
-        .select("pid", "iid")
-        .toPandas()
-    )
-    got_pairs = set(zip(got["pid"], got["iid"]))
-    want_pairs = set()
-    for _, p in pts.iterrows():
-        m = iv[(iv["k"] == p["k"]) & (iv["start"] <= p["ts"]) & (p["ts"] <= iv["end"])]
-        want_pairs |= {(p["pid"], i) for i in m["iid"]}
-    assert got_pairs == want_pairs and len(want_pairs) > 50
 
 
 def test_asof_join_tolerance_matches_merge_asof(spark):

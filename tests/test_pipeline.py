@@ -89,9 +89,10 @@ def test_resume_with_changed_params_refuses(spark, seq_df, tmp_path):
 
 
 def test_manifest_guard_works_on_scheme_qualified_paths(spark, tmp_path):
-    """ADVICE r01: the config-mismatch guard must run through the Hadoop FS
-    API — exercised here with an explicit file:// URI (the scheme-resolution
-    path a hdfs:///s3a:// deployment would take)."""
+    """ADVICE r01: the config-mismatch guard and the checkpoint probe must
+    run through the Hadoop FS API — exercised here with an explicit file://
+    URI (the scheme-resolution path a hdfs:///s3a:// deployment would take).
+    A same-config resume skips every stage; a changed config is refused."""
     import pytest
 
     from mtsad_spark.fixtures import sequences
@@ -100,6 +101,8 @@ def test_manifest_guard_works_on_scheme_qualified_paths(spark, tmp_path):
     seq = sequences(spark, n_rows=1_000, n_minutes=30, with_tokens=False)
     base = f"file://{tmp_path}/ckpt"
     RollupPipeline(spark, base, zscore_w=8).run(seq)
+    m2 = RollupPipeline(spark, base, zscore_w=8).run(seq)["metrics"].toPandas()
+    assert (m2["status"] == "skipped").all(), m2[["stage", "status"]]
     with pytest.raises(ValueError, match="different parameters"):
         RollupPipeline(spark, base, zscore_w=9).run(seq)
 

@@ -397,32 +397,6 @@ def test_scope_registry_values_do_not_pin_their_session(spark):
     assert len(_LIVE) == 0, "weak key failed to evict after session collection"
 
 
-def test_contamination_and_sampler_plans_are_scale_clean(spark):
-    """r5 additions under the same static-plan bans: the hash sampler must
-    never window raw rows by the bare key."""
-    from mtsad_spark.operators.splits import hash_ranked_sample
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    s = hash_ranked_sample(
-        ev.select("event_type", "event_id"), ["event_type"], "event_id", k=10
-    )
-    # the keys-only window must run over the (keys, _hb) COUNT frame, and the
-    # raw-row window must carry the hash bucket in its partition spec
-    tree = s._jdf.queryExecution().optimizedPlan().toString()
-    for i, line in enumerate(tree.splitlines()):
-        if "Window [" not in line:
-            continue
-        spec = line.split("], [")[1]
-        if "_hb#" in spec:
-            continue  # (keys, hash-bucket) local rank — parallel
-        lines = tree.splitlines()
-        child = next(
-            (b for b in lines[i + 1 :] if " Sort [" not in b and "Exchange " not in b),
-            "",
-        )
-        assert "Aggregate" in child, f"bare-key window over raw rows:\n{line}"
-
-
 def test_fit_joins_broadcast_via_aqe_without_hints(spark, events):
     """VERDICT r05 #4: fit-frame joins (sigma fit, seasonal profile,
     thresholds, scalers) carry NO broadcast hint — the frames are
@@ -450,48 +424,12 @@ def test_fit_joins_broadcast_via_aqe_without_hints(spark, events):
         spark.conf.set("spark.sql.adaptive.enabled", "false")
 
 
-def test_r6_ops_plans_are_scale_clean(spark, events):
-    """r6 additions under the same static-plan bans: the mixture sampler's
-    raw-row windows must carry the hash bucket (its only bare-key windows
-    run over the #sources/#buckets aggregate frames)."""
-    from mtsad_spark.operators.splits import mixture_token_sample
-
-    seq = spark.createDataFrame(
-        [("d%d" % i, "s%d" % (i % 3), list(range(i, i + 30))) for i in range(50)],
-        "doc_id string, source string, tokens array<int>",
-    )
-    m = mixture_token_sample(
-        seq.withColumn("n_tok", F.size("tokens")),
-        "source",
-        "doc_id",
-        "n_tok",
-        budget=300,
-    )
-    p = plan_of(m)
-    assert "CartesianProduct" not in p and "BatchEvalPython" not in p
-    tree = m._jdf.queryExecution().optimizedPlan().toString()
-    lines = tree.splitlines()
-    for i, line in enumerate(lines):
-        if "Window [" not in line:
-            continue
-        spec = line.split("], [")[1]
-        if "_hb#" in spec:
-            continue  # (source, hash-bucket) local running sum — parallel
-        child = next(
-            (b for b in lines[i + 1 :] if " Sort [" not in b and "Exchange " not in b),
-            "",
-        )
-        assert "Aggregate" in child or "Join" in child, (
-            f"bare-key window over raw rows:\n{line}"
-        )
-
-
 def test_r6_robust_and_corpus_ops_are_scale_clean(spark):
     """Round-6 additions under the standing static-plan bans: the robust
     scorers (rolling median / Hampel) must stay pure JVM window algebra
-    (no Python eval), interval coverage, packing and the multi-measure
-    rollup must be equi-join only (no cartesian / nested-loop), and none
-    may carry explicit broadcast hints on corpus-proportional frames."""
+    (no Python eval), the multi-measure rollup must be equi-join only (no
+    cartesian / nested-loop), and none may carry explicit broadcast hints on
+    corpus-proportional frames."""
     import datetime as dt
 
     from mtsad_spark.operators.stats import hampel_filter, rolling_median
@@ -501,21 +439,8 @@ def test_r6_robust_and_corpus_ops_are_scale_clean(spark):
         [("a", t0 + dt.timedelta(hours=i), 100 + i) for i in range(30)],
         "key string, ts timestamp, v long",
     )
-    from mtsad_spark.operators.prefix import (
-        interval_coverage,
-        pack_training_windows,
-    )
     from mtsad_spark.operators.rollup import rollup_partials_multi
 
-    iv = spark.createDataFrame(
-        [("u%d" % (i % 4), t0 + dt.timedelta(minutes=9 * i),
-          t0 + dt.timedelta(minutes=9 * i + 5)) for i in range(20)],
-        "key string, st timestamp, en timestamp",
-    )
-    packin = spark.createDataFrame(
-        [("s%d" % (i % 3), i * 1000, "d%d" % i, 10 + i) for i in range(20)],
-        "key string, ord long, doc_id string, n long",
-    )
     ev2 = spark.createDataFrame(
         [("a", t0 + dt.timedelta(minutes=i), 100 + i, 3 + i % 5)
          for i in range(60)],
@@ -524,8 +449,6 @@ def test_r6_robust_and_corpus_ops_are_scale_clean(spark):
     frames = [
         rolling_median(tier, ["key"], "ts", "v", 5),
         hampel_filter(tier, ["key"], "ts", "v", 5),
-        interval_coverage(iv, ["key"], "st", "en"),
-        pack_training_windows(packin, ["key"], "ord", "n", 64, coarse_width=4000),
         rollup_partials_multi(ev2, "ts", ["m1", "m2"], ["key"], "1m"),
     ]
     for i, f in enumerate(frames):

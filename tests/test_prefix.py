@@ -1,14 +1,13 @@
-"""Golden tests for the scale-clean keyed prefix sum (distributed scan) and
-contiguous sequence packing (operators/prefix.py) vs pandas cumsum."""
+"""Golden tests for the scale-clean keyed prefix sum (distributed scan,
+operators/prefix.py) vs pandas cumsum."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from mtsad_spark.operators.prefix import keyed_prefix_sum, pack_sequences
+from mtsad_spark.operators.prefix import keyed_prefix_sum
 
 
 @pytest.fixture(scope="module")
@@ -65,219 +64,3 @@ def test_keyed_prefix_sum_timestamp_order(spark):
     want = pdf.sort_values(["k", "ts"]).reset_index(drop=True)
     want["prefix_sum"] = want.groupby("k")["v"].cumsum()
     assert (got["prefix_sum"].values == want["prefix_sum"].values).all()
-
-
-def test_pack_sequences_contiguous_bins(frame):
-    """bin = floor(exclusive-prefix / capacity); per-bin fill never exceeds
-    capacity + (max straddling sequence − 1); offsets are dense per key."""
-    pdf, df = frame
-    cap = 2048
-    got = (
-        pack_sequences(df, ["k"], "t", "v", capacity=cap, coarse_width=256.0)
-        .toPandas().sort_values(["k", "t"]).reset_index(drop=True)
-    )
-    want = pdf.sort_values(["k", "t"]).reset_index(drop=True)
-    excl = want.groupby("k")["v"].cumsum() - want["v"]
-    assert (got["bin_offset"].values == excl.values).all()
-    assert (got["bin"].values == (excl // cap).values).all()
-    fill = got.groupby(["k", "bin"])["v"].sum()
-    assert (fill <= cap + got["v"].max() - 1).all()
-
-
-def test_concurrency_curve_vs_python(spark):
-    """The sparse difference-algebra curve must equal a brute-force per-
-    minute active-interval count at every emitted bucket, be piecewise-
-    constant between them, and be partitioning-invariant."""
-    import datetime as dt
-
-    import numpy as np
-
-    from mtsad_spark.operators.prefix import concurrency_curve
-
-    rng = np.random.default_rng(41)
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    for i in range(200):
-        s = int(rng.integers(0, 7200))
-        dur = int(rng.integers(0, 1800))
-        rows.append(
-            (f"u{i}", t0 + dt.timedelta(seconds=s), t0 + dt.timedelta(seconds=s + dur))
-        )
-    df = spark.createDataFrame(rows, "user string, s timestamp, e timestamp")
-    got = (
-        concurrency_curve(df, "s", "e", 60)
-        .toPandas()
-        .sort_values("bucket_ts")
-        .reset_index(drop=True)
-    )
-
-    def active(minute_start):
-        m0 = minute_start
-        return sum(
-            1
-            for _, s, e in rows
-            if (s - t0).total_seconds() // 60 * 60
-            <= (m0 - t0).total_seconds()
-            <= (e - t0).total_seconds() // 60 * 60
-        )
-
-    assert len(got) > 10
-    for r in got.itertuples(index=False):
-        assert r.concurrent == active(r.bucket_ts), r.bucket_ts
-    # piecewise-constant: between consecutive emitted buckets nothing changes
-    for a, b in zip(got.itertuples(index=False), got[1:].itertuples(index=False)):
-        probe = a.bucket_ts + dt.timedelta(seconds=60)
-        while probe < b.bucket_ts:
-            assert active(probe) == a.concurrent, probe
-            probe += dt.timedelta(seconds=600)
-    got2 = (
-        concurrency_curve(df.repartition(13), "s", "e", 60)
-        .toPandas()
-        .sort_values("bucket_ts")
-        .reset_index(drop=True)
-    )
-    assert (got2.concurrent.values == got.concurrent.values).all()
-
-
-def test_pack_training_windows_vs_python(spark):
-    """Window spans must equal a python replay of the concat-and-split
-    layout: per key, slices tile each window exactly (Σ n_in_window = C for
-    every full window), boundary docs split with correct offsets, and the
-    layout is partitioning-invariant."""
-    import numpy as np
-
-    from mtsad_spark.operators.prefix import pack_training_windows
-
-    rng = np.random.default_rng(47)
-    rows = []
-    for k in ("a", "b"):
-        for i in range(200):
-            rows.append((k, int(rng.integers(0, 2**40)), "%s-%04d" % (k, i),
-                         int(rng.integers(1, 90))))
-    rows.append(("a", 2**41, "a-zero", 0))  # zero-length: must vanish
-    df = spark.createDataFrame(rows, "key string, ord long, doc_id string, n long")
-    C = 128
-    got = (
-        pack_training_windows(df, ["key"], "ord", "n", C, coarse_width=2**34)
-        .toPandas()
-        .sort_values(["key", "window_id", "pos_in_window"])
-        .reset_index(drop=True)
-    )
-    assert "a-zero" not in set(got.doc_id)
-
-    def py_layout(k):
-        docs = sorted([r for r in rows if r[0] == k and r[3] > 0], key=lambda r: (r[1], r[2]))
-        out, start = [], 0
-        for _, _, d, n in docs:
-            for w in range(start // C, (start + n - 1) // C + 1):
-                o0 = max(0, w * C - start)
-                o1 = min(n, (w + 1) * C - start)
-                out.append((w, d, o0, o1, o1 - o0, max(0, start - w * C)))
-            start += n
-        return out
-
-    for k in ("a", "b"):
-        sub = got[got.key == k]
-        want = sorted(py_layout(k), key=lambda t: (t[0], t[5]))
-        assert (
-            list(zip(sub.window_id, sub.doc_id, sub.off_start, sub.off_end,
-                     sub.n_in_window, sub.pos_in_window))
-            == want
-        ), k
-        # full windows tile exactly to capacity
-        tot = sum(r[3] for r in rows if r[0] == k)
-        fill = sub.groupby("window_id").n_in_window.sum()
-        assert (fill.iloc[:-1] == C).all() and fill.sum() == tot
-
-    got2 = (
-        pack_training_windows(
-            df.repartition(13), ["key"], "ord", "n", C, coarse_width=2**34
-        )
-        .toPandas()
-        .sort_values(["key", "window_id", "pos_in_window"])
-        .reset_index(drop=True)
-    )
-    assert (got2[got.columns].values == got.values).all()
-    with pytest.raises(ValueError):
-        pack_training_windows(df, ["key"], "ord", "n", 0)
-
-
-def test_interval_coverage_vs_python_sweep(spark):
-    """Union-length per (key, day) must equal a python sweep-line over the
-    same intervals: overlaps never double-count, touching segments merge,
-    midnight-straddling intervals split across days, zero-length drop."""
-    import datetime as dt
-
-    from mtsad_spark.operators.prefix import interval_coverage
-
-    t0 = dt.datetime(2024, 1, 1)
-    iv = [
-        # key a, day 0: [0,600) and [300,900) overlap -> 900s one island
-        ("a", 0, 600), ("a", 300, 900),
-        # touching [1000,1100)+[1100,1200) merge -> 200s, same island
-        ("a", 1000, 1100), ("a", 1100, 1200),
-        # disjoint later -> second/third island
-        ("a", 5000, 5600),
-        # straddles midnight: 23:58 -> 00:03 next day
-        ("a", 86_280, 86_580),
-        ("a", 4000, 4000),  # zero-length: dropped
-        ("b", 100, 200),
-    ]
-    rows = [
-        (k, t0 + dt.timedelta(seconds=s), t0 + dt.timedelta(seconds=e))
-        for k, s, e in iv
-    ]
-    df = spark.createDataFrame(rows, "key string, st timestamp, en timestamp")
-    got = (
-        interval_coverage(df, ["key"], "st", "en")
-        .toPandas()
-        .sort_values(["key", "day_ts"])
-        .reset_index(drop=True)
-    )
-
-    def py_cov(segs):
-        segs = sorted(segs)
-        out, cur_s, cur_e = 0, None, None
-        islands = 0
-        for s, e in segs:
-            if cur_e is None or s > cur_e:
-                if cur_e is not None:
-                    out += cur_e - cur_s
-                cur_s, cur_e = s, e
-                islands += 1
-            else:
-                cur_e = max(cur_e, e)
-        if cur_e is not None:
-            out += cur_e - cur_s
-        return out, islands
-
-    a0 = got[(got.key == "a") & (got.day_ts == t0)]
-    want_cov, want_isl = py_cov(
-        [(0, 600), (300, 900), (1000, 1100), (1100, 1200), (5000, 5600),
-         (86_280, 86_400)]
-    )
-    assert a0.covered_s.iloc[0] == want_cov == 900 + 200 + 600 + 120
-    assert a0.n_islands.iloc[0] == want_isl == 4
-    assert a0.n_intervals.iloc[0] == 6
-    a1 = got[(got.key == "a") & (got.day_ts == t0 + dt.timedelta(days=1))]
-    assert a1.covered_s.iloc[0] == 180 and a1.n_islands.iloc[0] == 1
-    b = got[got.key == "b"]
-    assert b.covered_s.iloc[0] == 100 and b.utilization.iloc[0] == 100 / 86400.0
-    assert len(got) == 3  # zero-length interval contributed nothing
-
-    # pre-epoch straddle: day bucketing must FLOOR (negative epochs), not
-    # truncate toward zero (code-review r6)
-    pre = spark.createDataFrame(
-        [("p", dt.datetime(1969, 12, 31, 23, 59, 50),
-          dt.datetime(1970, 1, 1, 0, 0, 5))],
-        "key string, st timestamp, en timestamp",
-    )
-    gp = (
-        interval_coverage(pre, ["key"], "st", "en")
-        .toPandas()
-        .sort_values("day_ts")
-        .reset_index(drop=True)
-    )
-    assert len(gp) == 2
-    assert list(gp.covered_s) == [10, 5]
-    assert gp.day_ts.iloc[0] == dt.datetime(1969, 12, 31)

@@ -35,3 +35,12 @@ def test_bench_headline_names_are_registered():
 
 def test_every_query_has_an_oracle_except_the_rows_only_ones():
     assert set(oracle_sql()) == set(queries()) - ROWS_ONLY
+
+
+def test_every_priority_name_is_registered():
+    """``_PRIORITY`` only orders the registry: a name with no query behind it
+    would be dropped silently by the ``if k in _REG`` filter."""
+    from mtsad_spark.driver_queries import _PRIORITY
+
+    stale = [n for n in _PRIORITY if n not in queries()]
+    assert not stale, stale

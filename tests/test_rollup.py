@@ -186,41 +186,6 @@ def test_quantile_rollup_tiers_kll_rank_bounds(spark, seq_df):
             )
 
 
-def test_distinct_overlap_1d_exact_below_nominal_entries(spark):
-    """Theta-sketch day-over-day overlap: below the sketch's nominal entry
-    count the estimates are exact — compare against a pandas set
-    intersection/union per consecutive-day pair (events spans ~150 days)."""
-    import pandas as pd
-
-    from mtsad_spark.operators.rollup import distinct_overlap_1d
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    got = (
-        distinct_overlap_1d(ev, "ts", "user_id", ["event_type"])
-        .toPandas().sort_values(["event_type", "bucket_ts"]).reset_index(drop=True)
-    )
-    pdf = ev.select("event_type", "ts", "user_id").toPandas()
-    pdf["day"] = pdf["ts"].dt.floor("d")
-    sets = pdf.groupby(["event_type", "day"])["user_id"].agg(set).to_dict()
-    assert len(got) > 50
-    # ADVICE r04: EVERY observed (key, day) must emit a row — including each
-    # key's first day (no previous-day set → returning 0, union = today)
-    assert len(got) == len(sets)
-    n_first = 0
-    for _, r in got.iterrows():
-        today = sets[(r["event_type"], r["bucket_ts"])]
-        prev = sets.get((r["event_type"], r["bucket_ts"] - pd.Timedelta(days=1)))
-        assert r["n_today_est"] == len(today)
-        if prev is None:
-            n_first += 1
-            assert r["returning_est"] == 0
-            assert r["union_est"] == len(today)
-        else:
-            assert r["returning_est"] == len(today & prev)
-            assert r["union_est"] == len(today | prev)
-    assert n_first >= 1  # at least each key's first observed day
-
-
 def test_histogram_tiers_golden_and_merge(spark):
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     """Fixed-bucket histogram tiers: 1m bins match a numpy recompute

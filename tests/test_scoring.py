@@ -232,13 +232,16 @@ def test_ewma_chunk_agreement_config_sweep(spark, rollup_1m, alpha, rps):
 def test_chunked_scorers_deterministic_across_parallelism(tmp_path):
     """VERDICT r01 #2 'Done' condition: the value-composed slicer's outputs
     are byte-identical at two parallelism levels (separate JVMs — getOrCreate
-    would otherwise reuse one session)."""
+    would otherwise reuse one session). The probe imports the engine of the
+    checkout this test file belongs to."""
     import subprocess
     import sys
+    from pathlib import Path
 
+    root = str(Path(__file__).resolve().parents[1])
     script = r"""
 import sys, hashlib
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[3])
 from mtsad_spark.session import get_spark
 from mtsad_spark.fixtures import sequences
 from mtsad_spark.operators.rollup import rollup_tiers
@@ -266,8 +269,8 @@ print("HASH", h.hexdigest())
     hashes = []
     for master, shuffle in (("local[2]", 2), ("local[4]", 8)):
         r = subprocess.run(
-            [sys.executable, str(p), master, str(shuffle)],
-            capture_output=True, text=True, cwd="/root/repo", timeout=420,
+            [sys.executable, str(p), master, str(shuffle), root],
+            capture_output=True, text=True, cwd=root, timeout=420,
         )
         assert r.returncode == 0, r.stderr[-2000:]
         line = [l for l in r.stdout.splitlines() if l.startswith("HASH")][0]

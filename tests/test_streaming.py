@@ -92,128 +92,13 @@ def test_stateful_streaming_ewma_matches_batch(spark, tmp_path):
     assert np.allclose(got["resid"].values, want["resid"].values, rtol=1e-12, atol=1e-12)
 
 
-def test_streaming_sessionize_matches_batch_and_classic_algebra(spark, tmp_path):
-    """session_window sessions from an availableNow drain == the same
-    expression in batch == the classic cumulative-sum-of-boundaries algebra
-    (with the matching >= boundary predicate) on crafted multi-session data."""
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from mtsad_spark.streaming.sessionize_stream import sessionize, streaming_sessionize
-
-    rows = []
-    base = pd.Timestamp("2024-01-01 00:00:00")
-    for u in range(6):
-        t = base + pd.Timedelta(minutes=7 * u)
-        for s in range(3):  # 3 sessions per user
-            for i in range(4 + (u + s) % 3):  # 4-6 events, minutes apart
-                rows.append((u, t))
-                t += pd.Timedelta(minutes=3 + ((u + i) % 5))
-            t += pd.Timedelta(minutes=45 + s)  # inactivity gap > 30m
-    pdf = pd.DataFrame(rows, columns=["user_id", "ts"])
-    df = spark.createDataFrame(pdf)
-
-    batch = sessionize(df).toPandas().sort_values(
-        ["user_id", "session_start"]).reset_index(drop=True)
-    assert (batch.groupby("user_id").size() == 3).all()
-
-    # classic algebra with the session_window-matching >= boundary
-    w = Window.partitionBy("user_id").orderBy("ts")
-    prev = F.lag("ts").over(w)
-    bound = F.when(
-        prev.isNull() | (F.col("ts") >= prev + F.expr("INTERVAL 30 MINUTES")), 1
-    ).otherwise(0)
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    classic = (
-        df.withColumn("_b", bound)
-        .withColumn("sid", F.sum("_b").over(cum))
-        .groupBy("user_id", "sid")
-        .agg(
-            F.min("ts").alias("first_ev"),
-            (F.max("ts") + F.expr("INTERVAL 30 MINUTES")).alias("end_ev"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .toPandas().sort_values(["user_id", "first_ev"]).reset_index(drop=True)
-    )
-    assert (batch["session_start"].values == classic["first_ev"].values).all()
-    assert (batch["session_end"].values == classic["end_ev"].values).all()
-    assert (batch["n_events"].values == classic["n_events"].values).all()
-
-    # streaming drain: append mode emits only watermark-closed sessions;
-    # every emitted session must equal its batch twin
-    src = str(tmp_path / "sess_src")
-    out = str(tmp_path / "sess_out")
-    ck = str(tmp_path / "sess_ck")
-    df.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    q = (
-        streaming_sessionize(stream, watermark="1 minute")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(out).toPandas().sort_values(
-        ["user_id", "session_start"]).reset_index(drop=True)
-    assert len(got) > 0
-    merged = batch.merge(
-        got, on=["user_id", "session_start"], suffixes=("_b", "_s")
-    )
-    assert len(merged) == len(got)  # every emitted session exists in batch
-    assert (merged["session_end_b"].values == merged["session_end_s"].values).all()
-    assert (merged["n_events_b"].values == merged["n_events_s"].values).all()
-
-
-def test_streaming_exact_dedup_first_arrival_wins(spark, tmp_path):
-    """dropDuplicatesWithinWatermark dedup: an availableNow drain over a
-    corpus with planted duplicates keeps exactly one row per content hash
-    (all dups inside the watermark window), matching batch drop_exact_dups
-    cardinality per hash."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from mtsad_spark.streaming.dedup_stream import streaming_drop_exact_dups
-
-    base = pd.Timestamp("2024-01-01 00:00:00")
-    rows = []
-    for i in range(300):
-        text = f"document body {i % 100}"  # 100 distinct texts, 3 copies each
-        rows.append((i, text, base + pd.Timedelta(seconds=13 * i)))
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text", "ingest_ts"])
-    src = str(tmp_path / "dd_src")
-    out = str(tmp_path / "dd_out")
-    ck = str(tmp_path / "dd_ck")
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema(
-        "doc_id LONG, text STRING, ingest_ts TIMESTAMP"
-    ).parquet(src)
-    q = (
-        streaming_drop_exact_dups(stream, "text", "ingest_ts", watermark="2 hours")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.read.parquet(out).toPandas()
-    assert len(got) == 100  # one survivor per distinct text
-    assert got["content_hash"].nunique() == 100
-    assert set(got["text"]) == set(pdf["text"])
-
-
 def test_streaming_continuous_aggregate_matches_batch(spark, tmp_path):
     """foreachBatch ingest maintaining the stored tier tables: an
     availableNow drain over multiple micro-batches must leave the tier
     tables bitwise-equal to one batch rollup of the same rows, and a
     replayed batch id must NOT double-merge (the transactional-sink
-    contract)."""
+    contract). Run on a plain and on a file:// base: the applied-batch
+    ledger must work on scheme-qualified paths too."""
     from pyspark.sql import functions as F
 
     from mtsad_spark.operators.rollup import reaggregate, rollup_partials
@@ -228,61 +113,39 @@ def test_streaming_continuous_aggregate_matches_batch(spark, tmp_path):
     src = str(tmp_path / "src")
     # several files → several availableNow micro-batches with maxFilesPerTrigger
     ev.repartition(4).write.parquet(src)
-    agg = ContinuousAggregate(
-        spark, str(tmp_path / "ca"), ["event_type"], "ts", "cents"
-    )
-    sink = StreamingContinuousAggregate(agg)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = sink.start(stream, checkpoint=str(tmp_path / "ck"))
-    q.awaitTermination(120)
-    assert len(sink._applied()) >= 2, "expected multiple micro-batches"
-
     full = {"1m": rollup_partials(ev, "ts", "cents", ["event_type"], "1m")}
     full["1h"] = reaggregate(full["1m"], ["event_type"], "1h")
     full["1d"] = reaggregate(full["1h"], ["event_type"], "1d")
-    for tier in ("1m", "1h", "1d"):
-        got = agg.read_partials(tier).toPandas().sort_values(
+    want = {
+        tier: full[tier].toPandas().sort_values(
             ["event_type", "bucket_ts"]).reset_index(drop=True)
-        want = full[tier].toPandas().sort_values(
-            ["event_type", "bucket_ts"]).reset_index(drop=True)
-        assert len(got) == len(want), tier
-        for c in ("cnt", "s1", "s2", "vmin", "vmax"):
-            assert (got[c].values == want[c].values).all(), (tier, c)
+        for tier in ("1m", "1h", "1d")
+    }
+    for name, base in (("plain", str(tmp_path / "ca")), ("uri", f"file://{tmp_path}/ca_uri")):
+        agg = ContinuousAggregate(spark, base, ["event_type"], "ts", "cents")
+        sink = StreamingContinuousAggregate(agg)
+        stream = (
+            spark.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = sink.start(stream, checkpoint=str(tmp_path / f"ck_{name}"))
+        q.awaitTermination(120)
+        assert q.exception() is None, (name, q.exception())
+        assert len(sink._applied()) >= 2, (name, "expected multiple micro-batches")
 
-    # replaying an applied batch id is a no-op
-    before = agg.read_partials("1m").agg(F.sum("cnt")).first()[0]
-    sink(ev, batch_id=sorted(sink._applied())[0])
-    after = agg.read_partials("1m").agg(F.sum("cnt")).first()[0]
-    assert before == after
+        for tier in ("1m", "1h", "1d"):
+            got = agg.read_partials(tier).toPandas().sort_values(
+                ["event_type", "bucket_ts"]).reset_index(drop=True)
+            assert len(got) == len(want[tier]), (name, tier)
+            for c in ("cnt", "s1", "s2", "vmin", "vmax"):
+                assert (got[c].values == want[tier][c].values).all(), (name, tier, c)
 
-
-def test_token_heavy_hitters_exact(spark):
-    """Per-key heavy hitters: exact counts/ranks vs a pandas recompute,
-    deterministic tie-break on token id."""
-    from mtsad_spark.operators.rollup import token_heavy_hitters
-
-    rows = [
-        ("a", [1, 1, 1, 2, 2, 3, 7, 7, 7, 7]),
-        ("a", [2, 2, 3, 3]),
-        ("b", [5, 5, 6]),
-    ]
-    df = spark.createDataFrame(rows, "source string, tokens array<int>")
-    out = (
-        token_heavy_hitters(df, ["source"], "tokens", k=3)
-        .toPandas().sort_values(["source", "rank"]).reset_index(drop=True)
-    )
-    # a: 7×4, 2×4 (tie → smaller token first... counts: 1:3, 2:4, 3:3, 7:4)
-    a = out[out["source"] == "a"]
-    assert list(a["token"]) == [2, 7, 1]  # cnt 4,4 (tie→2 first), then 1 vs 3 tie→1
-    assert list(a["cnt"]) == [4, 4, 3]
-    assert list(a["rank"]) == [1, 2, 3]
-    assert abs(a["support"].iloc[0] - 4 / 14) < 1e-12
-    b = out[out["source"] == "b"]
-    assert list(b["token"]) == [5, 6] and list(b["cnt"]) == [2, 1]
+        # replaying an applied batch id is a no-op
+        before = agg.read_partials("1m").agg(F.sum("cnt")).first()[0]
+        sink(ev, batch_id=sorted(sink._applied())[0])
+        after = agg.read_partials("1m").agg(F.sum("cnt")).first()[0]
+        assert before == after, name
 
 
 def test_streaming_continuous_aggregate_rejects_foreign_checkpoint(spark, tmp_path):
