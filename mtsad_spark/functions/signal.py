@@ -211,14 +211,17 @@ def epsilon_by_f1(
     # degenerate _step == 0 (all densities equal): the join form's predicate
     # d < _lo + i·0 = _lo is false everywhere, so every row is "never
     # predicted" — bin n_steps+1 (the ratio r is NaN there, so the estimate
-    # path must not run)
-    ib = F.when(
-        F.col("_step") > 0, up(up(down(down(i0))))
-    ).otherwise(F.lit(n_steps + 1).cast("long"))
+    # path must not run; the corrections below leave n_steps+1 unchanged)
     truth = F.col(truth_col) == 1
+    ib = F.when(F.col("_step") > 0, i0).otherwise(F.lit(n_steps + 1).cast("long"))
+    j = j.select(*keys, density_col, "_lo", "_step", truth.alias("_t"), ib.alias("_b"))
+    # one select per correction step: nested, each `when` copies its
+    # argument 3-4 times and the hash-aggregate key outgrows janino's 64 KB
+    # method limit, so whole-stage codegen fails to compile
+    for step in (down, down, up, up):
+        j = j.withColumn("_b", step(F.col("_b")))
     bins = (
-        j.select(*keys, ib.alias("_b"), truth.alias("_t"))
-        .groupBy(*keys, "_b")
+        j.groupBy(*keys, "_b")
         .agg(
             F.sum(F.col("_t").cast("long")).alias("_pos"),
             F.sum((~F.col("_t")).cast("long")).alias("_neg"),

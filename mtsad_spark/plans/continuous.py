@@ -18,17 +18,19 @@ driver_queries.continuous_aggregate_refresh.
   the affected-day list is a driver-side collect bounded by the batch's time
   span in days, never by rows) and rewrites ONLY those partitions
   (``spark.sql.sources.partitionOverwriteMode=dynamic``).
-* Each refresh aggregates the raw batch once (map-side combined); the 1h/1d
-  tiers merge from the batch's 1m partials, so batch rows are scanned once
-  regardless of tier count.
-* On an Iceberg catalog the same merge is a ``MERGE INTO`` on the partition
-  key with snapshot-atomic commits; the parquet backend's dynamic partition
-  overwrite is the sandbox stand-in (per-partition, not snapshot, atomic).
+* Each refresh aggregates the raw batch once: :func:`batch_merge` keeps the
+  batch's 1m partials cached while the 1h/1d tiers re-aggregate them and
+  the touched-day list is collected, once for all tiers. It is the one
+  batch side of the merge; this parquet store and the Iceberg sink
+  (streaming/continuous_stream.py) keep only their read, barrier and
+  commit. Iceberg commits each tier snapshot-atomically; the parquet
+  dynamic partition overwrite is per-partition atomic.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,10 +40,43 @@ from mtsad_spark.operators.rollup import (
     TIER_ORDER,
     finalize,
     merge_partials,
-    reaggregate,
-    rollup_partials,
+    rollup_tiers,
 )
 from mtsad_spark.sources.tables import fs_path
+
+
+@contextmanager
+def batch_merge(
+    batch: DataFrame,
+    keys: list[str],
+    ts_col: str,
+    val_col: str,
+    exact_int: bool = True,
+):
+    """The batch side of one incremental refresh, shared by every store.
+    Yields ``(days, merge)``: the ``datetime.date`` list the batch touches,
+    and ``merge(tier, stored)`` → the tier's batch partials merged with
+    ``stored`` (that tier's stored partials for ``days``, or None for a new
+    table), with a ``_day`` column. The 1m partials stay persisted until
+    the block exits, so the batch is evaluated once per refresh."""
+    partials = rollup_tiers(batch, ts_col, val_col, keys, exact_int=exact_int)[1]
+    base = partials["1m"].persist()
+    # try/finally (ADVICE r05): a failed merge/write must not leak the
+    # cached batch partials into the session
+    try:
+        # date_trunc to an hour or a day never changes the date: every
+        # tier touches the same days, so read them off the smallest tier
+        day_rows = partials["1d"].select(F.to_date("bucket_ts")).distinct().collect()
+        days = [r[0] for r in day_rows]
+
+        def merge(tier: str, stored: DataFrame | None) -> DataFrame:
+            new = partials[tier]
+            out = new if stored is None else merge_partials(stored, new, keys, tier)
+            return out.withColumn("_day", F.to_date("bucket_ts"))
+
+        yield days, merge
+    finally:
+        base.unpersist()
 
 
 class ContinuousAggregate:
@@ -106,18 +141,17 @@ class ContinuousAggregate:
         # r5 debugging scar this comment commemorates)
         return self._partition_days(tier) is not None
 
-    def _write(self, partials: DataFrame, tier: str) -> None:
-        out = partials.withColumn("_day", F.to_date("bucket_ts"))
-        # cluster by the partition column before the write (guide §6 output
+    def _overwrite_days(self, df: DataFrame, path: str) -> None:
+        # replaces only the _day partitions present in df. Cluster by the partition column before the write (guide §6 output
         # sizing): without it every shuffle partition emits a file into
         # every day dir it touches (~tasks × days tiny files per refresh);
         # with it each day lands in one task → one right-sized file per day
         (
-            out.repartition("_day")
+            df.repartition("_day")
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_day")
-            .parquet(self._path(tier))
+            .parquet(path)
         )
 
     def _day_filter(self, df: DataFrame, day_lo, day_hi, days) -> DataFrame:
@@ -227,13 +261,9 @@ class ContinuousAggregate:
         packed = pack_partials(
             rows, self.keys, PARTIAL_COLS, self._long_cols(), chunk="day"
         )
-        (
-            packed.withColumn("_day", F.to_date("chunk_start"))
-            .repartition("_day")  # one file per cold day (guide §6)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_day")
-            .parquet(self._packed_path(tier))
+        self._overwrite_days(
+            packed.withColumn("_day", F.to_date("chunk_start")),
+            self._packed_path(tier),
         )
         # the packed write above is a completed action on a DIFFERENT path,
         # so deleting the source dirs needs no checkpoint barrier
@@ -246,46 +276,25 @@ class ContinuousAggregate:
         """Merge one ingest batch into every tier table. Returns the number
         of affected day-partitions per tier (the lineage metric callers
         record next to row counts)."""
-        new = {
-            "1m": rollup_partials(
-                batch, self.ts_col, self.val_col, self.keys, "1m",
-                exact_int=self.exact_int,
-            )
-        }
-        new["1h"] = reaggregate(new["1m"], self.keys, "1h")
-        new["1d"] = reaggregate(new["1h"], self.keys, "1d")
-        affected: dict[str, int] = {}
-        for tier in TIER_ORDER:
-            n = new[tier].persist()
-            # try/finally (ADVICE r05): a failed merge/write must not leak
-            # the cached batch partials into the session
-            try:
-                # bounded driver-side list: one entry per day the BATCH touches
-                days = [
-                    r[0] for r in n.select(F.to_date("bucket_ts")).distinct().collect()
-                ]
-                affected[tier] = len(days)
+        with batch_merge(
+            batch, self.keys, self.ts_col, self.val_col, self.exact_int
+        ) as (days, merge):
+            for tier in TIER_ORDER:
                 if self._exists(tier):
                     # partition-pruned, and stitched across the hot/packed
                     # layouts: a late batch landing on a COMPACTED day
                     # merges against the unpacked cold copy (the merged
                     # day is rewritten as row-form, shadowing the stale
-                    # packed copy until the next compact)
+                    # packed copy until the next compact). localCheckpoint
+                    # materializes the merge BEFORE the overwrite: Spark
+                    # (rightly) refuses to overwrite a file-source path
+                    # still present in the writing plan's lineage.
                     stored = self._read_tier(tier, days=days)
-                    # localCheckpoint materializes the merge BEFORE the
-                    # overwrite: Spark (rightly) refuses to overwrite a
-                    # file-source path still present in the writing plan's
-                    # lineage. On Iceberg this whole read-merge-write is a
-                    # single snapshot-atomic MERGE INTO and needs no barrier.
-                    merged = merge_partials(stored, n, self.keys, tier).localCheckpoint(
-                        eager=True
-                    )
+                    merged = merge(tier, stored).localCheckpoint(eager=True)
                 else:
-                    merged = n
-                self._write(merged, tier)
-            finally:
-                n.unpersist()
-        return affected
+                    merged = merge(tier, None)
+                self._overwrite_days(merged, self._path(tier))
+        return {tier: len(days) for tier in TIER_ORDER}
 
     def read_partials(self, tier: str) -> DataFrame:
         return self._read_tier(tier)

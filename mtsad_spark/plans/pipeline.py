@@ -37,7 +37,7 @@ from ..functions.gorilla import pack_rollup
 from ..operators.gapfill import gap_fill
 from ..operators.rollup import TIER_ORDER, finalize, reaggregate, rollup_partials
 from ..operators.scoring import ewma_residual_chunked, sliding_zscore
-from ..sources.tables import TableProvider, fs_path
+from ..sources.tables import TableProvider, read_json, write_json
 
 
 def flagship_outputs(
@@ -98,30 +98,15 @@ class RollupPipeline:
         stale outputs. Routed through the Hadoop FS API so the guard holds on
         non-local backends too (round-1 version used os.path → silently
         no-op'd on hdfs://, serving stale checkpoints)."""
-        import json
-
-        fs, path = fs_path(self.spark, f"{self.tables.base_dir}/_manifest.json")
-        if fs.exists(path):
-            stream = fs.open(path)
-            try:
-                stored = json.loads(
-                    self.spark._jvm.org.apache.commons.io.IOUtils.toString(
-                        stream, "UTF-8"
-                    )
-                )
-            finally:
-                stream.close()
-            if resume and stored != self.config:
-                raise ValueError(
-                    f"checkpoint dir {self.tables.base_dir} was produced with "
-                    f"different parameters ({stored} != {self.config}); use a "
-                    "new output dir or resume=False"
-                )
-        out = fs.create(path, True)
-        try:
-            out.write(bytearray(json.dumps(self.config), "utf-8"))
-        finally:
-            out.close()
+        path = f"{self.tables.base_dir}/_manifest.json"
+        stored = read_json(self.spark, path)
+        if resume and stored is not None and stored != self.config:
+            raise ValueError(
+                f"checkpoint dir {self.tables.base_dir} was produced with "
+                f"different parameters ({stored} != {self.config}); use a "
+                "new output dir or resume=False"
+            )
+        write_json(self.spark, path, self.config)
 
     # ------------------------------------------------------------- plumbing
     def _stage(self, name: str, build, partition_by: list[str] | None = None, resume: bool = True) -> DataFrame:

@@ -16,6 +16,7 @@ Both backends keep the properties the engine relies on:
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +30,42 @@ def fs_path(spark: SparkSession, p: str):
     scheme-qualified path is always False."""
     path = spark._jvm.org.apache.hadoop.fs.Path(p)
     return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
+
+
+def read_json(spark: SparkSession, p: str):
+    """The JSON document stored at ``p`` (any scheme), or None if absent."""
+    fs, path = fs_path(spark, p)
+    if not fs.exists(path):
+        return None
+    stream = fs.open(path)
+    try:
+        return json.loads(
+            spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        )
+    finally:
+        stream.close()
+
+
+def write_json(spark: SparkSession, p: str, obj) -> None:
+    """Replace the JSON document at ``p`` atomically: write a temp file,
+    then rename it over ``p``, so a crash leaves the old or the new
+    document, never a torn one."""
+    fs, path = fs_path(spark, p)
+    _, tmp = fs_path(spark, p + ".tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(json.dumps(obj), "utf-8"))
+    finally:
+        out.close()
+    # FileContext's rename with OVERWRITE (a plain FileSystem.rename
+    # refuses an existing destination on HDFS)
+    jvm = spark._jvm
+    rename = jvm.org.apache.hadoop.fs.Options.Rename
+    opts = spark.sparkContext._gateway.new_array(rename, 1)
+    opts[0] = rename.OVERWRITE
+    jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        path.toUri(), spark._jsc.hadoopConfiguration()
+    ).rename(tmp, path, opts)
 
 
 def _iceberg_catalog(spark: SparkSession) -> str | None:

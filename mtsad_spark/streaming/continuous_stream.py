@@ -2,10 +2,14 @@
 (north_star: continuous aggregates over an ever-growing ingest stream).
 
 ``foreachBatch`` is the canonical Structured-Streaming pattern for sinks
-that need merge semantics Spark's append/update modes can't express: each
-micro-batch is handed to plans/continuous.ContinuousAggregate.refresh, which
-partial-merges it into the stored 1m/1h/1d tables (partition-pruned read +
-dynamic-partition overwrite).
+that need merge semantics Spark's append/update modes can't express. Both
+sinks below drain their stream in availableNow micro-batches and merge each
+one through the same batch side, plans/continuous.batch_merge: the batch is
+aggregated once, its touched days are collected once, and every tier merges
+from those partials. The parquet sink hands the batch to
+ContinuousAggregate.refresh (partition-pruned read + dynamic-partition
+overwrite); the Iceberg sink keeps only its replay guard and its
+per-tier snapshot commit.
 
 Delivery semantics — stated honestly (code-review r5): refresh is NOT
 idempotent per batch (a replayed batch would double-merge), so the sink
@@ -30,18 +34,34 @@ tests/test_streaming.py (stream ≡ batch ≡ incremental, both branches).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from mtsad_spark.plans.continuous import ContinuousAggregate
-from mtsad_spark.sources.tables import fs_path
+from mtsad_spark.operators.rollup import PARTIAL_COLS, TIER_ORDER
+from mtsad_spark.plans.continuous import ContinuousAggregate, batch_merge
+from mtsad_spark.sources.tables import read_json, write_json
 
 
-class StreamingContinuousAggregate:
+class _AvailableNowSink:
+    """``start`` for a foreachBatch sink whose replay guard is scoped to
+    the stream's checkpoint location."""
+
+    checkpoint: str
+
+    def start(self, stream: DataFrame, checkpoint: str) -> StreamingQuery:
+        self.checkpoint = checkpoint
+        return (
+            stream.writeStream.foreachBatch(self)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+
+
+class StreamingContinuousAggregate(_AvailableNowSink):
     """foreachBatch sink wrapping ContinuousAggregate.refresh (parquet
     backend: at-least-once with replay-skip; see module docstring)."""
 
@@ -51,23 +71,15 @@ class StreamingContinuousAggregate:
         self._applied_path = os.path.join(agg.base_dir, "_applied_batches.json")
 
     def _state(self) -> dict:
-        spark = self.agg.spark
-        fs, path = fs_path(spark, self._applied_path)
-        if fs.exists(path):
-            stream = fs.open(path)
-            try:
-                st = json.loads(
-                    spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-                )
-            finally:
-                stream.close()
-            if "ids" in st:  # pre-r6 ledger stored the full id list
-                st = {
-                    "checkpoint": st["checkpoint"],
-                    "last": max(st["ids"]) if st["ids"] else -1,
-                }
-            return st
-        return {"checkpoint": self.checkpoint, "last": -1}
+        st = read_json(self.agg.spark, self._applied_path)
+        if st is None:
+            return {"checkpoint": self.checkpoint, "last": -1}
+        if "ids" in st:  # pre-r6 ledger stored the full id list
+            st = {
+                "checkpoint": st["checkpoint"],
+                "last": max(st["ids"]) if st["ids"] else -1,
+            }
+        return st
 
     def _last(self) -> int:
         """Max applied batch id (-1 if none). foreachBatch ids are
@@ -90,46 +102,15 @@ class StreamingContinuousAggregate:
             )
         return st["last"]
 
-    def _applied(self) -> set[int]:
-        """Compat view of the applied-id set (tests / callers); O(last)."""
-        return set(range(self._last() + 1))
-
     def _mark(self, batch_id: int) -> None:
-        last = max(self._last(), batch_id)
-        spark = self.agg.spark
-        fs, path = fs_path(spark, self._applied_path)
-        _, tmp = fs_path(spark, self._applied_path + ".tmp")
-        state = json.dumps({"checkpoint": self.checkpoint, "last": last})
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(state, "utf-8"))
-        finally:
-            out.close()
-        # atomic replace: FileContext's rename with OVERWRITE (a plain
-        # FileSystem.rename refuses an existing destination on HDFS)
-        jvm = spark._jvm
-        opts = spark.sparkContext._gateway.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
-        opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-        jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            path.toUri(), spark._jsc.hadoopConfiguration()
-        ).rename(tmp, path, opts)
+        state = {"checkpoint": self.checkpoint, "last": max(self._last(), batch_id)}
+        write_json(self.agg.spark, self._applied_path, state)
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         if batch_id <= self._last():
             return  # replayed micro-batch: the merge already landed
         self.agg.refresh(batch)
         self._mark(batch_id)
-
-    def start(
-        self, stream: DataFrame, checkpoint: str, trigger_available_now: bool = True
-    ) -> StreamingQuery:
-        self.checkpoint = checkpoint
-        w = stream.writeStream.foreachBatch(self).option(
-            "checkpointLocation", checkpoint
-        )
-        if trigger_available_now:
-            w = w.trigger(availableNow=True)
-        return w.start()
 
 
 BATCH_ID_PROP = "mtsad.batch-id"
@@ -199,7 +180,7 @@ class IcebergTierIO:
         return int(rows[0].bid), rows[0].ckpt or ""
 
 
-class IcebergStreamingContinuousAggregate:
+class IcebergStreamingContinuousAggregate(_AvailableNowSink):
     """foreachBatch sink with EXACTLY-ONCE tier maintenance on an Iceberg
     catalog: per tier, the merged partials and the applied batch id are one
     snapshot-atomic ``overwritePartitions`` commit, and the replay guard
@@ -209,8 +190,9 @@ class IcebergStreamingContinuousAggregate:
     exactly once, with no separate marker write and no crash window
     (VERDICT r05 #8).
 
-    Same merge algebra as plans/continuous.ContinuousAggregate.refresh
-    (associative LONG partials; N streamed batches ≡ one rebuild, bitwise).
+    Merges through plans/continuous.batch_merge, the batch side
+    ContinuousAggregate.refresh uses (associative LONG partials; N streamed
+    batches ≡ one rebuild, bitwise).
     Iceberg's snapshot isolation makes the read-merge-overwrite safe
     without the parquet path's localCheckpoint barrier: the read plan pins
     the pre-commit snapshot.
@@ -233,22 +215,8 @@ class IcebergStreamingContinuousAggregate:
         self.checkpoint = checkpoint
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        from mtsad_spark.operators.rollup import (
-            PARTIAL_COLS,
-            TIER_ORDER,
-            merge_partials,
-            reaggregate,
-            rollup_partials,
-        )
-
-        new = {
-            "1m": rollup_partials(
-                batch, self.ts_col, self.val_col, self.keys, "1m",
-                exact_int=self.exact_int,
-            )
-        }
-        new["1h"] = reaggregate(new["1m"], self.keys, "1h")
-        new["1d"] = reaggregate(new["1h"], self.keys, "1d")
+        # replay guards first, so a fully replayed batch is never aggregated
+        pending = []
         for tier in TIER_ORDER:
             applied = self.io.last_applied(tier)
             if applied is not None:
@@ -266,35 +234,20 @@ class IcebergStreamingContinuousAggregate:
                     )
                 if batch_id <= last:
                     continue  # this tier's snapshot already carries the batch
-            n = new[tier].persist()
-            try:
-                days = [
-                    r[0]
-                    for r in n.select(F.to_date("bucket_ts")).distinct().collect()
-                ]
-                if self.io.exists(tier):
-                    stored = (
-                        self.io.read(tier)
-                        .filter(F.col("_day").isin(days))  # partition-pruned
-                        .select(*self.keys, "bucket_ts", *PARTIAL_COLS)
-                    )
-                    merged = merge_partials(stored, n, self.keys, tier)
-                else:
-                    merged = n
-                self.io.overwrite_partitions(
-                    merged.withColumn("_day", F.to_date("bucket_ts")),
-                    tier,
-                    batch_id,
-                    self.checkpoint,
+            pending.append(tier)
+        if not pending:
+            return
+        with batch_merge(
+            batch, self.keys, self.ts_col, self.val_col, self.exact_int
+        ) as (days, merge):
+            for tier in pending:
+                stored = (
+                    self.io.read(tier)
+                    .filter(F.col("_day").isin(days))  # partition-pruned
+                    .select(*self.keys, "bucket_ts", *PARTIAL_COLS)
+                    if self.io.exists(tier)
+                    else None
                 )
-            finally:
-                n.unpersist()
-
-    def start(self, stream: DataFrame, checkpoint: str) -> StreamingQuery:
-        self.checkpoint = checkpoint
-        return (
-            stream.writeStream.foreachBatch(self)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+                self.io.overwrite_partitions(
+                    merge(tier, stored), tier, batch_id, self.checkpoint
+                )

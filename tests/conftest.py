@@ -52,3 +52,23 @@ def seq_tok_df(spark):
     from mtsad_spark.fixtures import sequences
 
     return sequences(spark, n_rows=2_000, n_minutes=60, with_tokens=True).cache()
+
+
+@pytest.fixture
+def evaluation_counter(spark):
+    """``count(df, col)`` -> ``(counted, acc)``: ``counted`` is ``df`` with
+    ``col`` passed through a Python UDF that adds one to the accumulator
+    ``acc`` per row it evaluates, so ``acc.value / df.count()`` is how many
+    times a plan over ``counted`` evaluated its input."""
+    from pyspark.sql import functions as F
+
+    def count(df, col):
+        acc = spark.sparkContext.accumulator(0)
+
+        def tick(v):
+            acc.add(1)
+            return v
+
+        return df.withColumn(col, F.udf(tick, df.schema[col].dataType)(col)), acc
+
+    return count

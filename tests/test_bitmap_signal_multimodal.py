@@ -320,6 +320,27 @@ def test_epsilon_by_f1(spark):
     assert 0.05 <= row["epsilon"] <= 0.15
 
 
+def test_epsilon_by_f1_compiles_without_codegen_fallback(spark):
+    """The bin corrections must stay staged, one select each: nested,
+    their copies of the bin expression grow the generated hash-aggregate
+    method past janino's 64 KB limit, and whole-stage codegen fails to
+    compile. With the codegen fallback off that failure raises instead of
+    running the stage interpreted."""
+    rng = np.random.RandomState(4)
+    dens = np.r_[rng.rand(900) * 0.9 + 0.1, rng.rand(100) * 0.05]
+    truth = np.r_[np.full(900, -1), np.full(100, 1)]
+    df = spark.createDataFrame(
+        pd.DataFrame({"k": ["a", "b"] * 500, "density": dens, "tag": truth})
+    )
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        rows = epsilon_by_f1(df, "density", "tag", n_steps=200, keys=["k"]).collect()
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
+    assert len(rows) == 2 and all(r["f1"] > 0.9 for r in rows)
+
+
 def test_epsilon_by_f1_binned_matches_join_form(spark):
     """The r7 bin+prefix-sum sweep must reproduce the original
     join-every-row-to-every-step semantics EXACTLY — per-step confusion

@@ -18,7 +18,7 @@ def events(spark):
 def test_incremental_refresh_equals_full_rebuild(spark, events, tmp_path):
     """N incremental refreshes must be bitwise-equal to one from-scratch
     rollup (associative LONG partials), at every tier."""
-    from mtsad_spark.operators.rollup import reaggregate, rollup_partials
+    from mtsad_spark.operators.rollup import rollup_tiers
     from mtsad_spark.plans.continuous import ContinuousAggregate
 
     ev = events.withColumn("cents", F.round(F.col("value") * 100, 0).cast("long"))
@@ -32,9 +32,7 @@ def test_incremental_refresh_equals_full_rebuild(spark, events, tmp_path):
     ca.refresh(b3)
     assert a1["1m"] >= 1 and a1["1d"] >= 1  # affected-day lineage metric
 
-    full = {"1m": rollup_partials(ev, "ts", "cents", ["event_type"], "1m")}
-    full["1h"] = reaggregate(full["1m"], ["event_type"], "1h")
-    full["1d"] = reaggregate(full["1h"], ["event_type"], "1d")
+    full = rollup_tiers(ev, "ts", "cents", ["event_type"])[1]
     for tier in ("1m", "1h", "1d"):
         got = ca.read_partials(tier).toPandas().sort_values(
             ["event_type", "bucket_ts"]).reset_index(drop=True)
@@ -43,6 +41,23 @@ def test_incremental_refresh_equals_full_rebuild(spark, events, tmp_path):
         assert len(got) == len(want), tier
         for c in ("cnt", "s1", "s2", "vmin", "vmax"):
             assert (got[c].values == want[c].values).all(), (tier, c)
+
+
+def test_refresh_evaluates_batch_once(spark, events, tmp_path, evaluation_counter):
+    """A refresh aggregates its batch once: the batch's 1m partials stay
+    cached while every tier merges and the touched days are collected —
+    both in the refresh that creates the tier tables and in one that
+    merges into them."""
+    from mtsad_spark.plans.continuous import ContinuousAggregate
+
+    ev = events.withColumn("cents", F.round(F.col("value") * 100, 0).cast("long"))
+    ca = ContinuousAggregate(spark, str(tmp_path / "ca"), ["event_type"], "ts", "cents")
+    for part, kind in ((0, "create"), (1, "merge")):
+        batch = ev.filter(F.col("event_id") % 2 == part)
+        n = batch.count()
+        counted, acc = evaluation_counter(batch, "cents")
+        ca.refresh(counted)
+        assert acc.value == n, (kind, acc.value / n)
 
 
 def test_refresh_merges_on_uri_scheme_paths(spark, events, tmp_path):
@@ -133,16 +148,10 @@ def test_incremental_refresh_touches_only_affected_partitions(spark, events, tmp
     ],
 )
 def test_stitched_range_equals_direct(spark, events, t0, t1):
-    from mtsad_spark.operators.rollup import (
-        reaggregate,
-        rollup_partials,
-        stitched_range_aggregate,
-    )
+    from mtsad_spark.operators.rollup import rollup_tiers, stitched_range_aggregate
 
     ev = events.withColumn("cents", F.round(F.col("value") * 100, 0).cast("long"))
-    p1m = rollup_partials(ev, "ts", "cents", ["event_type"], "1m")
-    tiers = {"1m": p1m, "1h": reaggregate(p1m, ["event_type"], "1h")}
-    tiers["1d"] = reaggregate(tiers["1h"], ["event_type"], "1d")
+    tiers = rollup_tiers(ev, "ts", "cents", ["event_type"])[1]
     d0, d1 = dt.datetime.fromisoformat(t0), dt.datetime.fromisoformat(t1)
     got = (
         stitched_range_aggregate(tiers, ["event_type"], d0, d1)

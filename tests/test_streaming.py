@@ -101,7 +101,7 @@ def test_streaming_continuous_aggregate_matches_batch(spark, tmp_path):
     ledger must work on scheme-qualified paths too."""
     from pyspark.sql import functions as F
 
-    from mtsad_spark.operators.rollup import reaggregate, rollup_partials
+    from mtsad_spark.operators.rollup import rollup_tiers
     from mtsad_spark.plans.continuous import ContinuousAggregate
     from mtsad_spark.streaming.continuous_stream import StreamingContinuousAggregate
 
@@ -113,9 +113,7 @@ def test_streaming_continuous_aggregate_matches_batch(spark, tmp_path):
     src = str(tmp_path / "src")
     # several files → several availableNow micro-batches with maxFilesPerTrigger
     ev.repartition(4).write.parquet(src)
-    full = {"1m": rollup_partials(ev, "ts", "cents", ["event_type"], "1m")}
-    full["1h"] = reaggregate(full["1m"], ["event_type"], "1h")
-    full["1d"] = reaggregate(full["1h"], ["event_type"], "1d")
+    full = rollup_tiers(ev, "ts", "cents", ["event_type"])[1]
     want = {
         tier: full[tier].toPandas().sort_values(
             ["event_type", "bucket_ts"]).reset_index(drop=True)
@@ -132,7 +130,7 @@ def test_streaming_continuous_aggregate_matches_batch(spark, tmp_path):
         q = sink.start(stream, checkpoint=str(tmp_path / f"ck_{name}"))
         q.awaitTermination(120)
         assert q.exception() is None, (name, q.exception())
-        assert len(sink._applied()) >= 2, (name, "expected multiple micro-batches")
+        assert sink._last() >= 1, (name, "expected multiple micro-batches")
 
         for tier in ("1m", "1h", "1d"):
             got = agg.read_partials(tier).toPandas().sort_values(
@@ -143,7 +141,7 @@ def test_streaming_continuous_aggregate_matches_batch(spark, tmp_path):
 
         # replaying an applied batch id is a no-op
         before = agg.read_partials("1m").agg(F.sum("cnt")).first()[0]
-        sink(ev, batch_id=sorted(sink._applied())[0])
+        sink(ev, batch_id=sink._last())
         after = agg.read_partials("1m").agg(F.sum("cnt")).first()[0]
         assert before == after, name
 
@@ -254,17 +252,10 @@ def _iceberg_sink_fixture(spark, io):
     return ev, sink
 
 
-def _full_partials(ev):
-    from mtsad_spark.operators.rollup import reaggregate, rollup_partials
-
-    full = {"1m": rollup_partials(ev, "ts", "cents", ["event_type"], "1m")}
-    full["1h"] = reaggregate(full["1m"], ["event_type"], "1h")
-    full["1d"] = reaggregate(full["1h"], ["event_type"], "1d")
-    return full
-
-
 def _assert_matches_rebuild(io, ev):
-    full = _full_partials(ev)
+    from mtsad_spark.operators.rollup import rollup_tiers
+
+    full = rollup_tiers(ev, "ts", "cents", ["event_type"])[1]
     for tier in ("1m", "1h", "1d"):
         got = (
             io.read(tier)
@@ -304,6 +295,25 @@ def test_iceberg_exactly_once_stream_matches_rebuild(spark):
     sink(b2, batch_id=1)
     assert io.snaps == snaps_before
     _assert_matches_rebuild(io, ev)
+
+
+def test_iceberg_sink_evaluates_batch_once(spark, evaluation_counter):
+    """The Iceberg sink shares the refresh's batch side: a delivered batch
+    is evaluated once across its three tier commits, and a fully replayed
+    batch is not evaluated at all (the replay guard runs before the
+    aggregation)."""
+    from pyspark.sql import functions as F
+
+    io = _FakeIcebergIO(spark)
+    ev, sink = _iceberg_sink_fixture(spark, io)
+    for bid in (0, 1):  # creates the tier tables, then merges into them
+        batch = ev.filter(F.abs(F.hash("ts")) % 2 == bid)
+        n = batch.count()
+        counted, acc = evaluation_counter(batch, "cents")
+        sink(counted, batch_id=bid)
+        assert acc.value == n, (bid, acc.value / n)
+    sink(counted, batch_id=1)
+    assert acc.value == n, "a replayed batch must not be aggregated"
 
 
 def test_iceberg_exactly_once_survives_crash_between_tiers(spark):

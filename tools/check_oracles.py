@@ -114,9 +114,14 @@ def compare(a: pd.DataFrame, b: pd.DataFrame) -> str | None:
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     filt = sys.argv[2] if len(sys.argv) > 2 else ""
+    # codegen fallback off: a query whose generated code stops compiling
+    # fails here instead of logging a trace and running interpreted
     spark = get_spark(
         "oracle-check", master="local[4]", shuffle_partitions=4,
-        extra_confs={"spark.sql.adaptive.enabled": "false"},
+        extra_confs={
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.codegen.fallback": "false",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     con = duck_con(sf_dir)
